@@ -19,7 +19,10 @@ DRIVER-DISCOVERY PATH (everything Catalyst can't express — SURVEY §4.3):
     outputs (dict / fancy-ls), ``lazy_errors``. The driver enumerates and prunes
     partition *metadata* exactly like the reference (O(#partitions), with
     threaded listing), then hands the surviving file list to ONE distributed
-    ``spark.read`` — the data plane stays on executors.
+    ``spark.read`` per input format — the data plane stays on executors.
+    Partition columns are bound, in path order, by one broadcast left join
+    on ``input_file_name()`` against a small file -> binding map keyed by
+    Spark's own path strings; a binding replaces a same-named data column.
 
 No transactional guarantees, like the reference (`api.py:33-36`): files deleted
 between discovery and read raise (soften with

@@ -1122,11 +1122,12 @@ def paragraph_dedup(
     when it is small, skew-splits the probe join when it is not). The r13
     window formulation (ONE exchange, but every occurrence of a paragraph
     in ONE task — window functions have no partial aggregation) was A/B'd
-    against this plan on planted boilerplate skew
-    (PARA_SKEW_STRESS_r14.jsonl, 2M docs, local[32]): uniform data ties
+    against this plan on planted boilerplate skew (2M docs, local[32],
+    warm, exclusive host; window vs join-back wall): uniform data ties
     (4.8 vs 4.9 s — the extra pass costs ~1.5%), the window's single hot
     task is absolute-size-bound and survives to ~10^6 occurrences of one
-    sha2 key (4.9 vs 6.3 s), the ranking flips at 10^7 (21.8 vs 21.0 s)
+    sha2 key (3.7 vs 4.4 s at 2x10^4, 3.1 vs 4.3 s at 2x10^5, 4.9 vs
+    6.3 s at 10^6), the ranking flips at 10^7 (21.8 vs 21.0 s)
     and widens at 5x10^7 (129 vs 113 s — 96% of all paragraph rows on ONE
     key, a single task sorting ~6.5 GB). The operator's design target is
     killing crawl boilerplate that repeats 10^8-10^9x at 100 TB: there

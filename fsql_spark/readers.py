@@ -4,10 +4,10 @@ Mirrors the reference's pluggable ``DataReader`` polymorphism
 (``/root/reference/src/fsql/deser.py:98-162``) with a Spark-first default:
 
 - :class:`SparkReader` — THE scale path. One distributed ``spark.read`` over
-  all surviving files per schema-group; partition columns attached JVM-side
-  (literals per partition group, or a broadcast path-join for high partition
-  counts). This subsumes the reference's DaskReader (`deser_dask.py:18-56`):
-  Spark is already lazy, one task per file split.
+  all surviving files per input format; partition columns bound by one
+  broadcast left join on ``input_file_name()`` against a file -> binding map.
+  This subsumes the reference's DaskReader (`deser_dask.py:18-56`): Spark is
+  already lazy, one task per file split.
 - :class:`PandasReader` — fsql-parity driver-side reader (32-thread pool,
   pandas per file, partition cols appended as str, ``lazy_errors`` partial
   results, kwargs passthrough incl. ``columns=`` projection) — reference
@@ -34,6 +34,7 @@ from abc import ABC, abstractmethod
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,28 +44,7 @@ from .discovery import Partition
 from .formats import InputFormat
 from .fs import FileSystem
 
-def _hadoop_uri(url: str) -> str:
-    """Percent-encode a path URL the way Hadoop ``Path.toUri`` does (RFC 2396
-    path rules), to match what ``input_file_name()`` returns at scan time."""
-    from urllib.parse import quote
-
-    scheme = ""
-    if "://" in url:
-        scheme, _, url = url.partition("://")
-        scheme += "://"
-    # java.net.URI leaves RFC 2396 path characters and marks unescaped
-    return scheme + quote(url, safe="/@:&=+$,;!'()*~-._")
-
-
 _POOL_SIZE = 32  # reference `deser.py:153`
-#: above this many distinct partition bindings the SparkReader switches from
-#: per-group literal columns to a single scan + broadcast path-join. Each
-#: per-binding branch costs its own load (schema inference + footer reads)
-#: plus a union arm in the plan — measured ~60 ms/binding of pure driver
-#: overhead on a local tree — while the join path is one scan whatever the
-#: binding count. Literals only win while the plan is small enough for
-#: Catalyst constant folding to matter, so the crossover sits low.
-_LIT_GROUP_LIMIT = 8
 
 
 @dataclass
@@ -144,64 +124,65 @@ class SparkReader(DataReader):
         if not parts:
             return spark.createDataFrame([], self.schema or StructType([]))
         fmt = self.input_format if self.input_format is not InputFormat.AUTO else fmt
-        # group by (partition-column key-set, per-file format): files at
-        # different tree depths (the bare-AutoParser quirk, reference
-        # `column_parser.py:106-110`) get NaN-padded union semantics like
-        # pandas concat; mixed suffixes read with their own source each
-        by_keys: dict[tuple, list[Partition]] = {}
+        # mixed suffixes read with their own source each; files at different
+        # tree depths (the bare-AutoParser quirk, reference
+        # `column_parser.py:106-110`) share one scan and get NULL for the keys
+        # their path lacks, like pandas concat
+        by_format: dict[InputFormat, list[Partition]] = {}
         for p in parts:
-            by_keys.setdefault((tuple(sorted(p.columns)), _detect(p.url, fmt)), []).append(p)
+            by_format.setdefault(_detect(p.url, fmt), []).append(p)
 
-        frames = [
-            self._load_key_group(spark, group, fs, key[1]) for key, group in by_keys.items()
-        ]
+        frames = [self._load_format(spark, group, fs, f) for f, group in by_format.items()]
         out = frames[0]
         for frame in frames[1:]:
             out = out.unionByName(frame, allowMissingColumns=True)
         return out
 
-    def _load_key_group(
+    def _load_format(
         self, spark: SparkSession, group: list[Partition], fs: FileSystem, fmt: InputFormat
     ) -> DataFrame:
-        by_binding: dict[tuple[tuple[str, str], ...], list[str]] = {}
-        for p in group:
-            by_binding.setdefault(tuple(sorted(p.columns.items())), []).append(fs.spark_url(p.url))
+        """ONE scan over the group's files, then partition columns bound by a
+        broadcast left join on ``input_file_name()``.
 
+        The map is keyed by Spark's own path strings (``df.inputFiles()``,
+        the same form ``input_file_name()`` returns); each is unquoted only
+        to look up the file's bindings, so no encoding is re-implemented
+        here. Keys follow path order, the insertion order of
+        ``Partition.columns``, as on the fast path. A same-named data column
+        is dropped: the path binding wins.
+        """
+        import pyarrow as pa
+
+        by_url = {fs.spark_url(p.url): p.columns for p in group}
         reader = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **self.options})
         if self.schema is not None:
             reader = reader.schema(self.schema)
+        keys = list(dict.fromkeys(k for p in group for k in p.columns))
+        df = reader.load(list(by_url))
+        if not keys:
+            return df
 
-        if len(by_binding) <= _LIT_GROUP_LIMIT:
-            # few partitions: per-binding scan with literal columns; Catalyst
-            # folds the constants, plans stay small
-            frames = []
-            for binding, paths in by_binding.items():
-                df = reader.load(paths)
-                for key, value in binding:
-                    df = df.withColumn(key, F.lit(value))
-                frames.append(df)
-            out = frames[0]
-            for frame in frames[1:]:
-                out = out.unionByName(frame, allowMissingColumns=True)
-            return out
-
-        # many partitions: ONE scan over all files + broadcast join on the
-        # file path -> bindings mapping (mapping is metadata-sized).
-        # input_file_name() returns the Hadoop Path.toUri form — PERCENT-
-        # ENCODED — so the mapping side is encoded the same way; otherwise
-        # paths with spaces/special chars silently miss the join and get NULL
-        # partition columns.
-        all_paths = [path for paths in by_binding.values() for path in paths]
-        df = reader.load(all_paths).withColumn("__fsql_path", F.input_file_name())
-        keys = sorted({k for binding in by_binding for k, _ in binding})
-        rows = [
-            (_hadoop_uri(path), *[dict(binding).get(k) for k in keys])
-            for binding, paths in by_binding.items()
-            for path in paths
-        ]
-        mapping = spark.createDataFrame(rows, ["__fsql_path", *keys])
+        files = df.inputFiles()
+        try:
+            bindings = [by_url[unquote(f)] for f in files]
+        except KeyError as exc:
+            raise RuntimeError(
+                f"scanned file {exc.args[0]!r} matches no discovered partition; "
+                f"{type(fs).__name__}.spark_url must return the qualified URL Spark reports"
+            ) from exc
+        mapping = spark.createDataFrame(
+            pa.table(
+                {
+                    "__fsql_path": pa.array(files, pa.string()),
+                    **{k: pa.array([b.get(k) for b in bindings], pa.string()) for k in keys},
+                }
+            )
+        )
         return (
-            df.join(F.broadcast(mapping), "__fsql_path", "left").drop("__fsql_path")
+            df.drop(*keys)
+            .withColumn("__fsql_path", F.input_file_name())
+            .join(F.broadcast(mapping), "__fsql_path", "left")
+            .drop("__fsql_path")
         )
 
     def _validate(

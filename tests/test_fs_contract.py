@@ -230,29 +230,71 @@ def test_fast_path_restores_caller_conf(spark, tmp_path):
         spark.conf.set(key, old)
 
 
-def test_broadcast_path_join_handles_spaces(spark, tmp_path):
-    """>64 distinct bindings trigger the input_file_name() broadcast join;
-    partition values with spaces/specials must still bind (percent-encoding
-    fix) with no NULL partition columns."""
-    import pandas as pd
-
-    from fsql_spark.readers import _LIT_GROUP_LIMIT
-
-    root = tmp_path / "spacey"
-    n = _LIT_GROUP_LIMIT + 3
-    for i in range(n):
-        d = root / f"k=v {i} +q"  # space and plus in the value
-        d.mkdir(parents=True)
-        pd.DataFrame({"x": [i]}).to_csv(d / "f.csv", index=False)
-    # AtomicQuery forces the driver-discovery path; one scan + path join
+def _read_atomic(spark, root):
+    # AtomicQuery forces the driver-discovery path: one scan + path join
     from fsql_spark.queries import AtomicQuery
 
-    out = read_partitioned_table(
+    return read_partitioned_table(
         str(root), AtomicQuery(lambda k: True, columns={"k"}), spark=spark
     ).toPandas()
+
+
+@pytest.mark.parametrize("n", [3, 11])
+def test_broadcast_path_join_handles_spaces(spark, tmp_path, n):
+    """Partition values with a space, '+', '%', '#' and a non-ASCII letter
+    must bind, with no NULL partition columns, whatever the binding count."""
+    import pandas as pd
+
+    root = tmp_path / "spacey"
+    for i in range(n):
+        d = root / f"k=v {i} +q%#ü"
+        d.mkdir(parents=True)
+        pd.DataFrame({"x": [i]}).to_csv(d / "f.csv", index=False)
+    out = _read_atomic(spark, root)
     assert len(out) == n
     assert out["k"].notna().all()
-    assert set(out["k"]) == {f"v {i} +q" for i in range(n)}
+    assert set(out["k"]) == {f"v {i} +q%#ü" for i in range(n)}
+
+
+@pytest.mark.parametrize("n", [3, 11])
+def test_path_binding_overrides_same_named_data_column(spark, tmp_path, n):
+    """A data column named like a partition key is replaced by the path
+    binding (reference `deser.py:215-217`, ``frame[key] = value``)."""
+    import pandas as pd
+
+    root = tmp_path / "shadow"
+    for i in range(n):
+        d = root / f"k={i}"
+        d.mkdir(parents=True)
+        pd.DataFrame({"x": [i], "k": ["from-data"]}).to_parquet(d / "f.parquet")
+    out = _read_atomic(spark, root)
+    assert list(out.columns) == ["x", "k"]
+    assert sorted(zip(out["x"], out["k"])) == [(i, str(i)) for i in range(n)]
+
+
+def test_unmatched_scanned_file_raises_instead_of_null_binding(spark, tmp_path):
+    """Spark reports a bare local path as ``file:///...``; a FileSystem whose
+    spark_url hands Spark that bare path cannot be matched, and the read
+    says so rather than binding NULL partition columns."""
+    import os
+
+    import pandas as pd
+
+    class BarePathFileSystem(LocalFileSystem):
+        def spark_url(self, url: str) -> str:
+            return os.path.abspath(url)
+
+    root = tmp_path / "bare"
+    for i in range(3):
+        d = root / f"k={i}"
+        d.mkdir(parents=True)
+        pd.DataFrame({"x": [i]}).to_parquet(d / "f.parquet")
+    from fsql_spark.queries import AtomicQuery
+
+    with pytest.raises(RuntimeError, match="matches no discovered partition"):
+        read_partitioned_table(
+            str(root), AtomicQuery(lambda k: True, columns={"k"}), fs=BarePathFileSystem(), spark=spark
+        )
 
 
 def test_daterange_eval_available_lenient_on_invalid_dates():

@@ -84,6 +84,8 @@ def test_fast_and_slow_paths_agree(spark, tmp_path):
                 (r["payload"], r["k1"], r["k2"]) for r in slow.select("payload", "k1", "k2").collect()
             ) if "k1" in slow.columns else []
             assert got_fast == got_slow, f"case {case} query {qi}: {q} diverges"
+            if got_fast:  # empty-result schemas still differ between the paths
+                assert fast.dtypes == slow.dtypes, f"case {case} query {qi}: {q} schema diverges"
 
 
 def test_daterange_paths_agree(spark, tmp_path):
@@ -113,3 +115,5 @@ def test_daterange_paths_agree(spark, tmp_path):
         a = sorted(r["payload"] for r in fast.collect()) if "payload" in fast.columns else []
         b = sorted(r["payload"] for r in slow.collect()) if "payload" in slow.columns else []
         assert a == b, f"{start}..{end}: fast {a} != slow {b}"
+        if a:
+            assert fast.dtypes == slow.dtypes, f"{start}..{end}: schema diverges"
