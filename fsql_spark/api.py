@@ -5,19 +5,21 @@ Spark-native reimplementation of the reference's API surface
 a "table" is just a URL prefix; partition columns come from the path; queries
 filter on partition columns only; output defaults to a (distributed) DataFrame.
 
-Execution strategy — two paths, picked automatically:
+Execution strategy — two paths, picked from the call and the session:
 
-FAST PATH (the idiomatic-Spark one; Hive layouts + Catalyst-expressible query):
+FAST PATH (Hive layouts + Catalyst-expressible query + engine session defaults):
     ``spark.read.format(f).load(root).where(query.to_column())``
     Partition discovery, pruning, predicate/projection pushdown, parallel
     listing, vectorized scans: all Catalyst/Tungsten built-ins. Zero driver
-    crawling. This is what runs against 100 TB.
+    crawling. This is what runs against 100 TB. Partition columns bind as
+    strings because ``get_spark``/``configure`` turn type inference off.
 
-DRIVER-DISCOVERY PATH (everything Catalyst can't express — SURVEY §4.3):
-    black-box :class:`AtomicQuery` predicates, value-only ``FixedColumnsParser``
-    layouts with filename columns, parser ``generate()`` grammars, non-DataFrame
-    outputs (dict / fancy-ls), ``lazy_errors``. The driver enumerates and prunes
-    partition *metadata* exactly like the reference (O(#partitions), with
+DRIVER-DISCOVERY PATH (everything else — SURVEY §4.3): black-box
+    :class:`AtomicQuery` predicates, value-only ``FixedColumnsParser`` layouts
+    with filename columns, parser ``generate()`` grammars, non-DataFrame
+    outputs (dict / fancy-ls), ``lazy_errors``, partition type inference on
+    in the session, trees that are not one Hive layout. The driver enumerates
+    and prunes partition *metadata* exactly like the reference (O(#partitions),
     threaded listing), then hands the surviving file list to ONE distributed
     ``spark.read`` per input format — the data plane stays on executors.
     Partition columns are bound, in path order, by one broadcast left join
@@ -35,6 +37,7 @@ import io
 import warnings
 from typing import Any, Optional, Union
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,8 +46,13 @@ from .discovery import Partition, discover_partitions
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs
 from .queries import Query
-from .readers import DataReader, SparkReader, SPARK_READER
-from .session import get_spark, temp_conf
+from .readers import DataReader, SparkReader, SPARK_READER, project_columns
+from .session import get_spark
+
+_TYPE_INFERENCE = "spark.sql.sources.partitionColumnTypeInference.enabled"
+# load() conditions meaning "not one Hive layout" (e.g. the mixed-depth quirk,
+# reference `column_parser.py:106-110`): driver discovery reads such trees
+_NOT_ONE_LAYOUT = {"CONFLICTING_PARTITION_COLUMN_NAMES", "CONFLICTING_DIRECTORY_STRUCTURES"}
 
 
 def _active_spark(spark: Optional[SparkSession]) -> SparkSession:
@@ -104,7 +112,7 @@ def read_partitioned_table(
     if not path.endswith("/") and fs.isdir(path):
         path += "/"
 
-    if _fast_path_eligible(query, column_parser, reader):
+    if _fast_path_eligible(spark, query, column_parser, reader):
         result = _read_fast_path(spark, path, fs, query, reader)
         if result is not None:
             return result
@@ -114,13 +122,18 @@ def read_partitioned_table(
     return reader.read(spark, partitions, fs, InputFormat.AUTO)
 
 
-def _fast_path_eligible(query: Query, parser: ColumnParser, reader: DataReader) -> bool:
+def _fast_path_eligible(
+    spark: SparkSession, query: Query, parser: ColumnParser, reader: DataReader
+) -> bool:
+    """Each false clause names a reason for driver discovery; the last is
+    partition type inference on in the session (Spark would bind types)."""
     return (
         isinstance(parser, AutoParser)
         and parser.grammars is None  # bare AutoParser: Spark-native discovery
         and isinstance(reader, SparkReader)
         and not reader.lazy_errors
         and query.expressible
+        and spark.conf.get(_TYPE_INFERENCE).strip().lower() == "false"
     )
 
 
@@ -149,19 +162,11 @@ def _read_fast_path(
     if reader.schema is not None:
         load = load.schema(reader.schema)
     try:
-        # strings-only partition columns — the reference's contract. The conf
-        # is consumed eagerly (partition schema inference runs inside load()),
-        # so it can be restored immediately without touching the caller's
-        # unrelated spark.read behavior.
-        with temp_conf(
-            spark, **{"spark.sql.sources.partitionColumnTypeInference.enabled": "false"}
-        ):
-            df = load.load(fs.spark_url(path))
-    except Exception:
-        # e.g. conflicting directory depths (the bare-AutoParser mixed-depth
-        # quirk, reference `column_parser.py:106-110`) — driver discovery
-        # reproduces the reference's union-of-mixed-schemas behavior
-        return None
+        df = load.load(fs.spark_url(path))
+    except PySparkException as exc:
+        if exc.getCondition() in _NOT_ONE_LAYOUT:
+            return None
+        raise
 
     if reader.input_format is InputFormat.AUTO:
         # format was detected from ONE probe file; a tree mixing data formats
@@ -185,12 +190,7 @@ def _read_fast_path(
             return None
 
     available = frozenset(part_keys)
-    df = df.where(query.to_column(available))
-    if reader.columns:
-        keep = [c for c in reader.columns if c in df.columns]
-        keep += [c for c in df.columns if c in available and c not in keep]
-        df = df.select(*keep)
-    return df
+    return project_columns(df.where(query.to_column(available)), reader.columns, available)
 
 
 def read_s3_table(*args, **kwargs):

@@ -20,20 +20,23 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from .api import read_partitioned_table
+from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs
-from .session import temp_conf
+from .queries import Q_TRUE
+from .readers import SparkReader
 
 
 def _walk_files(fs: FileSystem, url: str, rel: str = "") -> list[tuple[str, str]]:
-    """Recursive (relative_dir, file_name) listing of data files via fs.ls."""
+    """Recursive (relative_dir, file_url) listing of data files via fs.ls."""
     files, dirs = fs.ls(url)
-    out = [(rel, f) for f in files if not f.startswith(("_", "."))]
+    base = url.rstrip("/") + "/"
+    out = [(rel, base + f) for f in files if not f.startswith(("_", "."))]
     for d in dirs:
         if d.startswith(("_", ".")):
             continue
-        out += _walk_files(fs, url.rstrip("/") + "/" + d + "/", f"{rel}/{d}".lstrip("/"))
+        out += _walk_files(fs, base + d + "/", f"{rel}/{d}".lstrip("/"))
     return out
 
 
@@ -44,9 +47,8 @@ def file_stats(spark: SparkSession, url: str, fs: Optional[FileSystem] = None) -
     cost class as partition discovery."""
     path, fs = get_url_and_fs(url, fs)
     by_dir: dict[str, list[int]] = {}
-    for rel, fname in _walk_files(fs, path):
-        full = path.rstrip("/") + "/" + (f"{rel}/{fname}" if rel else fname)
-        by_dir.setdefault(rel, []).append(fs.size(full))
+    for rel, file_url in _walk_files(fs, path):
+        by_dir.setdefault(rel, []).append(fs.size(file_url))
     rows = [
         (rel, len(sizes), sum(sizes), min(sizes), max(sizes))
         for rel, sizes in sorted(by_dir.items())
@@ -65,24 +67,22 @@ def compact(
 ) -> None:
     """Rewrite the tree with ~target-sized files.
 
-    Reads the whole table, repartitions to ceil(total_bytes / target) tasks
-    (per partition-key when ``partition_by`` is given, so each Hive partition
-    compacts independently), and swaps directories. The swap is atomic only
+    Reads the whole table with :func:`read_partitioned_table` (parquet only),
+    repartitions to ceil(total_bytes / target) tasks (per partition-key when
+    ``partition_by`` is given, so each Hive partition compacts
+    independently), and swaps directories. The swap is atomic only
     where ``FileSystem.move`` is (local/HDFS) — see the module docstring for
     the object-store caveat. At cluster scale run per-partition-subset to
     bound the rewrite working set."""
     import math
 
     path, fs = get_url_and_fs(url, fs)
-    stats = file_stats(spark, path, fs).agg(F.sum("total_bytes")).collect()[0][0] or 0
-    n_out = max(1, math.ceil(stats / target_file_bytes))
+    total_bytes = sum(fs.size(file_url) for _, file_url in _walk_files(fs, path))
+    n_out = max(1, math.ceil(total_bytes / target_file_bytes))
 
-    # strings-only partition columns, restored after load (the conf is
-    # consumed eagerly by partition schema inference inside load())
-    with temp_conf(
-        spark, **{"spark.sql.sources.partitionColumnTypeInference.enabled": "false"}
-    ):
-        df = spark.read.parquet(fs.spark_url(path))
+    df = read_partitioned_table(
+        path, Q_TRUE, data_reader=SparkReader(input_format=InputFormat.PARQUET), fs=fs, spark=spark
+    )
     # unique staging/backup names: concurrent (or retried) compact calls on
     # the same table must not delete each other's in-flight output
     import uuid
@@ -123,15 +123,9 @@ def overwrite_partitions(
     path, fs = get_url_and_fs(url, fs)
     if not partition_by:
         raise ValueError("overwrite_partitions requires partition_by columns")
-    spark = df.sparkSession
-    # consumed at write-action time, which happens INSIDE the block —
-    # restoring afterwards cannot affect the committed write
-    with temp_conf(spark, **{"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(fs.spark_url(path))
-        )
+    # a per-write option, not the session conf: concurrent writers keep their own mode
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy(*partition_by).parquet(fs.spark_url(path))
 
 
 def drop_partitions(

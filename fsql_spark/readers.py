@@ -33,7 +33,7 @@ import json
 from abc import ABC, abstractmethod
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Callable, Optional
+from typing import Any, Callable, Collection, Optional
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +68,16 @@ class DataReader(ABC):
 
 def _detect(url: str, fmt: InputFormat) -> InputFormat:
     return InputFormat.from_url(url) if fmt is InputFormat.AUTO else fmt
+
+
+def project_columns(df: DataFrame, columns: Optional[list[str]], keys: Collection[str]) -> DataFrame:
+    """``columns=`` projection (reference `deser.py:170-176`) for both read paths:
+    the requested columns ``df`` has, then the always-kept partition ``keys``."""
+    if not columns:
+        return df
+    have = df.columns
+    keep = [c for c in columns if c in have]
+    return df.select(*keep, *[c for c in have if c in keys and c not in keep])
 
 
 class SparkReader(DataReader):
@@ -106,14 +116,7 @@ class SparkReader(DataReader):
         if self.lazy_errors:
             parts, failures = self._validate(parts, fs, fmt)
         df = self._load(spark, parts, fs, fmt)
-        if self.columns:
-            # projection pushdown (reference `deser.py:170-176`): requested
-            # data columns + the partition-path columns, which are always kept
-            part_keys = {k for p in parts for k in p.columns}
-            df = df.select(
-                *[c for c in self.columns if c in df.columns],
-                *[c for c in df.columns if c in part_keys],
-            )
+        df = project_columns(df, self.columns, {k for p in parts for k in p.columns})
         return (df, failures) if self.lazy_errors else df
 
     # -- internals ---------------------------------------------------------

@@ -99,10 +99,13 @@ from contextlib import contextmanager
 def temp_conf(spark: SparkSession, **confs: str):
     """Set session confs for the duration of the block, then restore.
 
-    Use ONLY around operations that consume the conf eagerly (e.g. partition
-    schema inference, which runs at ``load()`` time) — execution-time confs
-    (captured when an action runs) must NOT be restored early. Dotted conf
-    keys are passed via ``temp_conf(spark, **{"spark.sql....": "false"})``.
+    For execution-width confs (e.g. ``spark.sql.shuffle.partitions``) around
+    an operator's own loop of actions, which consume them inside the block.
+    Never use it to shape a result: the confs are SESSION-WIDE, so it is not
+    safe when several threads share a session — another thread's work sees
+    the override, and overlapping blocks can restore each other's values.
+    The fsql read/write/compact paths set no conf at all. Dotted conf keys
+    are passed via ``temp_conf(spark, **{"spark.sql....": "8"})``.
     """
     saved: dict[str, str | None] = {}
     for key, val in confs.items():

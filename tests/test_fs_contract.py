@@ -230,6 +230,122 @@ def test_fast_path_restores_caller_conf(spark, tmp_path):
         spark.conf.set(key, old)
 
 
+@pytest.mark.parametrize("call", ["fast_read", "driver_read", "compact", "overwrite_partitions"])
+def test_library_sets_no_session_conf(spark, tmp_path, monkeypatch, call):
+    """Reads, compaction and dynamic overwrite say what they need on the call
+    itself: none writes a session-wide conf, which every other client of the
+    same session would see. Only the AtomicQuery read takes driver discovery."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.conf import RuntimeConfig
+
+    import fsql_spark.api as api
+    from fsql_spark.maintenance import compact, overwrite_partitions
+    from fsql_spark.queries import AtomicQuery
+
+    root = str(tmp_path / "t")
+    df = spark.range(6).withColumn("p", (F.col("id") % 3).cast("string"))
+    write_table(df, root, partition_by=["p"])
+    restated = spark.createDataFrame([(99, "1")], "id long, p string")
+
+    def refuse(self, *args):
+        raise AssertionError(f"session conf written: {args}")
+
+    discovered = []
+    discover = api.discover_partitions
+
+    def recorded(*args, **kwargs):
+        discovered.append(args[0])
+        return discover(*args, **kwargs)
+
+    monkeypatch.setattr(api, "discover_partitions", recorded)
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    monkeypatch.setattr(RuntimeConfig, "unset", refuse)
+    query = Q_EQ("p", "1")
+    if call == "driver_read":
+        query = AtomicQuery(lambda p: p == "1")
+    elif call == "compact":
+        compact(spark, root, partition_by=["p"])
+    elif call == "overwrite_partitions":
+        overwrite_partitions(restated, root, partition_by=["p"])
+    out = read_partitioned_table(root, query, spark=spark)
+    assert dict(out.dtypes)["p"] == "string"
+    assert sorted(r.id for r in out.collect()) == ([99] if call == "overwrite_partitions" else [1, 4])
+    assert discovered == ([query] if call == "driver_read" else [])
+    if call == "overwrite_partitions":  # the other partitions are untouched
+        assert read_partitioned_table(root, Q_TRUE, spark=spark).count() == 5
+
+
+@pytest.mark.parametrize("inference", ["false", "true"])
+def test_threads_share_one_session(spark, tmp_path, monkeypatch, inference):
+    """Four threads on one session: two fast-path-shaped reads, one
+    driver-discovery read and the caller's own ``spark.read``. Every answer
+    is checked; the caller's reads follow the caller's conf every time, and
+    the conf is unchanged afterwards. With inference on, the library takes
+    driver discovery for every read instead of flipping the conf."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
+
+    import fsql_spark.api as api
+    from fsql_spark.queries import AtomicQuery, Q_IN
+
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    root = str(tmp_path / "t")
+    write_table(spark.range(12).withColumn("p", (F.col("id") % 3).cast("int")), root, partition_by=["p"])
+    discoveries = []
+    lock = threading.Lock()
+    discover = api.discover_partitions
+
+    def counted(*args, **kwargs):
+        with lock:
+            discoveries.append(1)
+        return discover(*args, **kwargs)
+
+    monkeypatch.setattr(api, "discover_partitions", counted)
+    rounds = 4
+
+    def fast_eq():
+        for _ in range(rounds):
+            out = read_partitioned_table(root, Q_EQ("p", "1"), spark=spark)
+            assert dict(out.dtypes)["p"] == "string"
+            assert sorted(r.id for r in out.collect()) == [1, 4, 7, 10]
+
+    def fast_in():
+        for _ in range(rounds):
+            out = read_partitioned_table(root, Q_IN("p", ["0", "2"]), spark=spark)
+            assert dict(out.dtypes)["p"] == "string"
+            assert out.count() == 8
+
+    def driver():
+        for _ in range(rounds):
+            out = read_partitioned_table(root, AtomicQuery(lambda p: p == "2"), spark=spark)
+            assert dict(out.dtypes)["p"] == "string"
+            assert sorted(r.id for r in out.collect()) == [2, 5, 8, 11]
+
+    def own_reads():
+        for _ in range(rounds):
+            own = spark.read.parquet(root)
+            assert dict(own.dtypes)["p"] == ("int" if inference == "true" else "string")
+            assert own.count() == 12
+
+    old, switch = spark.conf.get(key), sys.getswitchinterval()
+    spark.conf.set(key, inference)
+    sys.setswitchinterval(1e-5)
+    pool = ThreadPoolExecutor(4)
+    try:
+        futures = [pool.submit(fn) for fn in (fast_eq, fast_in, driver, own_reads)]
+        for future in futures:
+            future.result(timeout=300)
+        assert spark.conf.get(key) == inference
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
+        sys.setswitchinterval(switch)
+        spark.conf.set(key, old)
+    assert len(discoveries) == (3 * rounds if inference == "true" else rounds)
+
+
 def _read_atomic(spark, root):
     # AtomicQuery forces the driver-discovery path: one scan + path join
     from fsql_spark.queries import AtomicQuery

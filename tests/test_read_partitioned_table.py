@@ -221,6 +221,47 @@ def test_mixed_depth_quirk(spark, tmp_path, df1, df2):
     assert pdf["k"].isna().sum() == 2
 
 
+def test_mixed_depth_conflicting_keys_returns_union(spark, tmp_path, df1, df2):
+    """Leaves binding different key sets (``a=1/`` vs ``a=2/b=3/``) pass the
+    first-leaf probe, then Spark's load() raises
+    CONFLICTING_PARTITION_COLUMN_NAMES: the read falls back to driver
+    discovery and returns the union, with NULL ``b`` for the shallow leaf."""
+    write_csv(tmp_path, "t/a=1/f.csv", df1)
+    write_csv(tmp_path, "t/a=2/b=3/f.csv", df2)
+    out = read_partitioned_table(str(tmp_path / "t"), Q_TRUE, spark=spark)
+    assert dict(out.dtypes)["a"] == dict(out.dtypes)["b"] == "string"
+    expected = pd.concat([df1.assign(a="1", b=None), df2.assign(a="2", b="3")])
+    assert_same(out, expected, by=["c1"])
+
+
+def test_fast_path_load_error_propagates(spark, tmp_path, df1, monkeypatch):
+    """Only the "not one Hive layout" conditions fall back. Any other load()
+    error, here the table vanishing between the probe and the scan, raises
+    instead of silently taking driver discovery."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    import fsql_spark.api as api
+
+    write_csv(tmp_path, "t/k=1/f.csv", df1)
+    probe = api._probe_first_leaf
+
+    def probe_then_vanish(fs, root):
+        found = probe(fs, root)
+        shutil.rmtree(tmp_path / "t")
+        return found
+
+    def no_discovery(*args, **kwargs):
+        raise AssertionError("fell back to driver discovery")
+
+    monkeypatch.setattr(api, "_probe_first_leaf", probe_then_vanish)
+    monkeypatch.setattr(api, "discover_partitions", no_discovery)
+    with pytest.raises(AnalysisException) as err:
+        read_partitioned_table(str(tmp_path / "t"), Q_EQ("k", "1"), spark=spark)
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
+
+
 def test_valueonly_named_with_atomic_filter(spark, tmp_path, df1, df2, df3):
     """FixedColumns + AtomicQuery on the first positional column; filename
     column present in output (`test_fsql.py:85-105`)."""
