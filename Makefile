@@ -9,6 +9,8 @@
 #                               same env, same 2670 s timeout)
 #   make perfbench            - the repo benchmark (BENCHMARK.json):
 #                               python3 perfbench/run.py
+#   make perfcheck            - perfbench's own tests (~6 s), among them that
+#                               every library name the tracer patches exists
 #   make gate  ROUND=14       - strict driver-twin gate -> GATE_r<N>.json
 #                               (every catalog entry hash-compared against
 #                               its DuckDB oracle at the driver's sf0.01)
@@ -23,7 +25,7 @@ ROUND ?= 14
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.1
 
-.PHONY: test perfbench gate bench verify
+.PHONY: test perfbench perfcheck gate bench verify
 
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
@@ -31,6 +33,9 @@ test:
 
 perfbench:
 	python3 perfbench/run.py
+
+perfcheck:
+	python3 -m pytest perfbench -q -p no:cacheprovider
 
 gate:
 	$(PY) tools/run_gate.py $(ROUND)

@@ -8,11 +8,15 @@ filter on partition columns only; output defaults to a (distributed) DataFrame.
 Execution strategy — two paths, picked from the call and the session:
 
 FAST PATH (Hive layouts + Catalyst-expressible query + engine session defaults):
-    ``spark.read.format(f).load(root).where(query.to_column())``
-    Partition discovery, pruning, predicate/projection pushdown, parallel
-    listing, vectorized scans: all Catalyst/Tungsten built-ins. Zero driver
-    crawling. This is what runs against 100 TB. Partition columns bind as
-    strings because ``get_spark``/``configure`` turn type inference off.
+    ``spark.read.format(f).option("basePath", root).load(prefixes)``
+    ``.where(query.to_column())``. A short driver walk
+    (:func:`~fsql_spark.discovery.query_prefixes`) lists the tree one level
+    at a time and keeps the ``key=value`` prefixes the query cannot rule
+    out, so Spark lists only those; the ``where`` keeps the answer exact. A
+    query on no partition key loads ``root`` with no walk. Partition
+    discovery, pruning, predicate/projection pushdown and vectorized scans
+    stay Catalyst/Tungsten built-ins. Partition columns bind as strings
+    because ``get_spark``/``configure`` turn type inference off.
 
 DRIVER-DISCOVERY PATH (everything else — SURVEY §4.3): black-box
     :class:`AtomicQuery` predicates, value-only ``FixedColumnsParser`` layouts
@@ -42,14 +46,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .column_parser import AUTO_PARSER, AutoParser, ColumnParser
-from .discovery import Partition, discover_partitions
+from .discovery import GLOB_CHARS, Partition, discover_partitions, query_prefixes
 from .formats import InputFormat
-from .fs import FileSystem, get_url_and_fs
+from .fs import FileSystem, get_url_and_fs, is_hidden
 from .queries import Query
 from .readers import DataReader, SparkReader, SPARK_READER, project_columns
 from .session import get_spark
 
 _TYPE_INFERENCE = "spark.sql.sources.partitionColumnTypeInference.enabled"
+# above this many paths Spark lists with a distributed job, not on the driver
+_SERIAL_LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 # load() conditions meaning "not one Hive layout" (e.g. the mixed-depth quirk,
 # reference `column_parser.py:106-110`): driver discovery reads such trees
 _NOT_ONE_LAYOUT = {"CONFLICTING_PARTITION_COLUMN_NAMES", "CONFLICTING_DIRECTORY_STRUCTURES"}
@@ -72,8 +78,8 @@ def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[O
     keys: list[str] = []
     for _ in range(max_depth):
         files, dirs = fs.ls(url)
-        files = [f for f in files if not f.startswith(("_", "."))]
-        dirs = [d for d in dirs if not d.startswith(("_", "."))]  # _spark_metadata etc.
+        files = [f for f in files if not is_hidden(f)]
+        dirs = [d for d in dirs if not is_hidden(d)]  # _spark_metadata etc.
         if files and dirs:
             # mixed files+dirs at one level: the bare-AutoParser mixed-depth
             # quirk (reference `column_parser.py:106-110`) — Spark's native
@@ -140,7 +146,15 @@ def _fast_path_eligible(
 def _read_fast_path(
     spark: SparkSession, path: str, fs: FileSystem, query: Query, reader: SparkReader
 ) -> Optional[DataFrame]:
-    """Catalyst-native scan; returns None to signal slow-path fallback."""
+    """Catalyst-native scan of the prefixes the query can keep; returns None
+    to signal slow-path fallback.
+
+    The first-leaf probe gives the format and the partition keys; the walk
+    gives the prefixes, loaded under ``basePath=path`` (``path`` itself
+    when nothing was pruned). When the query rules out every partition, the
+    probe's leaf directory is loaded under a false filter, so the empty
+    result keeps the table schema. A non-parquet source infers its schema
+    from the loaded prefixes only."""
     try:
         probe_file, part_keys = _probe_first_leaf(fs, path)
     except ValueError:
@@ -156,13 +170,27 @@ def _read_fast_path(
     if fmt is InputFormat.XLSX:
         return None  # no distributed xlsx source: pandas bridge on slow path
 
+    available = frozenset(part_keys)
+    prefixes = query_prefixes(query, path, part_keys, fs, int(spark.conf.get(_SERIAL_LISTING)))
+    if prefixes is None:
+        return None  # a directory above the kept partitions holds data files
+    where = query.to_column(available)
+    if not prefixes:
+        # every partition ruled out: the probe's leaf keeps the table schema
+        leaf = probe_file.rsplit("/", 1)[0] + "/"
+        prefixes, where = [leaf if GLOB_CHARS.isdisjoint(leaf) else path], F.lit(False)
+
     load = spark.read.format(fmt.spark_format()).options(
         **{**fmt.spark_options(), **reader.options}
     )
     if reader.schema is not None:
         load = load.schema(reader.schema)
+    target: Union[str, list[str]] = fs.spark_url(path)
+    if prefixes != [path]:
+        load = load.option("basePath", target)
+        target = [fs.spark_url(p) for p in prefixes]
     try:
-        df = load.load(fs.spark_url(path))
+        df = load.load(target)
     except PySparkException as exc:
         if exc.getCondition() in _NOT_ONE_LAYOUT:
             return None
@@ -189,8 +217,7 @@ def _read_fast_path(
         if any(_fmt_of(f) is not fmt for f in df.inputFiles()):
             return None
 
-    available = frozenset(part_keys)
-    return project_columns(df.where(query.to_column(available)), reader.columns, available)
+    return project_columns(df.where(where), reader.columns, available)
 
 
 def read_s3_table(*args, **kwargs):

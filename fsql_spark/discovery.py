@@ -17,23 +17,32 @@ Scale positioning: this path is used ONLY where Catalyst cannot do the work —
 black-box :class:`~fsql_spark.queries.AtomicQuery` predicates and non-Hive
 layouts. It is O(#surviving-partitions) driver work over *metadata*, exactly
 like the reference; the data scan that follows is one distributed
-``spark.read.load(paths)``. Hive layouts with expressible queries never come
-here (Catalyst's ``InMemoryFileIndex`` + ``PruneFileSourcePartitions`` does it
-natively). Listing fan-out uses a thread pool per level, mirroring the
-reference's noted "parallelisation opportunity" (`partition_discovery.py:71`).
+``spark.read.load(paths)``. Listing fan-out uses a thread pool per level,
+mirroring the reference's noted "parallelisation opportunity"
+(`partition_discovery.py:71`).
+
+Hive layouts with expressible queries take the fast path instead. There
+:func:`query_prefixes` lists only the top levels, with the same pruning oracle
+and the same per-level pool, and stops while the survivors still fit Spark's
+serial-listing threshold: Spark's ``InMemoryFileIndex`` then lists below the
+kept prefixes and ``PruneFileSourcePartitions`` prunes what is left. This is
+the reference's own advice (``generate()`` before ``ls``) applied to a listing.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, Optional
 
 from .column_parser import ColumnParser
-from .fs import FileSystem
+from .fs import FileSystem, is_hidden
 from .queries import Query
 
 _LIST_POOL_SIZE = 32  # reference uses a 32-thread fetch pool (`deser.py:153`)
+# Hadoop globs every path handed to load(): a name holding one of these
+# would be read as a pattern, not as itself
+GLOB_CHARS = frozenset("*?[]{}\\")
 
 
 @dataclass
@@ -80,10 +89,10 @@ def _walk(query: Query, parser: ColumnParser, part: Partition, fs: FileSystem) -
             # with no files. Treat as empty instead of crashing; listings of
             # real (listed) parents can't hit this outside delete races.
             files, dirs = [], []
-        # Spark/Hive convention: metadata paths (_spark_metadata, _SUCCESS,
-        # .crc, ...) are invisible to table readers
-        files = [f for f in files if not f.startswith(("_", "."))]
-        dirs = [d for d in dirs if not d.startswith(("_", "."))]
+        # Spark's convention: metadata paths (_spark_metadata, _SUCCESS,
+        # .crc, ...) are invisible to table readers; _key=value is not
+        files = [f for f in files if not is_hidden(f)]
+        dirs = [d for d in dirs if not is_hidden(d)]
 
     survivors = []
     for d in dirs:
@@ -111,3 +120,72 @@ def _walk(query: Query, parser: ColumnParser, part: Partition, fs: FileSystem) -
         elif query.eval_all(part.columns):
             for f in files:
                 yield part.expand_by(f, None)
+
+
+def _ls_level(fs: FileSystem, urls: list[str]) -> list[tuple[list[str], list[str]]]:
+    if len(urls) == 1:
+        return [fs.ls(urls[0])]
+    with ThreadPoolExecutor(min(_LIST_POOL_SIZE, len(urls))) as pool:
+        return list(pool.map(fs.ls, urls))
+
+
+def query_prefixes(
+    query: Query, root: str, keys: list[str], fs: FileSystem, serial_limit: int
+) -> Optional[list[str]]:
+    """The directories under the Hive table ``root`` (partition ``keys``, in
+    path order) that a fast-path read has to load for ``query``.
+
+    Lists the tree one level at a time, each level's directories
+    concurrently, and keeps each ``key=value`` child that ``eval_available``
+    cannot rule out. It goes one level deeper only while the query still
+    references a key at or below it, the level just listed pruned
+    something, and the survivors fit ``serial_limit`` (Spark's
+    serial-listing threshold: more paths than that start a listing job).
+    When the survivors do not fit, their parents are returned instead.
+
+    Returns ``[root]`` when nothing is gained or a name cannot be judged
+    (not ``key=value`` under the expected key, or a glob character), and
+    after a listing race, so that ``load`` reports the missing path. A
+    value holding ``%`` is kept unpruned and unbound: Spark unescapes it,
+    so the raw name is not the value. Returns ``None`` when a directory the
+    walk descends past holds data files (not one Hive layout), and ``[]``
+    when the query rules out every partition.
+    """
+    level = [Partition(root, {})]
+    referenced = query.referenced_columns()
+    for depth, key in enumerate(keys):
+        if not level or referenced.isdisjoint(keys[depth:]):
+            break
+        try:
+            listings = _ls_level(fs, [p.url for p in level])
+        except FileNotFoundError:
+            return [root]
+        kept: list[list[Partition]] = []
+        listed, holds_files = 0, False
+        for part, (files, dirs) in zip(level, listings):
+            holds_files = holds_files or not all(map(is_hidden, files))
+            survivors = []
+            for d in dirs:
+                if is_hidden(d):
+                    continue
+                name, sep, value = d.partition("=")
+                if not sep or name != key or not GLOB_CHARS.isdisjoint(d):
+                    return [root]
+                listed += 1
+                if "%" in value:
+                    survivors.append(Partition(part.url + d + "/", part.columns))
+                    continue
+                child = part.expand_by(d + "/", (key, value))
+                if query.eval_available(child.columns):
+                    survivors.append(child)
+            kept.append(survivors)
+        if sum(map(len, kept)) == listed:
+            break  # nothing pruned: this level loads the same files in fewer paths
+        if holds_files:
+            return None
+        children = [c for survivors in kept for c in survivors]
+        if len(children) > serial_limit:
+            level = [p for p, survivors in zip(level, kept) if survivors]
+            break
+        level = children
+    return [p.url for p in level]

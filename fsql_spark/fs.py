@@ -70,6 +70,19 @@ def s3_spark_conf() -> dict[str, str]:
     return out
 
 
+def is_hidden(name: str) -> bool:
+    """Spark's rule for listing entries a table reader skips
+    (``InMemoryFileIndex.shouldFilterOutPathName``): dot-names, in-flight
+    ``._COPYING_`` copies, and underscore-names that are not ``key=value``
+    segments. ``_SUCCESS``, ``_spark_metadata`` and ``.crc`` files hide; a
+    partition directory ``_src=a`` does not."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
 class FileSystem(ABC):
     """Minimal driver-side FS protocol: list / stat / open."""
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .api import read_partitioned_table
 from .formats import InputFormat
-from .fs import FileSystem, get_url_and_fs
+from .fs import FileSystem, get_url_and_fs, is_hidden
 from .queries import Q_TRUE
 from .readers import SparkReader
 
@@ -32,9 +32,9 @@ def _walk_files(fs: FileSystem, url: str, rel: str = "") -> list[tuple[str, str]
     """Recursive (relative_dir, file_url) listing of data files via fs.ls."""
     files, dirs = fs.ls(url)
     base = url.rstrip("/") + "/"
-    out = [(rel, base + f) for f in files if not f.startswith(("_", "."))]
+    out = [(rel, base + f) for f in files if not is_hidden(f)]
     for d in dirs:
-        if d.startswith(("_", ".")):
+        if is_hidden(d):
             continue
         out += _walk_files(fs, base + d + "/", f"{rel}/{d}".lstrip("/"))
     return out
@@ -212,7 +212,7 @@ def _prune_if_effectively_empty(fs: FileSystem, url: str) -> bool:
         files, dirs = fs.ls(url)
     except (OSError, FileNotFoundError):
         return False
-    if dirs or any(not f.startswith(("_", ".")) for f in files):
+    if dirs or not all(map(is_hidden, files)):
         return False  # visible content: not prunable
     if not files:
         try:
@@ -229,7 +229,7 @@ def _prune_if_effectively_empty(fs: FileSystem, url: str) -> bool:
         files2, dirs2 = fs.ls(tomb)
     except (OSError, FileNotFoundError):
         files2, dirs2 = [], []
-    if dirs2 or any(not f.startswith(("_", ".")) for f in files2):
+    if dirs2 or not all(map(is_hidden, files2)):
         try:  # data landed before the rename: put everything back
             fs.move(tomb, url)
         except (OSError, NotImplementedError):

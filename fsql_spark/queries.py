@@ -4,9 +4,12 @@ Reproduces the semantics of the reference's ``Query`` protocol
 (``/root/reference/src/fsql/query.py``) with one addition that makes it
 Spark-native: every query that is *expressible* as a Column expression
 compiles via :meth:`Query.to_column`, so the fast path is a plain
-``spark.read.load(root).where(expr)`` and Catalyst's partition pruning does
-the crawling (no driver-side listing at all). The Python-side
-``eval_all``/``eval_available`` pair is retained for:
+``spark.read.load(prefixes).where(expr)`` and Catalyst's partition pruning
+does the rest. The Python-side ``eval_all``/``eval_available`` pair is
+retained for:
+
+- the fast path's listing walk (``discovery.query_prefixes``), which asks
+  ``eval_available`` which ``key=value`` prefixes to hand to Spark;
 
 - black-box predicates (:class:`AtomicQuery` — reference `query.py:46-63`),
   which Catalyst cannot push into partition pruning; these run driver-side
