@@ -13,9 +13,10 @@ FAST PATH (Hive layouts + Catalyst-expressible query + engine session defaults):
     (:func:`~fsql_spark.discovery.query_prefixes`) lists the tree one level
     at a time and keeps the ``key=value`` prefixes the query cannot rule
     out, so Spark lists only those; the ``where`` keeps the answer exact. A
-    query on no partition key loads ``root`` with no walk. Partition
-    discovery, pruning, predicate/projection pushdown and vectorized scans
-    stay Catalyst/Tungsten built-ins. Partition columns bind as strings
+    query on no partition key, or a read that merges schemas, loads
+    ``root`` with no walk. Partition discovery, pruning,
+    predicate/projection pushdown and vectorized scans stay
+    Catalyst/Tungsten built-ins. Partition columns bind as strings
     because ``get_spark``/``configure`` turn type inference off.
 
 DRIVER-DISCOVERY PATH (everything else — SURVEY §4.3): black-box
@@ -39,7 +40,7 @@ from __future__ import annotations
 
 import io
 import warnings
-from typing import Any, Optional, Union
+from typing import Any, Optional
 
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
@@ -143,6 +144,26 @@ def _fast_path_eligible(
     )
 
 
+# parquet/orc readers union every file's schema when this (or the mergeSchema
+# option) is true; json/csv have no such switch
+_MERGE_SCHEMA = {
+    InputFormat.PARQUET: "spark.sql.parquet.mergeSchema",
+    InputFormat.ORC: "spark.sql.orc.mergeSchema",
+}
+
+
+def _merges_schema(spark: SparkSession, fmt: InputFormat, options: dict[str, Any]) -> bool:
+    """Whether Spark merges the schemas of all loaded files for this read:
+    the ``mergeSchema`` option (any case, like Spark) else the session
+    default of the format."""
+    if fmt not in _MERGE_SCHEMA:
+        return False
+    value = next((v for k, v in options.items() if k.lower() == "mergeschema"), None)
+    if value is None:
+        value = spark.conf.get(_MERGE_SCHEMA[fmt])
+    return str(value).strip().lower() == "true"
+
+
 def _read_fast_path(
     spark: SparkSession, path: str, fs: FileSystem, query: Query, reader: SparkReader
 ) -> Optional[DataFrame]:
@@ -153,8 +174,15 @@ def _read_fast_path(
     gives the prefixes, loaded under ``basePath=path`` (``path`` itself
     when nothing was pruned). When the query rules out every partition, the
     probe's leaf directory is loaded under a false filter, so the empty
-    result keeps the table schema. A non-parquet source infers its schema
-    from the loaded prefixes only."""
+    result keeps the partition columns.
+
+    Without ``reader.schema``, Spark infers the data columns from the
+    loaded prefixes only: parquet and orc read one footer of a kept file,
+    json and csv sample the kept files. On a table whose schema drifts, the
+    result's data columns can thus depend on the query; callers that need
+    the table-wide schema pass ``reader.schema``. A read that merges
+    schemas (``mergeSchema``, as option or session default) skips the walk
+    and loads ``path``, so the merged schema spans every file."""
     try:
         probe_file, part_keys = _probe_first_leaf(fs, path)
     except ValueError:
@@ -170,27 +198,26 @@ def _read_fast_path(
     if fmt is InputFormat.XLSX:
         return None  # no distributed xlsx source: pandas bridge on slow path
 
+    options = {**fmt.spark_options(), **reader.options}
     available = frozenset(part_keys)
-    prefixes = query_prefixes(query, path, part_keys, fs, int(spark.conf.get(_SERIAL_LISTING)))
+    if _merges_schema(spark, fmt, options):
+        prefixes: Optional[list[str]] = [path]  # the merged schema spans every file
+    else:
+        prefixes = query_prefixes(query, path, part_keys, fs, int(spark.conf.get(_SERIAL_LISTING)))
     if prefixes is None:
-        return None  # a directory above the kept partitions holds data files
+        return None  # a directory the walk listed holds data files
     where = query.to_column(available)
     if not prefixes:
-        # every partition ruled out: the probe's leaf keeps the table schema
+        # every partition ruled out: the probe's leaf keeps the partition columns
         leaf = probe_file.rsplit("/", 1)[0] + "/"
         prefixes, where = [leaf if GLOB_CHARS.isdisjoint(leaf) else path], F.lit(False)
 
-    load = spark.read.format(fmt.spark_format()).options(
-        **{**fmt.spark_options(), **reader.options}
-    )
+    load = spark.read.format(fmt.spark_format()).options(**options)
     if reader.schema is not None:
         load = load.schema(reader.schema)
-    target: Union[str, list[str]] = fs.spark_url(path)
-    if prefixes != [path]:
-        load = load.option("basePath", target)
-        target = [fs.spark_url(p) for p in prefixes]
+    load = load.option("basePath", fs.spark_url(path))
     try:
-        df = load.load(target)
+        df = load.load([fs.spark_url(p) for p in prefixes])
     except PySparkException as exc:
         if exc.getCondition() in _NOT_ONE_LAYOUT:
             return None

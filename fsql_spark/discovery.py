@@ -147,8 +147,8 @@ def query_prefixes(
     (not ``key=value`` under the expected key, or a glob character), and
     after a listing race, so that ``load`` reports the missing path. A
     value holding ``%`` is kept unpruned and unbound: Spark unescapes it,
-    so the raw name is not the value. Returns ``None`` when a directory the
-    walk descends past holds data files (not one Hive layout), and ``[]``
+    so the raw name is not the value. Returns ``None`` when a directory it
+    lists below ``root`` holds data files (not one Hive layout), and ``[]``
     when the query rules out every partition.
     """
     level = [Partition(root, {})]
@@ -179,10 +179,12 @@ def query_prefixes(
                 if query.eval_available(child.columns):
                     survivors.append(child)
             kept.append(survivors)
+        if holds_files:
+            # files beside or instead of the next key's directories: loading
+            # the kept prefixes could hide that key from Spark's layout check
+            return None
         if sum(map(len, kept)) == listed:
             break  # nothing pruned: this level loads the same files in fewer paths
-        if holds_files:
-            return None
         children = [c for survivors in kept for c in survivors]
         if len(children) > serial_limit:
             level = [p for p, survivors in zip(level, kept) if survivors]

@@ -21,6 +21,7 @@ import fsql_spark.api as api
 from fsql_spark import AtomicQuery, read_partitioned_table, write_table
 from fsql_spark.fs import LocalFileSystem
 from fsql_spark.queries import DateRangeQuery, Q_AND, Q_EQ, Q_IN, Q_OR, Q_TRUE
+from fsql_spark.readers import SparkReader
 
 from .test_query_compile_equivalence import random_queries
 
@@ -140,6 +141,15 @@ def test_files_above_kept_partitions_take_driver_discovery(spark, tmp_path, monk
     assert _rows(out.select("payload", "year", "month")) == [
         ("g", "2", "\0"), ("h", "2", "3"), ("j", "3", "6")
     ]
+    # a=2 holds only a file: loaded alone it would hide key b from Spark
+    # and the where on b could not resolve
+    other = tmp_path / "u"
+    _write_parquet(other, "a=1/b=3/f.parquet", "f")
+    _write_parquet(other, "a=2/g.parquet", "g")
+    q = Q_OR(Q_AND(Q_EQ("a", "2"), Q_EQ("b", "9")), Q_EQ("a", "2"))
+    out = read_partitioned_table(str(other), q, spark=spark)
+    assert len(discovered) == 3
+    assert _rows(out.select("payload", "a")) == [("g", "2")]
 
 
 def test_glob_character_names_load_the_root(spark, tmp_path, fast_only):
@@ -162,6 +172,24 @@ def test_all_pruned_result_keeps_the_table_schema(spark, tmp_path, fast_only):
     out = read_partitioned_table(str(root), DateRangeQuery("2030/01/01", "2030/02/01"), spark=spark)
     assert out.dtypes == spark.read.load(str(root)).dtypes
     assert out.agg(F.count(F.lit(1))).collect()[0][0] == 0
+
+
+def test_merge_schema_spans_the_whole_table(spark, tmp_path, fast_only):
+    """A merged schema is the table's: a query that keeps only pre-drift
+    partitions still gets the drift column, as NULL."""
+    root = tmp_path / "t"
+    _write_parquet(root, "year=2020/f.parquet", "old")
+    target = root / "year=2021" / "f.parquet"
+    target.parent.mkdir(parents=True)
+    pd.DataFrame({"payload": ["new"], "channel": ["web"]}).to_parquet(target)
+    reader = SparkReader(options={"mergeSchema": "true"})
+
+    for q in [Q_EQ("year", "2020"), Q_IN("year", ["2019", "2020"])]:
+        out = read_partitioned_table(str(root), q, data_reader=reader, spark=spark)
+        assert out.dtypes == [("payload", "string"), ("channel", "string"), ("year", "string")]
+        assert _rows(out) == [("old", "\0", "2020")]
+    out = read_partitioned_table(str(root), Q_EQ("year", "2019"), data_reader=reader, spark=spark)
+    assert "channel" in out.columns and out.count() == 0
 
 
 def test_listing_follows_the_query(spark, tmp_path, fast_only):
