@@ -11,6 +11,9 @@
 #                               python3 perfbench/run.py
 #   make perfcheck            - perfbench's own tests (~6 s), among them that
 #                               every library name the tracer patches exists
+#   make fsqlcheck            - the core fsql tests (read paths, discovery,
+#                               readers, fs contract; ~1.5 min) with the
+#                               tier-1 environment
 #   make gate  ROUND=14       - strict driver-twin gate -> GATE_r<N>.json
 #                               (every catalog entry hash-compared against
 #                               its DuckDB oracle at the driver's sf0.01)
@@ -25,7 +28,7 @@ ROUND ?= 14
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.1
 
-.PHONY: test perfbench perfcheck gate bench verify
+.PHONY: test perfbench perfcheck fsqlcheck gate bench verify
 
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
@@ -36,6 +39,14 @@ perfbench:
 
 perfcheck:
 	python3 -m pytest perfbench -q -p no:cacheprovider
+
+FSQL_TESTS = test_path_equivalence.py test_fs_contract.py test_readers_and_write.py \
+	test_read_partitioned_table.py test_query_directed_listing.py test_daterange.py \
+	test_lex_range_query.py test_driver_prefix_load.py
+
+fsqlcheck:
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 $(PY) -m pytest $(addprefix tests/,$(FSQL_TESTS)) -q -p no:cacheprovider
 
 gate:
 	$(PY) tools/run_gate.py $(ROUND)

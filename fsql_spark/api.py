@@ -25,15 +25,26 @@ DRIVER-DISCOVERY PATH (everything else — SURVEY §4.3): black-box
     outputs (dict / fancy-ls), ``lazy_errors``, partition type inference on
     in the session, trees that are not one Hive layout. The driver enumerates
     and prunes partition *metadata* exactly like the reference (O(#partitions),
-    threaded listing), then hands the surviving file list to ONE distributed
-    ``spark.read`` per input format — the data plane stays on executors.
-    Partition columns are bound, in path order, by one broadcast left join
-    on ``input_file_name()`` against a small file -> binding map keyed by
-    Spark's own path strings; a binding replaces a same-named data column.
+    threaded listing); the data plane stays on executors. A Hive-shaped
+    survivor set read by a plain ``SparkReader`` with inference off is loaded
+    the fast path's way: the survivors' leaf directories (or their ancestors,
+    above Spark's serial-listing threshold) under ``basePath``, plus an exact
+    filter on the partition columns, so planning lists directories instead
+    of starting a per-file listing job; every discovered file must be among
+    the files Spark lists. Any other survivor set goes to ONE distributed
+    ``spark.read`` of the file list per input format, its partition columns
+    bound, in path order, by one broadcast left join on
+    ``input_file_name()`` against a small file -> binding map keyed by
+    Spark's own path strings. Either way a binding replaces a same-named
+    data column.
 
 No transactional guarantees, like the reference (`api.py:33-36`): files deleted
 between discovery and read raise (soften with
-``spark.sql.files.ignoreMissingFiles``); files added are not seen.
+``spark.sql.files.ignoreMissingFiles`` on the file-list read). A read that
+loads directories (the fast path, and driver discovery's Hive prefix load)
+sees files added to a kept directory before the scan, and infers the data
+columns from the loaded prefixes; the file-list read sees only the files
+discovered.
 """
 
 from __future__ import annotations
@@ -41,13 +52,21 @@ from __future__ import annotations
 import io
 import warnings
 from typing import Any, Optional
+from urllib.parse import unquote
 
 from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .column_parser import AUTO_PARSER, AutoParser, ColumnParser
-from .discovery import GLOB_CHARS, Partition, discover_partitions, query_prefixes
+from .discovery import (
+    GLOB_CHARS,
+    Partition,
+    covering_prefixes,
+    discover_partitions,
+    hive_layout,
+    query_prefixes,
+)
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs, is_hidden
 from .queries import Query
@@ -126,21 +145,33 @@ def read_partitioned_table(
 
     root = Partition(path, {})
     partitions = list(discover_partitions(query, column_parser, root, fs))
+    if _loads_prefixes(spark, reader):
+        result = _read_discovered(spark, path, fs, partitions, reader)
+        if result is not None:
+            return result
     return reader.read(spark, partitions, fs, InputFormat.AUTO)
+
+
+def _loads_prefixes(spark: SparkSession, reader: DataReader) -> bool:
+    """Whether a read may load Hive prefixes under ``basePath``: a plain
+    ``SparkReader`` and partition type inference off in the session (else
+    Spark would bind types)."""
+    return (
+        isinstance(reader, SparkReader)
+        and not reader.lazy_errors
+        and spark.conf.get(_TYPE_INFERENCE).strip().lower() == "false"
+    )
 
 
 def _fast_path_eligible(
     spark: SparkSession, query: Query, parser: ColumnParser, reader: DataReader
 ) -> bool:
-    """Each false clause names a reason for driver discovery; the last is
-    partition type inference on in the session (Spark would bind types)."""
+    """Each false clause names a reason for driver discovery."""
     return (
         isinstance(parser, AutoParser)
         and parser.grammars is None  # bare AutoParser: Spark-native discovery
-        and isinstance(reader, SparkReader)
-        and not reader.lazy_errors
         and query.expressible
-        and spark.conf.get(_TYPE_INFERENCE).strip().lower() == "false"
+        and _loads_prefixes(spark, reader)
     )
 
 
@@ -172,9 +203,10 @@ def _read_fast_path(
 
     The first-leaf probe gives the format and the partition keys; the walk
     gives the prefixes, loaded under ``basePath=path`` (``path`` itself
-    when nothing was pruned). When the query rules out every partition, the
-    probe's leaf directory is loaded under a false filter, so the empty
-    result keeps the partition columns.
+    when nothing was pruned) by :func:`_load_prefixes`, which the
+    driver-discovery path shares. When the query rules out every
+    partition, the probe's leaf directory is loaded under a false filter,
+    so the empty result keeps the partition columns.
 
     Without ``reader.schema``, Spark infers the data columns from the
     loaded prefixes only: parquet and orc read one footer of a kept file,
@@ -183,36 +215,128 @@ def _read_fast_path(
     the table-wide schema pass ``reader.schema``. A read that merges
     schemas (``mergeSchema``, as option or session default) skips the walk
     and loads ``path``, so the merged schema spans every file."""
-    try:
-        probe_file, part_keys = _probe_first_leaf(fs, path)
-    except ValueError:
-        return None  # non key=value segment: not a Hive layout
-    if probe_file is None:
-        return None  # empty tree: slow path returns the canonical empty result
-    fmt = reader.input_format
-    if fmt is InputFormat.AUTO:
-        try:
-            fmt = InputFormat.from_url(probe_file)
-        except KeyError:
-            return None
-    if fmt is InputFormat.XLSX:
-        return None  # no distributed xlsx source: pandas bridge on slow path
-
-    options = {**fmt.spark_options(), **reader.options}
-    available = frozenset(part_keys)
-    if _merges_schema(spark, fmt, options):
+    probed = _probe(fs, path, reader)
+    if probed is None:
+        return None
+    probe_file, part_keys, fmt = probed
+    if _merges_schema(spark, fmt, reader.options):
         prefixes: Optional[list[str]] = [path]  # the merged schema spans every file
     else:
         prefixes = query_prefixes(query, path, part_keys, fs, int(spark.conf.get(_SERIAL_LISTING)))
     if prefixes is None:
         return None  # a directory the walk listed holds data files
-    where = query.to_column(available)
+    where = query.to_column(frozenset(part_keys))
     if not prefixes:
-        # every partition ruled out: the probe's leaf keeps the partition columns
-        leaf = probe_file.rsplit("/", 1)[0] + "/"
-        prefixes, where = [leaf if GLOB_CHARS.isdisjoint(leaf) else path], F.lit(False)
+        prefixes, where = _probe_leaf(path, probe_file), F.lit(False)
+    return _load_prefixes(spark, path, fs, reader, fmt, part_keys, prefixes, where)
 
-    load = spark.read.format(fmt.spark_format()).options(**options)
+
+def _read_discovered(
+    spark: SparkSession, path: str, fs: FileSystem, partitions: list[Partition], reader: SparkReader
+) -> Optional[DataFrame]:
+    """Driver discovery's load of a Hive-shaped survivor set, the fast
+    path's way: prefixes under ``basePath=path`` and an exact filter on the
+    partition columns, so planning lists directories, not one path per
+    file. Returns None, for the broadcast path join of
+    :meth:`SparkReader.read`, when the survivors are not one Hive layout
+    (:func:`~fsql_spark.discovery.hive_layout`) or need more than one
+    input format.
+
+    Spark gets the survivors' leaf directories, or their ancestors at the
+    deepest level that fits its serial-listing threshold; ``path`` for a
+    read that merges schemas. The filter keeps exactly the discovered
+    leaves, and every discovered file must be among the files Spark lists.
+    When nothing survives on a Hive tree, the result is the fast path's
+    typed empty one. As on the fast path, files added to a kept directory
+    after discovery are read, and the data columns are inferred from the
+    loaded prefixes."""
+    if not partitions:
+        probed = _probe(fs, path, reader)
+        if probed is None:
+            return None  # value-only or empty tree: the schema-less empty result
+        probe_file, keys, fmt = probed
+        prefixes = [path] if _merges_schema(spark, fmt, reader.options) else _probe_leaf(path, probe_file)
+        return _load_prefixes(spark, path, fs, reader, fmt, keys, prefixes, F.lit(False))
+    layout = hive_layout(path, partitions)
+    if layout is None:
+        return None
+    keys, leaves = layout
+    fmt = _spark_format(reader, [p.url for p in partitions])
+    if fmt is None:
+        return None
+    if _merges_schema(spark, fmt, reader.options):
+        prefixes = [path]
+    else:
+        prefixes = covering_prefixes(path, keys, leaves, int(spark.conf.get(_SERIAL_LISTING)))
+    where = F.lit(True)
+    if keys:
+        # one literal split on the JVM: Column.isin makes a py4j call per
+        # value (~0.2 s for 90); "/" and NUL occur in no directory name
+        kept = F.split(F.lit("\0".join("/".join(values) for values in leaves)), "\0")
+        where = F.array_contains(kept, F.concat_ws("/", *keys))
+    discovered = {fs.spark_url(p.url) for p in partitions}
+    return _load_prefixes(spark, path, fs, reader, fmt, keys, prefixes, where, discovered)
+
+
+def _format_of(url: str) -> Optional[InputFormat]:
+    try:
+        return InputFormat.from_url(url)
+    except KeyError:
+        return None
+
+
+def _spark_format(reader: SparkReader, urls: list[str]) -> Optional[InputFormat]:
+    """The one Spark source ``reader`` reads ``urls`` with; None when they
+    need several, or one Spark has no source for (unknown suffix, xlsx,
+    feather), which the per-file driver-discovery readers handle."""
+    if reader.input_format is not InputFormat.AUTO:
+        formats = {reader.input_format}
+    else:
+        formats = {_format_of(url) for url in urls}
+    fmt = formats.pop() if len(formats) == 1 else None
+    return None if fmt in (None, InputFormat.XLSX, InputFormat.FEATHER) else fmt
+
+
+def _probe(fs: FileSystem, path: str, reader: SparkReader) -> Optional[tuple[str, list[str], InputFormat]]:
+    """The first-leaf probe's file, its Hive keys and the Spark source to
+    read the tree with; None when the tree is empty or not a Hive layout,
+    or the probe file has no Spark source."""
+    try:
+        probe_file, keys = _probe_first_leaf(fs, path)
+    except ValueError:
+        return None  # non key=value segment: not a Hive layout
+    if probe_file is None:
+        return None  # empty tree: slow path returns the canonical empty result
+    fmt = _spark_format(reader, [probe_file])
+    return None if fmt is None else (probe_file, keys, fmt)
+
+
+def _probe_leaf(path: str, probe_file: str) -> list[str]:
+    """The prefix of an all-pruned read: the probe's leaf directory keeps
+    the partition columns."""
+    leaf = probe_file.rsplit("/", 1)[0] + "/"
+    return [leaf if GLOB_CHARS.isdisjoint(leaf) else path]
+
+
+def _load_prefixes(
+    spark: SparkSession,
+    path: str,
+    fs: FileSystem,
+    reader: SparkReader,
+    fmt: InputFormat,
+    keys: list[str],
+    prefixes: list[str],
+    where: Column,
+    discovered: Optional[set[str]] = None,
+) -> Optional[DataFrame]:
+    """The one Spark load of both paths: ``prefixes`` under
+    ``basePath=path``, filtered by ``where``, partition columns last in
+    path order (a same-named data column gives way, as in the path join),
+    then the ``columns=`` projection. Returns None when Spark finds more
+    than one layout, or when a loaded file of an AUTO-format read has
+    another suffix. ``discovered`` holds the Spark URLs of the
+    discovered files: each must be among the files Spark lists."""
+    load = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **reader.options})
     if reader.schema is not None:
         load = load.schema(reader.schema)
     load = load.option("basePath", fs.spark_url(path))
@@ -223,28 +347,30 @@ def _read_fast_path(
             return None
         raise
 
-    if reader.input_format is InputFormat.AUTO:
-        # format was detected from ONE probe file; a tree mixing data formats
-        # (csv+json, which the driver-discovery path reads per-file like the
-        # reference) would be silently parsed entirely as the probe's format.
-        # inputFiles() is metadata-only (the file index is needed by the scan
-        # anyway); any file whose detected format differs — or is unknown —
-        # falls back to per-file driver discovery. Detection goes through
-        # InputFormat.from_url so compression suffixes (.json.gz) resolve to
-        # their inner format exactly like the probe did (a bare
-        # last-suffix check here silently sent every compressed tree down
-        # the slow path — caught by review; regression-tested in
-        # test_jsongz_scan_prunes_partitions).
-        def _fmt_of(f: str):
-            try:
-                return InputFormat.from_url(f)
-            except KeyError:
-                return None
+    # the format came from the probe file or the discovered files' suffixes;
+    # a tree mixing data formats (csv+json, which the path join reads per
+    # format like the reference) would be parsed entirely as ``fmt``.
+    # inputFiles() is metadata-only, and from_url resolves compression
+    # suffixes (.json.gz) as the probe did (regression-tested in
+    # test_jsongz_scan_prunes_partitions)
+    auto = reader.input_format is InputFormat.AUTO
+    files = df.inputFiles() if auto or discovered is not None else []
+    if auto and any(_format_of(f) is not fmt for f in files):
+        return None
+    # every file under the loaded prefixes: Spark applies the filter only
+    # when it plans the scan
+    missing = discovered.difference(map(unquote, files)) if discovered is not None else ()
+    if missing:
+        raise RuntimeError(
+            f"discovered file {min(missing)!r} is not among the files Spark scans: a scanned file "
+            f"matches no discovered partition when {type(fs).__name__}.spark_url does not return "
+            "the qualified URL Spark reports, or the file was deleted after discovery"
+        )
 
-        if any(_fmt_of(f) is not fmt for f in df.inputFiles()):
-            return None
-
-    return project_columns(df.where(where), reader.columns, available)
+    columns = df.columns
+    if columns[len(columns) - len(keys):] != keys:
+        df = df.select(*[c for c in columns if c not in keys], *keys)
+    return project_columns(df.where(where), reader.columns, keys)
 
 
 def read_s3_table(*args, **kwargs):

@@ -17,9 +17,13 @@ Scale positioning: this path is used ONLY where Catalyst cannot do the work —
 black-box :class:`~fsql_spark.queries.AtomicQuery` predicates and non-Hive
 layouts. It is O(#surviving-partitions) driver work over *metadata*, exactly
 like the reference; the data scan that follows is one distributed
-``spark.read.load(paths)``. Listing fan-out uses a thread pool per level,
-mirroring the reference's noted "parallelisation opportunity"
-(`partition_discovery.py:71`).
+``spark.read``. When the survivors form one Hive layout
+(:func:`hive_layout`), Spark gets their directories
+(:func:`covering_prefixes`) under ``basePath`` and an exact filter on the
+partition columns, so it lists directories the driver already judged
+instead of one path per file; otherwise it gets the file list. Listing
+fan-out uses a thread pool per level, mirroring the reference's noted
+"parallelisation opportunity" (`partition_discovery.py:71`).
 
 Hive layouts with expressible queries take the fast path instead. There
 :func:`query_prefixes` lists only the top levels, with the same pruning oracle
@@ -43,6 +47,11 @@ _LIST_POOL_SIZE = 32  # reference uses a 32-thread fetch pool (`deser.py:153`)
 # Hadoop globs every path handed to load(): a name holding one of these
 # would be read as a pattern, not as itself
 GLOB_CHARS = frozenset("*?[]{}\\")
+# names Spark's own partition discovery would bind differently from the
+# driver: it unescapes "%", and NUL separates the kept list of the exact
+# filter on the driver-discovery load
+_UNSAFE_CHARS = GLOB_CHARS | {"%", "\0"}
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -191,3 +200,48 @@ def query_prefixes(
             break
         level = children
     return [p.url for p in level]
+
+
+def hive_layout(root: str, partitions: list[Partition]) -> Optional[tuple[list[str], list[tuple[str, ...]]]]:
+    """The partition keys, in path order, and the distinct value tuples of
+    the discovered files ``partitions`` when they form one Hive layout that
+    Spark's own discovery binds the same way; None otherwise.
+
+    One layout: every file sits directly under ``root + "k1=v1/.../kn=vn/"``,
+    built from its own bindings, with the same keys in the same order for
+    every file. Bound the same way: no segment holds ``%``, a Hadoop glob
+    character or NUL, and no value is empty or the Hive null value. Reads
+    the partitions only; lists nothing.
+    """
+    if not partitions:
+        return None
+    keys = list(partitions[0].columns)
+    leaves: dict[tuple[str, ...], str] = {}
+    for p in partitions:
+        if list(p.columns) != keys:
+            return None
+        values = tuple(p.columns.values())
+        leaf = leaves.get(values)
+        if leaf is None:
+            segments = [f"{k}={v}" for k, v in zip(keys, values)]
+            if any(not v or v == _HIVE_NULL for v in values) or any(
+                not _UNSAFE_CHARS.isdisjoint(s) for s in segments
+            ):
+                return None
+            leaf = leaves[values] = root + "".join(s + "/" for s in segments)
+        name = p.url[len(leaf):]
+        if not p.url.startswith(leaf) or not name or "/" in name:
+            return None
+    return keys, list(leaves)
+
+
+def covering_prefixes(root: str, keys: list[str], leaves: list[tuple[str, ...]], serial_limit: int) -> list[str]:
+    """The directories to load for the leaf value tuples ``leaves`` of a Hive
+    layout: the leaves themselves, or, when there are more than
+    ``serial_limit`` (Spark's serial-listing threshold), their ancestors at
+    the deepest level that has no more than ``serial_limit``."""
+    heads, depth = set(leaves), len(keys)
+    while len(heads) > serial_limit and depth:
+        depth -= 1
+        heads = {values[:depth] for values in heads}
+    return [root + "".join(f"{k}={v}/" for k, v in zip(keys, head)) for head in sorted(heads)]

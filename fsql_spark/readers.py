@@ -3,11 +3,16 @@
 Mirrors the reference's pluggable ``DataReader`` polymorphism
 (``/root/reference/src/fsql/deser.py:98-162``) with a Spark-first default:
 
-- :class:`SparkReader` — THE scale path. One distributed ``spark.read`` over
-  all surviving files per input format; partition columns bound by one
-  broadcast left join on ``input_file_name()`` against a file -> binding map.
-  This subsumes the reference's DaskReader (`deser_dask.py:18-56`): Spark is
-  already lazy, one task per file split.
+- :class:`SparkReader` — THE scale path. Its ``read`` is one distributed
+  ``spark.read`` over all surviving files per input format; partition
+  columns bound by one broadcast left join on ``input_file_name()`` against
+  a file -> binding map. ``read_partitioned_table`` skips ``read`` for a
+  Hive-shaped survivor set (no ``lazy_errors``, inference off) and loads
+  its directories under ``basePath`` with the reader's format, schema,
+  options and ``columns`` instead (``api._load_prefixes``), so Spark lists
+  directories, not one path per file. This subsumes the reference's
+  DaskReader (`deser_dask.py:18-56`): Spark is already lazy, one task per
+  file split.
 - :class:`PandasReader` — fsql-parity driver-side reader (32-thread pool,
   pandas per file, partition cols appended as str, ``lazy_errors`` partial
   results, kwargs passthrough incl. ``columns=`` projection) — reference
@@ -23,7 +28,10 @@ subset loaded.
 
 DEVIATION (documented): an empty partition set returns an EMPTY result (empty
 DataFrame / dict) instead of the reference's pandas concat crash
-(`tests/test_lex_range_query.py:113-114`).
+(`tests/test_lex_range_query.py:113-114`). ``read_partitioned_table`` with a
+``SparkReader`` on a Hive tree returns the typed empty result of the fast
+path instead (the table's partition columns and the probe leaf's data
+columns); ``SparkReader.read`` itself cannot know a schema.
 """
 
 from __future__ import annotations
