@@ -14,17 +14,16 @@
 #   make fsqlcheck            - the core fsql tests (read paths, discovery,
 #                               readers, fs contract; ~1.5 min) with the
 #                               tier-1 environment
-#   make gate  ROUND=14       - strict driver-twin gate -> GATE_r<N>.json
+#   make gate                 - strict driver-twin gate -> /tmp/fsql_gate.json
 #                               (every catalog entry hash-compared against
 #                               its DuckDB oracle at the driver's sf0.01)
-#   make bench ROUND=14       - exclusive-host clean bench ->
-#                               BENCH_CLEAN_r<N>.json (+ stdout JSON line)
-#   make verify ROUND=14      - gate + bench
+#   make bench                - exclusive-host clean bench ->
+#                               /tmp/fsql_bench_detail.json (+ stdout JSON line)
+#   make verify               - gate + bench
 #
 # Run gate/bench EXCLUSIVELY (PERF.md host contract): concurrent Spark or
 # pytest on the same host pollutes wall-clocks and the calibration probes.
 
-ROUND ?= 14
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.1
 
@@ -42,17 +41,19 @@ perfcheck:
 
 FSQL_TESTS = test_path_equivalence.py test_fs_contract.py test_readers_and_write.py \
 	test_read_partitioned_table.py test_query_directed_listing.py test_daterange.py \
-	test_lex_range_query.py test_driver_prefix_load.py
+	test_lex_range_query.py test_driver_prefix_load.py test_hive_walk.py \
+	test_scale_plans.py::test_generation_skips_listing_entirely \
+	test_scale_plans.py::test_driver_discovery_prunes_listings
 
 fsqlcheck:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 		timeout -k 10 2670 $(PY) -m pytest $(addprefix tests/,$(FSQL_TESTS)) -q -p no:cacheprovider
 
 gate:
-	$(PY) tools/run_gate.py $(ROUND)
+	$(PY) tools/run_gate.py /tmp/fsql_gate.json
 
 bench:
-	SPARK_GRAFT_SF_DIR=$(SF_DIR) FSQL_BENCH_DETAIL_PATH=BENCH_CLEAN_r$(ROUND).json \
+	SPARK_GRAFT_SF_DIR=$(SF_DIR) FSQL_BENCH_DETAIL_PATH=/tmp/fsql_bench_detail.json \
 		$(PY) bench.py
 
 verify: gate bench

@@ -5,46 +5,44 @@ Spark-native reimplementation of the reference's API surface
 a "table" is just a URL prefix; partition columns come from the path; queries
 filter on partition columns only; output defaults to a (distributed) DataFrame.
 
-Execution strategy — two paths, picked from the call and the session:
+Execution strategy — two paths, picked from the call, the session and the tree:
 
-FAST PATH (Hive layouts + Catalyst-expressible query + engine session defaults):
-    ``spark.read.format(f).option("basePath", root).load(prefixes)``
-    ``.where(query.to_column())``. A short driver walk
-    (:func:`~fsql_spark.discovery.query_prefixes`) lists the tree one level
-    at a time and keeps the ``key=value`` prefixes the query cannot rule
-    out, so Spark lists only those; the ``where`` keeps the answer exact. A
-    query on no partition key, or a read that merges schemas, loads
-    ``root`` with no walk. Partition discovery, pruning,
-    predicate/projection pushdown and vectorized scans stay
-    Catalyst/Tungsten built-ins. Partition columns bind as strings
-    because ``get_spark``/``configure`` turn type inference off.
+PREFIX LOAD (Hive ``key=value`` trees read by a bare or declared
+    ``AutoParser`` or a ``DateRangeGenerator`` with ``key=value`` names, a
+    plain ``SparkReader``, partition type inference off in the session):
+    one driver walk (:func:`~fsql_spark.discovery.query_prefixes`) judges
+    the tree's directories level by level, generating the levels the
+    parser generates, and keeps the prefixes the query cannot rule out.
+    Spark runs ``spark.read.format(f).option("basePath", root)
+    .load(prefixes)`` plus a filter that keeps the answer exact:
+    ``query.to_column()`` for an expressible query, else one literal
+    ``array_contains`` over the partitions the walk judged with
+    ``eval_all``. Partition discovery, pruning, predicate/projection
+    pushdown and vectorized scans stay Catalyst/Tungsten built-ins;
+    partition columns bind as strings because ``get_spark``/``configure``
+    turn type inference off.
 
-DRIVER-DISCOVERY PATH (everything else — SURVEY §4.3): black-box
-    :class:`AtomicQuery` predicates, value-only ``FixedColumnsParser`` layouts
-    with filename columns, parser ``generate()`` grammars, non-DataFrame
-    outputs (dict / fancy-ls), ``lazy_errors``, partition type inference on
-    in the session, trees that are not one Hive layout. The driver enumerates
-    and prunes partition *metadata* exactly like the reference (O(#partitions),
-    threaded listing); the data plane stays on executors. A Hive-shaped
-    survivor set read by a plain ``SparkReader`` with inference off is loaded
-    the fast path's way: the survivors' leaf directories (or their ancestors,
-    above Spark's serial-listing threshold) under ``basePath``, plus an exact
-    filter on the partition columns, so planning lists directories instead
-    of starting a per-file listing job; every discovered file must be among
-    the files Spark lists. Any other survivor set goes to ONE distributed
-    ``spark.read`` of the file list per input format, its partition columns
-    bound, in path order, by one broadcast left join on
+DISCOVERY + PATH JOIN (everything else — SURVEY §4.3): value-only
+    ``FixedColumnsParser`` layouts with filename columns, bare-name date
+    generators, names Spark binds otherwise than the driver, trees that
+    are not one Hive layout, mixed formats, ``lazy_errors``, partition
+    type inference on in the session, and non-DataFrame outputs (pandas /
+    dict / fancy-ls). The driver enumerates and prunes partition
+    *metadata* exactly like the reference (O(#partitions), threaded
+    listing); the data plane stays on executors: ONE distributed
+    ``spark.read`` of the file list per input format, its partition
+    columns bound, in path order, by one broadcast left join on
     ``input_file_name()`` against a small file -> binding map keyed by
-    Spark's own path strings. Either way a binding replaces a same-named
-    data column.
+    Spark's own path strings.
+
+Either way a binding replaces a same-named data column.
 
 No transactional guarantees, like the reference (`api.py:33-36`): files deleted
 between discovery and read raise (soften with
-``spark.sql.files.ignoreMissingFiles`` on the file-list read). A read that
-loads directories (the fast path, and driver discovery's Hive prefix load)
-sees files added to a kept directory before the scan, and infers the data
-columns from the loaded prefixes; the file-list read sees only the files
-discovered.
+``spark.sql.files.ignoreMissingFiles`` on the file-list read). The prefix
+load sees files added to a kept directory before the scan, and infers the
+data columns from the loaded prefixes; the file-list read sees only the
+files discovered.
 """
 
 from __future__ import annotations
@@ -54,19 +52,13 @@ import warnings
 from typing import Any, Optional
 from urllib.parse import unquote
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .column_parser import AUTO_PARSER, AutoParser, ColumnParser
-from .discovery import (
-    GLOB_CHARS,
-    Partition,
-    covering_prefixes,
-    discover_partitions,
-    hive_layout,
-    query_prefixes,
-)
+from .column_parser import AUTO_PARSER, AutoParser, ColumnParser, DateRangeGenerator
+from .discovery import GLOB_CHARS, Partition, Walk, binds_alike, discover_partitions, query_prefixes
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs, is_hidden
 from .queries import Query
@@ -79,6 +71,9 @@ _SERIAL_LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 # load() conditions meaning "not one Hive layout" (e.g. the mixed-depth quirk,
 # reference `column_parser.py:106-110`): driver discovery reads such trees
 _NOT_ONE_LAYOUT = {"CONFLICTING_PARTITION_COLUMN_NAMES", "CONFLICTING_DIRECTORY_STRUCTURES"}
+# the Java cause of load()'s INTERNAL_ERROR on a "k=" directory, which the
+# path join binds as ""
+_EMPTY_VALUE = "Empty partition column value"
 
 
 def _active_spark(spark: Optional[SparkSession]) -> SparkSession:
@@ -86,17 +81,20 @@ def _active_spark(spark: Optional[SparkSession]) -> SparkSession:
 
 
 def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[Optional[str], list[str]]:
-    """Descend the first directory chain to find one data file.
+    """The first data file below ``root``, depth first in listing order, and
+    the Hive keys of the directories down to it; (None, []) when there is
+    none. A directory holding nothing visible is passed over for its next
+    sibling.
 
-    Returns (file_url, hive_keys_along_the_path). Used only to (a) autodetect
-    the input format and (b) learn the table's partition-column names for the
-    fast path. Cost: one ``ls`` per tree level — negligible vs. the scan.
-    Raises ValueError via AutoParser.parse when a segment is not ``key=value``
-    (callers fall back to driver discovery).
+    Used only to (a) autodetect the input format and (b) learn the
+    partition-column names below the walk. Cost: about one ``ls`` per
+    tree level, negligible vs. the scan. Raises ValueError when a segment
+    on the way is not ``key=value`` or a directory holds files beside
+    directories (callers fall back to driver discovery).
     """
-    url = root
-    keys: list[str] = []
-    for _ in range(max_depth):
+    stack: list[tuple[str, list[str]]] = [(root, [])]
+    while stack:
+        url, segments = stack.pop()
         files, dirs = fs.ls(url)
         files = [f for f in files if not is_hidden(f)]
         dirs = [d for d in dirs if not is_hidden(d)]  # _spark_metadata etc.
@@ -107,13 +105,10 @@ def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[O
             # driver-discovery path which reproduces the reference's union
             raise ValueError(f"mixed files and directories under {url}")
         if files:
-            return url + files[0], keys
-        if not dirs:
-            return None, keys
-        key, _value = AutoParser().parse(dirs[0])
-        keys.append(key)
-        url += dirs[0] + "/"
-    return None, keys
+            return url + files[0], [AutoParser().parse(s)[0] for s in segments]
+        if len(segments) < max_depth:
+            stack += [(url + d + "/", [*segments, d]) for d in reversed(dirs)]
+    return None, []
 
 
 def read_partitioned_table(
@@ -138,40 +133,29 @@ def read_partitioned_table(
     if not path.endswith("/") and fs.isdir(path):
         path += "/"
 
-    if _fast_path_eligible(spark, query, column_parser, reader):
-        result = _read_fast_path(spark, path, fs, query, reader)
+    loads_prefixes = _loads_prefixes(spark, column_parser, reader)
+    if loads_prefixes:
+        result = _read_prefixes(spark, path, fs, query, column_parser, reader)
         if result is not None:
             return result
-
-    root = Partition(path, {})
-    partitions = list(discover_partitions(query, column_parser, root, fs))
-    if _loads_prefixes(spark, reader):
-        result = _read_discovered(spark, path, fs, partitions, reader)
+    partitions = list(discover_partitions(query, column_parser, Partition(path, {}), fs))
+    if loads_prefixes and not partitions:
+        result = _read_empty(spark, path, fs, reader)
         if result is not None:
             return result
     return reader.read(spark, partitions, fs, InputFormat.AUTO)
 
 
-def _loads_prefixes(spark: SparkSession, reader: DataReader) -> bool:
-    """Whether a read may load Hive prefixes under ``basePath``: a plain
-    ``SparkReader`` and partition type inference off in the session (else
-    Spark would bind types)."""
+def _loads_prefixes(spark: SparkSession, parser: ColumnParser, reader: DataReader) -> bool:
+    """Whether the walk and a prefix load under ``basePath`` may serve the
+    read: a Hive-named parser, a plain ``SparkReader``, and partition type
+    inference off in the session (else Spark would bind types). Each false
+    clause names a reason for discovery + the path join."""
     return (
-        isinstance(reader, SparkReader)
+        (isinstance(parser, AutoParser) or (isinstance(parser, DateRangeGenerator) and parser.include_column_in_path))
+        and isinstance(reader, SparkReader)
         and not reader.lazy_errors
         and spark.conf.get(_TYPE_INFERENCE).strip().lower() == "false"
-    )
-
-
-def _fast_path_eligible(
-    spark: SparkSession, query: Query, parser: ColumnParser, reader: DataReader
-) -> bool:
-    """Each false clause names a reason for driver discovery."""
-    return (
-        isinstance(parser, AutoParser)
-        and parser.grammars is None  # bare AutoParser: Spark-native discovery
-        and query.expressible
-        and _loads_prefixes(spark, reader)
     )
 
 
@@ -195,87 +179,79 @@ def _merges_schema(spark: SparkSession, fmt: InputFormat, options: dict[str, Any
     return str(value).strip().lower() == "true"
 
 
-def _read_fast_path(
-    spark: SparkSession, path: str, fs: FileSystem, query: Query, reader: SparkReader
+def _read_prefixes(
+    spark: SparkSession, path: str, fs: FileSystem, query: Query, parser: ColumnParser, reader: SparkReader
 ) -> Optional[DataFrame]:
-    """Catalyst-native scan of the prefixes the query can keep; returns None
-    to signal slow-path fallback.
+    """The prefix load: the walk's prefixes under ``basePath=path``;
+    returns None to signal discovery + the path join.
 
-    The first-leaf probe gives the format and the partition keys; the walk
-    gives the prefixes, loaded under ``basePath=path`` (``path`` itself
-    when nothing was pruned) by :func:`_load_prefixes`, which the
-    driver-discovery path shares. When the query rules out every
-    partition, the probe's leaf directory is loaded under a false filter,
-    so the empty result keeps the partition columns.
+    The first-leaf probe starts from the directories the walk kept, in
+    order, and gives the format and the partition keys below the walk.
+    When nothing kept holds data, the result is :func:`_read_empty`.
 
     Without ``reader.schema``, Spark infers the data columns from the
     loaded prefixes only: parquet and orc read one footer of a kept file,
     json and csv sample the kept files. On a table whose schema drifts, the
     result's data columns can thus depend on the query; callers that need
     the table-wide schema pass ``reader.schema``. A read that merges
-    schemas (``mergeSchema``, as option or session default) skips the walk
-    and loads ``path``, so the merged schema spans every file."""
-    probed = _probe(fs, path, reader)
-    if probed is None:
+    schemas (``mergeSchema``, as option or session default) loads ``path``,
+    so the merged schema spans every file."""
+    walk = query_prefixes(query, path, parser, fs, int(spark.conf.get(_SERIAL_LISTING)))
+    if walk is None:
         return None
-    probe_file, part_keys, fmt = probed
-    if _merges_schema(spark, fmt, reader.options):
-        prefixes: Optional[list[str]] = [path]  # the merged schema spans every file
-    else:
-        prefixes = query_prefixes(query, path, part_keys, fs, int(spark.conf.get(_SERIAL_LISTING)))
-    if prefixes is None:
-        return None  # a directory the walk listed holds data files
-    where = query.to_column(frozenset(part_keys))
-    if not prefixes:
-        prefixes, where = _probe_leaf(path, probe_file), F.lit(False)
-    return _load_prefixes(spark, path, fs, reader, fmt, part_keys, prefixes, where)
+    try:
+        probe_file, keys = _first_leaf(fs, walk)
+    except ValueError:
+        return None  # not one Hive layout below a kept directory
+    if probe_file is None:
+        return _read_empty(spark, path, fs, reader)
+    fmt = _spark_format(reader, probe_file, keys)
+    if fmt is None or (len(keys) > len(walk.keys) and not isinstance(parser, AutoParser)):
+        return None  # no Spark source, a repeated key, or directories below a generator's levels
+    where = _kept_filter(walk) if walk.exact else query.to_column(frozenset(keys))
+    # a merged schema spans every file
+    prefixes = [path] if _merges_schema(spark, fmt, reader.options) else walk.prefixes
+    return _load_prefixes(spark, path, fs, reader, fmt, keys, prefixes, where, walk.exact)
 
 
-def _read_discovered(
-    spark: SparkSession, path: str, fs: FileSystem, partitions: list[Partition], reader: SparkReader
-) -> Optional[DataFrame]:
-    """Driver discovery's load of a Hive-shaped survivor set, the fast
-    path's way: prefixes under ``basePath=path`` and an exact filter on the
-    partition columns, so planning lists directories, not one path per
-    file. Returns None, for the broadcast path join of
-    :meth:`SparkReader.read`, when the survivors are not one Hive layout
-    (:func:`~fsql_spark.discovery.hive_layout`) or need more than one
-    input format.
-
-    Spark gets the survivors' leaf directories, or their ancestors at the
-    deepest level that fits its serial-listing threshold; ``path`` for a
-    read that merges schemas. The filter keeps exactly the discovered
-    leaves, and every discovered file must be among the files Spark lists.
-    When nothing survives on a Hive tree, the result is the fast path's
-    typed empty one. As on the fast path, files added to a kept directory
-    after discovery are read, and the data columns are inferred from the
-    loaded prefixes."""
-    if not partitions:
-        probed = _probe(fs, path, reader)
-        if probed is None:
-            return None  # value-only or empty tree: the schema-less empty result
-        probe_file, keys, fmt = probed
-        prefixes = [path] if _merges_schema(spark, fmt, reader.options) else _probe_leaf(path, probe_file)
-        return _load_prefixes(spark, path, fs, reader, fmt, keys, prefixes, F.lit(False))
-    layout = hive_layout(path, partitions)
-    if layout is None:
+def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkReader) -> Optional[DataFrame]:
+    """The typed empty result of a read that keeps nothing: the first-leaf
+    probe's leaf directory under a false filter, so the result keeps the
+    partition columns. None for an empty or non-Hive tree."""
+    try:
+        probe_file, keys = _probe_first_leaf(fs, path)
+    except ValueError:
         return None
-    keys, leaves = layout
-    fmt = _spark_format(reader, [p.url for p in partitions])
+    fmt = _spark_format(reader, probe_file, keys)
     if fmt is None:
         return None
-    if _merges_schema(spark, fmt, reader.options):
-        prefixes = [path]
-    else:
-        prefixes = covering_prefixes(path, keys, leaves, int(spark.conf.get(_SERIAL_LISTING)))
-    where = F.lit(True)
-    if keys:
-        # one literal split on the JVM: Column.isin makes a py4j call per
-        # value (~0.2 s for 90); "/" and NUL occur in no directory name
-        kept = F.split(F.lit("\0".join("/".join(values) for values in leaves)), "\0")
-        where = F.array_contains(kept, F.concat_ws("/", *keys))
-    discovered = {fs.spark_url(p.url) for p in partitions}
-    return _load_prefixes(spark, path, fs, reader, fmt, keys, prefixes, where, discovered)
+    leaf = probe_file.rsplit("/", 1)[0] + "/"
+    if _merges_schema(spark, fmt, reader.options) or not GLOB_CHARS.isdisjoint(leaf):
+        leaf = path
+    return _load_prefixes(spark, path, fs, reader, fmt, keys, [leaf], F.lit(False), False)
+
+
+def _first_leaf(fs: FileSystem, walk: Walk) -> tuple[Optional[str], list[str]]:
+    """The first-leaf probe from the walk's kept directories: the first
+    data file below one of them and the keys from the root down to it."""
+    for part in walk.kept:
+        try:
+            probe_file, below = _probe_first_leaf(fs, part.url)
+        except FileNotFoundError:
+            continue  # a generated directory the tree lacks
+        if probe_file is not None:
+            return probe_file, walk.keys + below
+    return None, []
+
+
+def _kept_filter(walk: Walk) -> Column:
+    """Exactly the kept partitions. One literal split on the JVM:
+    Column.isin makes a py4j call per value (~0.2 s for 90); "/" and NUL
+    occur in no kept value."""
+    if not walk.keys:
+        return F.lit(True)
+    kept = "\0".join("/".join(p.columns[k] for k in walk.keys) for p in walk.kept)
+    return F.array_contains(F.split(F.lit(kept), "\0"), F.concat_ws("/", *walk.keys))
 
 
 def _format_of(url: str) -> Optional[InputFormat]:
@@ -285,37 +261,15 @@ def _format_of(url: str) -> Optional[InputFormat]:
         return None
 
 
-def _spark_format(reader: SparkReader, urls: list[str]) -> Optional[InputFormat]:
-    """The one Spark source ``reader`` reads ``urls`` with; None when they
-    need several, or one Spark has no source for (unknown suffix, xlsx,
-    feather), which the per-file driver-discovery readers handle."""
-    if reader.input_format is not InputFormat.AUTO:
-        formats = {reader.input_format}
-    else:
-        formats = {_format_of(url) for url in urls}
-    fmt = formats.pop() if len(formats) == 1 else None
+def _spark_format(reader: SparkReader, probe_file: Optional[str], keys: list[str]) -> Optional[InputFormat]:
+    """The Spark source ``reader`` reads the tree with; None without a
+    probe file, when a key repeats (discovery raises the duplicate-key
+    error) or when Spark has no source for the file (unknown suffix,
+    xlsx, feather), which the per-file driver-discovery readers handle."""
+    if probe_file is None or len(set(keys)) < len(keys):
+        return None
+    fmt = reader.input_format if reader.input_format is not InputFormat.AUTO else _format_of(probe_file)
     return None if fmt in (None, InputFormat.XLSX, InputFormat.FEATHER) else fmt
-
-
-def _probe(fs: FileSystem, path: str, reader: SparkReader) -> Optional[tuple[str, list[str], InputFormat]]:
-    """The first-leaf probe's file, its Hive keys and the Spark source to
-    read the tree with; None when the tree is empty or not a Hive layout,
-    or the probe file has no Spark source."""
-    try:
-        probe_file, keys = _probe_first_leaf(fs, path)
-    except ValueError:
-        return None  # non key=value segment: not a Hive layout
-    if probe_file is None:
-        return None  # empty tree: slow path returns the canonical empty result
-    fmt = _spark_format(reader, [probe_file])
-    return None if fmt is None else (probe_file, keys, fmt)
-
-
-def _probe_leaf(path: str, probe_file: str) -> list[str]:
-    """The prefix of an all-pruned read: the probe's leaf directory keeps
-    the partition columns."""
-    leaf = probe_file.rsplit("/", 1)[0] + "/"
-    return [leaf if GLOB_CHARS.isdisjoint(leaf) else path]
 
 
 def _load_prefixes(
@@ -327,15 +281,15 @@ def _load_prefixes(
     keys: list[str],
     prefixes: list[str],
     where: Column,
-    discovered: Optional[set[str]] = None,
+    exact: bool,
 ) -> Optional[DataFrame]:
-    """The one Spark load of both paths: ``prefixes`` under
-    ``basePath=path``, filtered by ``where``, partition columns last in
-    path order (a same-named data column gives way, as in the path join),
-    then the ``columns=`` projection. Returns None when Spark finds more
-    than one layout, or when a loaded file of an AUTO-format read has
-    another suffix. ``discovered`` holds the Spark URLs of the
-    discovered files: each must be among the files Spark lists."""
+    """The Spark load: ``prefixes`` under ``basePath=path``, filtered by
+    ``where``, partition columns last in path order (a same-named data
+    column gives way, as in the path join), then the ``columns=``
+    projection. Returns None when Spark finds more than one layout or an
+    empty value, when a loaded file of an AUTO-format read has another
+    suffix, or when an ``exact`` read loads a directory Spark binds
+    otherwise than the path join."""
     load = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **reader.options})
     if reader.schema is not None:
         load = load.schema(reader.schema)
@@ -346,26 +300,30 @@ def _load_prefixes(
         if exc.getCondition() in _NOT_ONE_LAYOUT:
             return None
         raise
+    except Py4JJavaError as exc:
+        if _EMPTY_VALUE not in str(exc.java_exception.getCause()):
+            raise
+        return None
 
-    # the format came from the probe file or the discovered files' suffixes;
+    # inputFiles() is metadata-only. The format came from the probe file;
     # a tree mixing data formats (csv+json, which the path join reads per
-    # format like the reference) would be parsed entirely as ``fmt``.
-    # inputFiles() is metadata-only, and from_url resolves compression
-    # suffixes (.json.gz) as the probe did (regression-tested in
-    # test_jsongz_scan_prunes_partitions)
+    # format like the reference) would be parsed entirely as ``fmt``;
+    # from_url resolves compression suffixes (.json.gz) as the probe did
+    # (regression-tested in test_jsongz_scan_prunes_partitions)
     auto = reader.input_format is InputFormat.AUTO
-    files = df.inputFiles() if auto or discovered is not None else []
+    files = [unquote(f) for f in df.inputFiles()] if auto or exact else []
     if auto and any(_format_of(f) is not fmt for f in files):
         return None
-    # every file under the loaded prefixes: Spark applies the filter only
-    # when it plans the scan
-    missing = discovered.difference(map(unquote, files)) if discovered is not None else ()
-    if missing:
-        raise RuntimeError(
-            f"discovered file {min(missing)!r} is not among the files Spark scans: a scanned file "
-            f"matches no discovered partition when {type(fs).__name__}.spark_url does not return "
-            "the qualified URL Spark reports, or the file was deleted after discovery"
-        )
+    if exact:  # answer as the path join would
+        base = fs.spark_url(path)
+        for f in files:
+            if not f.startswith(base):
+                raise RuntimeError(
+                    f"scanned file {f!r} matches no discovered partition under {base!r}: "
+                    f"{type(fs).__name__}.spark_url must return the qualified URL Spark reports"
+                )
+            if not all(map(binds_alike, f[len(base):].strip("/").split("/")[:-1])):
+                return None
 
     columns = df.columns
     if columns[len(columns) - len(keys):] != keys:

@@ -5,11 +5,14 @@ Reproduces the reference's ``ColumnParser`` protocol
 *parser* (path segment -> column binding) and a *generator* (emit candidate
 segment names without listing the filesystem — static pruning, zero ``ls``).
 
-Spark positioning: the Hive-style :class:`AutoParser` fast path never calls any
-of this — ``spark.read.load(root)`` does native partition discovery. These
-classes power the driver-side discovery path for non-Hive layouts
-(:class:`FixedColumnsParser` value-only dirs + filename column), pre-declared
-partition values, and generators (SURVEY §4.3.2).
+Spark positioning: the walk of every Hive read
+(``discovery.query_prefixes``) drives an :class:`AutoParser`, bare or with
+pre-declared partition values, or a :class:`DateRangeGenerator` with
+``key=value`` names through this protocol: generated levels are named, not
+listed, and Spark's native partition discovery binds the directories below
+the kept prefixes. The driver-side crawl (``discovery.discover_partitions``)
+uses it for the rest: value-only layouts (:class:`FixedColumnsParser` dirs +
+filename column) and bare-name generators (SURVEY §4.3.2).
 """
 
 from __future__ import annotations

@@ -13,33 +13,29 @@ Reproduces the reference's recursive lazy crawl
    (``eval_available`` — the pruning oracle);
 5. recurse with ``parser.tail()``; at terminal levels bind/filter files.
 
-Scale positioning: this path is used ONLY where Catalyst cannot do the work —
-black-box :class:`~fsql_spark.queries.AtomicQuery` predicates and non-Hive
-layouts. It is O(#surviving-partitions) driver work over *metadata*, exactly
-like the reference; the data scan that follows is one distributed
-``spark.read``. When the survivors form one Hive layout
-(:func:`hive_layout`), Spark gets their directories
-(:func:`covering_prefixes`) under ``basePath`` and an exact filter on the
-partition columns, so it lists directories the driver already judged
-instead of one path per file; otherwise it gets the file list. Listing
+Two walks live here. :func:`discover_partitions` is this crawl, down to
+the files; it serves value-only layouts with filename columns, bare-name
+date generators, trees that are not one Hive layout, names Spark binds
+otherwise than the driver, and non-Spark readers, which then get the file
+list. :func:`query_prefixes` is the walk of every other Hive read: the same
+pruning oracle, ``generate()`` before ``ls`` and the same per-level pool,
+but it judges directories, not files, and stops as soon as every generated
+level and every key the query references is bound. Spark gets the kept
+prefixes under ``basePath`` (or their ancestors within its serial-listing
+threshold, :func:`covering_prefixes`), its ``InMemoryFileIndex`` lists below
+them, and a filter on the partition columns keeps the answer exact. Listing
 fan-out uses a thread pool per level, mirroring the reference's noted
 "parallelisation opportunity" (`partition_discovery.py:71`).
-
-Hive layouts with expressible queries take the fast path instead. There
-:func:`query_prefixes` lists only the top levels, with the same pruning oracle
-and the same per-level pool, and stops while the survivors still fit Spark's
-serial-listing threshold: Spark's ``InMemoryFileIndex`` then lists below the
-kept prefixes and ``PruneFileSourcePartitions`` prunes what is left. This is
-the reference's own advice (``generate()`` before ``ls``) applied to a listing.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Iterable, Iterator, Optional
+from functools import partial
+from typing import Iterator, Optional
 
-from .column_parser import ColumnParser
+from .column_parser import AutoParser, ColumnParser, DateRangeGenerator
 from .fs import FileSystem, is_hidden
 from .queries import Query
 
@@ -49,7 +45,7 @@ _LIST_POOL_SIZE = 32  # reference uses a 32-thread fetch pool (`deser.py:153`)
 GLOB_CHARS = frozenset("*?[]{}\\")
 # names Spark's own partition discovery would bind differently from the
 # driver: it unescapes "%", and NUL separates the kept list of the exact
-# filter on the driver-discovery load
+# filter
 _UNSAFE_CHARS = GLOB_CHARS | {"%", "\0"}
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -131,117 +127,156 @@ def _walk(query: Query, parser: ColumnParser, part: Partition, fs: FileSystem) -
                 yield part.expand_by(f, None)
 
 
-def _ls_level(fs: FileSystem, urls: list[str]) -> list[tuple[list[str], list[str]]]:
-    if len(urls) == 1:
-        return [fs.ls(urls[0])]
-    with ThreadPoolExecutor(min(_LIST_POOL_SIZE, len(urls))) as pool:
-        return list(pool.map(fs.ls, urls))
+def _each(fn, items: list) -> list:
+    """``fn`` over ``items``, concurrently on the listing pool when there
+    are several: on an object store each call is a request."""
+    if len(items) < 2:
+        return [fn(item) for item in items]
+    with ThreadPoolExecutor(min(_LIST_POOL_SIZE, len(items))) as pool:
+        return list(pool.map(fn, items))
+
+
+def _ls_or_empty(fs: FileSystem, url: str) -> tuple[list[str], list[str]]:
+    try:
+        return fs.ls(url)
+    except FileNotFoundError:
+        # a generated parent may name a directory the tree lacks, and a
+        # listed one may vanish before its turn: both hold nothing
+        return [], []
+
+
+def _generated_depth(parser: ColumnParser) -> int:
+    """The depth of the deepest level ``parser`` generates, 0 for none.
+    The generated names, not the tree, say which directories belong to
+    the table, so the walk binds every such level."""
+    if isinstance(parser, AutoParser):
+        return max((i + 1 for i, g in enumerate(parser.grammars or ()) if g.values), default=0)
+    return 3 if isinstance(parser, DateRangeGenerator) else 0  # year, month, day
+
+
+@dataclass
+class Walk:
+    """What a prefix load reads: the ``keys`` the walk bound, in path order;
+    the directories it ``kept`` at the deepest level it judged; the
+    ``prefixes`` Spark loads (those or their ancestors); and whether the
+    read is ``exact``, i.e. answers as the path join: ``kept`` passed
+    ``eval_all`` and every name below must :func:`binds_alike`."""
+
+    keys: list[str]
+    kept: list[Partition]
+    prefixes: list[str]
+    exact: bool
+
+
+def binds_alike(segment: str) -> bool:
+    """Whether Spark's partition discovery binds the directory ``segment``
+    as the path join does: ``key=value`` with a value neither empty nor
+    the Hive null, and no ``%`` (Spark unescapes it), Hadoop glob
+    character or NUL."""
+    _, sep, value = segment.partition("=")
+    return bool(sep and value) and value != _HIVE_NULL and _UNSAFE_CHARS.isdisjoint(segment)
 
 
 def query_prefixes(
-    query: Query, root: str, keys: list[str], fs: FileSystem, serial_limit: int
-) -> Optional[list[str]]:
-    """The directories under the Hive table ``root`` (partition ``keys``, in
-    path order) that a fast-path read has to load for ``query``.
+    query: Query, root: str, parser: ColumnParser, fs: FileSystem, serial_limit: int
+) -> Optional[Walk]:
+    """The one walk of a Hive table read: the directories under ``root``
+    that Spark loads for ``query`` under ``parser`` (a bare or declared
+    ``AutoParser``, or a ``DateRangeGenerator`` with ``key=value`` names).
 
-    Lists the tree one level at a time, each level's directories
-    concurrently, and keeps each ``key=value`` child that ``eval_available``
-    cannot rule out. It goes one level deeper only while the query still
-    references a key at or below it, the level just listed pruned
-    something, and the survivors fit ``serial_limit`` (Spark's
-    serial-listing threshold: more paths than that start a listing job).
-    When the survivors do not fit, their parents are returned instead.
+    Goes down one level at a time while a generated level or a key the
+    query references is still unbound. A level ``parser`` generates is
+    named, not listed; any other is listed, each of its directories
+    concurrently. Each ``key=value`` child that ``eval_available`` cannot
+    rule out is kept.
 
-    Returns ``[root]`` when nothing is gained or a name cannot be judged
-    (not ``key=value`` under the expected key, or a glob character), and
-    after a listing race, so that ``load`` reports the missing path. A
-    value holding ``%`` is kept unpruned and unbound: Spark unescapes it,
-    so the raw name is not the value. Returns ``None`` when a directory it
-    lists below ``root`` holds data files (not one Hive layout), and ``[]``
-    when the query rules out every partition.
+    A bare ``AutoParser`` read with an expressible query answers as Spark's
+    own partition discovery, narrowed by ``query.to_column``; so the walk
+    also stops at a level that pruned nothing (its parents load the same
+    files in fewer paths) or whose survivors exceed ``serial_limit``
+    (Spark's serial-listing threshold: more paths than that start a
+    listing job). A name it cannot judge (not ``key=value`` under the
+    level's key, or a Hadoop glob character) loads the whole ``root``; a
+    ``%`` value is kept unpruned and unbound, since Spark unescapes it.
+
+    Every other read is ``exact``, answering as the path join: the
+    survivors are judged with ``eval_all`` and loaded, or their ancestors
+    within ``serial_limit`` (:func:`covering_prefixes`) are; a loaded
+    prefix ending in a generated level is checked to exist. A name that
+    is not ``key=value`` or that Spark would bind otherwise than the
+    driver (:func:`binds_alike`) returns None.
+
+    Either way a listed level that holds data files returns None, beside
+    or instead of the next key's directories, unless it is the root of an
+    unpartitioned table: loading the kept prefixes could hide a key from
+    Spark's layout check.
     """
-    level = [Partition(root, {})]
+    must = _generated_depth(parser)
+    # a bare AutoParser with an expressible query answers as Spark's own
+    # partition discovery; every other read answers as the path join
+    exact = not (query.expressible and isinstance(parser, AutoParser) and parser.grammars is None)
     referenced = query.referenced_columns()
-    for depth, key in enumerate(keys):
-        if not level or referenced.isdisjoint(keys[depth:]):
-            break
-        try:
-            listings = _ls_level(fs, [p.url for p in level])
-        except FileNotFoundError:
-            return [root]
-        kept: list[list[Partition]] = []
-        listed, holds_files = 0, False
-        for part, (files, dirs) in zip(level, listings):
-            holds_files = holds_files or not all(map(is_hidden, files))
-            survivors = []
-            for d in dirs:
-                if is_hidden(d):
-                    continue
-                name, sep, value = d.partition("=")
-                if not sep or name != key or not GLOB_CHARS.isdisjoint(d):
-                    return [root]
-                listed += 1
+    keys: list[str] = []
+    generated: list[bool] = []
+    level = [(Partition(root, {}), parser)]
+    depth = None  # set when an expressible walk stops above its survivors
+    while level and (len(keys) < must or not referenced.issubset(keys)):
+        names = [p.generate() for _, p in level]
+        generated.append(names[0] is not None)
+        if not generated[-1]:
+            listings = _each(partial(_ls_or_empty, fs), [part.url for part, _ in level])
+            names = [[d for d in dirs if not is_hidden(d)] for _, dirs in listings]
+            if not all(is_hidden(f) for files, _ in listings for f in files):
+                if keys or any(names):
+                    return None
+                break  # an unpartitioned table
+        key, judged, children = None, 0, []
+        for (part, p), segments in zip(level, names):
+            for segment in segments:
+                name, sep, value = segment.partition("=")
+                key = name if key is None else key
+                if not sep or name != key or not GLOB_CHARS.isdisjoint(segment):
+                    return None if exact else Walk([], [Partition(root, {})], [root], False)
+                if exact and not binds_alike(segment):
+                    return None
+                judged += 1
                 if "%" in value:
-                    survivors.append(Partition(part.url + d + "/", part.columns))
-                    continue
-                child = part.expand_by(d + "/", (key, value))
-                if query.eval_available(child.columns):
-                    survivors.append(child)
-            kept.append(survivors)
-        if holds_files:
-            # files beside or instead of the next key's directories: loading
-            # the kept prefixes could hide that key from Spark's layout check
-            return None
-        if sum(map(len, kept)) == listed:
-            break  # nothing pruned: this level loads the same files in fewer paths
-        children = [c for survivors in kept for c in survivors]
-        if len(children) > serial_limit:
-            level = [p for p, survivors in zip(level, kept) if survivors]
-            break
+                    child = Partition(part.url + segment + "/", part.columns)
+                else:
+                    child = part.expand_by(segment + "/", (key, value))
+                    if not query.eval_available(child.columns):
+                        continue
+                children.append((child, p.tail(child.columns)))
         level = children
-    return [p.url for p in level]
+        if key is None:
+            break  # nothing below the kept directories
+        keys.append(key)
+        if not exact and (len(children) == judged or len(children) > serial_limit):
+            depth = len(keys) - 1  # the parents: the same files in fewer paths, or few enough
+            break
+    kept = [part for part, _ in level]
+    if exact:
+        kept = [part for part in kept if query.eval_all(part.columns)]
+    depth = len(keys) if depth is None else depth
+    depth, prefixes = covering_prefixes(root, [p.url for p in kept], depth, serial_limit)
+    if depth and generated[depth - 1]:
+        prefixes = [url for url, found in zip(prefixes, _each(fs.isdir, prefixes)) if found]
+        found = set(prefixes)
+        kept = [part for part in kept if _ancestor(root, part.url, depth) in found]
+    return Walk(keys, kept, prefixes, exact)
 
 
-def hive_layout(root: str, partitions: list[Partition]) -> Optional[tuple[list[str], list[tuple[str, ...]]]]:
-    """The partition keys, in path order, and the distinct value tuples of
-    the discovered files ``partitions`` when they form one Hive layout that
-    Spark's own discovery binds the same way; None otherwise.
-
-    One layout: every file sits directly under ``root + "k1=v1/.../kn=vn/"``,
-    built from its own bindings, with the same keys in the same order for
-    every file. Bound the same way: no segment holds ``%``, a Hadoop glob
-    character or NUL, and no value is empty or the Hive null value. Reads
-    the partitions only; lists nothing.
-    """
-    if not partitions:
-        return None
-    keys = list(partitions[0].columns)
-    leaves: dict[tuple[str, ...], str] = {}
-    for p in partitions:
-        if list(p.columns) != keys:
-            return None
-        values = tuple(p.columns.values())
-        leaf = leaves.get(values)
-        if leaf is None:
-            segments = [f"{k}={v}" for k, v in zip(keys, values)]
-            if any(not v or v == _HIVE_NULL for v in values) or any(
-                not _UNSAFE_CHARS.isdisjoint(s) for s in segments
-            ):
-                return None
-            leaf = leaves[values] = root + "".join(s + "/" for s in segments)
-        name = p.url[len(leaf):]
-        if not p.url.startswith(leaf) or not name or "/" in name:
-            return None
-    return keys, list(leaves)
+def _ancestor(root: str, url: str, depth: int) -> str:
+    return root + "".join(s + "/" for s in url[len(root):].split("/")[:depth])
 
 
-def covering_prefixes(root: str, keys: list[str], leaves: list[tuple[str, ...]], serial_limit: int) -> list[str]:
-    """The directories to load for the leaf value tuples ``leaves`` of a Hive
-    layout: the leaves themselves, or, when there are more than
-    ``serial_limit`` (Spark's serial-listing threshold), their ancestors at
-    the deepest level that has no more than ``serial_limit``."""
-    heads, depth = set(leaves), len(keys)
-    while len(heads) > serial_limit and depth:
+def covering_prefixes(root: str, urls: list[str], depth: int, serial_limit: int) -> tuple[int, list[str]]:
+    """The level and the directories to load for the directories ``urls``
+    under ``root``: their ancestors ``depth`` levels down, or, when those
+    are more than ``serial_limit`` (Spark's serial-listing threshold), the
+    ancestors at the deepest level that has no more."""
+    while True:
+        heads = sorted({_ancestor(root, url, depth) for url in urls})
+        if len(heads) <= serial_limit or not depth:
+            return depth, heads
         depth -= 1
-        heads = {values[:depth] for values in heads}
-    return [root + "".join(f"{k}={v}/" for k, v in zip(keys, head)) for head in sorted(heads)]

@@ -21,10 +21,10 @@ Paths exercised per entry:
   tuple-range expansion over year/month.
 - ``q_fsql_eq_in_pushdown`` — FAST PATH: Q_AND/Q_EQ/Q_IN + ``columns=``
   projection pushdown.
-- ``q_fsql_atomic_discovery`` — DRIVER DISCOVERY: black-box AtomicQuery
-  evaluated over enumerated partition bindings, then one distributed scan.
-- ``q_fsql_generated_scan`` — DRIVER DISCOVERY with zero-``ls`` partition
-  GENERATION (DateRangeGenerator) + DateRangeQuery file-level filter.
+- ``q_fsql_atomic_discovery`` — THE WALK: black-box AtomicQuery evaluated
+  over the bound year/month directories, then one distributed scan.
+- ``q_fsql_generated_scan`` — THE WALK with zero-``ls`` partition
+  GENERATION (DateRangeGenerator) + DateRangeQuery.
 - ``q_fsql_fixed_columns`` — DRIVER DISCOVERY: value-only layout +
   filename-as-column (FixedColumnsParser), files written via write_object.
 """
@@ -465,10 +465,10 @@ GROUP BY 1
 
 
 def q_fsql_atomic_discovery(spark: SparkSession, sf: str) -> DataFrame:
-    """DRIVER DISCOVERY: black-box Python predicate (AtomicQuery) — Catalyst
-    can't push it, so the engine prunes enumerated partition bindings
-    driver-side (O(#partitions), like the reference) and hands surviving
-    paths to ONE distributed scan (SURVEY §4.3.1)."""
+    """Black-box Python predicate (AtomicQuery) — Catalyst can't push it, so
+    the engine's walk judges the bound year/month directories driver-side
+    (O(#partitions), like the reference) and hands the survivors to ONE
+    distributed scan (SURVEY §4.3.1)."""
     url = _orders_ym_tree(spark, sf)
     query = AtomicQuery(lambda year, month: int(month) % 3 == 0 and int(year) >= 1999)
     df = read_partitioned_table(url, query, spark=spark)
@@ -491,10 +491,10 @@ GROUP BY 1, 2
 
 
 def q_fsql_generated_scan(spark: SparkSession, sf: str) -> DataFrame:
-    """DRIVER DISCOVERY with zero-``ls`` partition GENERATION: the
-    DateRangeGenerator synthesizes candidate y/m/d segments instead of
-    listing (reference `daterange_utils.py:90-180`); the DateRangeQuery
-    applies the exact [start, end) file-level filter."""
+    """Zero-``ls`` partition GENERATION: the DateRangeGenerator synthesizes
+    candidate y/m/d segments instead of listing (reference
+    `daterange_utils.py:90-180`); the DateRangeQuery applies the exact
+    [start, end) filter."""
     url = _orders_ymd_tree(spark, sf)
     start, end = "1995/07/01", "1995/09/15"
     df = read_partitioned_table(

@@ -155,9 +155,9 @@ def drop_partitions(
     (``LocalFileSystem.rmtree`` deliberately ignores errors for staging
     cleanup — an erasure API must not). Emptied ancestor directories are
     then pruned up to (never including) the table root: a leftover empty
-    leading directory would otherwise dead-end the Catalyst fast path's
-    first-leaf probe and silently demote every future read of the table to
-    driver-side discovery.
+    directory holds no data, yet every later read whose walk keeps it
+    lists it, and the first-leaf probe spends an ``ls`` on it before
+    moving on to the next sibling.
 
     This intentionally has no Spark job: deletion is driver-side metadata
     work, O(matched files) like discovery itself."""

@@ -177,7 +177,7 @@ def q_source_js_divergence(spark: SparkSession, sf: str) -> DataFrame:
     still alive, leaves the corpus scanned twice (vocab + filter) and the
     six downstream references reading a kilobytes-sized cached relation.
     r14 collected ``kept`` to the driver and re-fed it as a local table;
-    the paired A/B (OPTIMIZATION_r15.md) showed the driver round-trip +
+    a paired A/B showed the driver round-trip +
     local-plan jobs LOSING to a distributed persist of the same cut
     (med 2.19 s vs 3.63/3.25 for the r14/r13 shapes), and at 100 TB the
     collect is exactly the driver-materialization anti-pattern (guide §5).

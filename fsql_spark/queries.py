@@ -8,13 +8,13 @@ compiles via :meth:`Query.to_column`, so the fast path is a plain
 does the rest. The Python-side ``eval_all``/``eval_available`` pair is
 retained for:
 
-- the fast path's listing walk (``discovery.query_prefixes``), which asks
-  ``eval_available`` which ``key=value`` prefixes to hand to Spark;
+- the listing walk of every Hive read (``discovery.query_prefixes``), which
+  asks ``eval_available`` which ``key=value`` prefixes to hand to Spark;
 
 - black-box predicates (:class:`AtomicQuery` — reference `query.py:46-63`),
-  which Catalyst cannot push into partition pruning; these run driver-side
-  over enumerated partition bindings, exactly the O(#partitions) work the
-  reference does, then the surviving paths feed one distributed scan;
+  which Catalyst cannot push into partition pruning; the walk judges them
+  driver-side over the bound directories with ``eval_all``, and one literal
+  list of the kept partitions filters the one distributed scan;
 - non-Hive layouts handled by driver-side discovery (see ``discovery.py``).
 
 Semantics contract (all from the reference):

@@ -7,10 +7,10 @@ Mirrors the reference's pluggable ``DataReader`` polymorphism
   ``spark.read`` over all surviving files per input format; partition
   columns bound by one broadcast left join on ``input_file_name()`` against
   a file -> binding map. ``read_partitioned_table`` skips ``read`` for a
-  Hive-shaped survivor set (no ``lazy_errors``, inference off) and loads
-  its directories under ``basePath`` with the reader's format, schema,
-  options and ``columns`` instead (``api._load_prefixes``), so Spark lists
-  directories, not one path per file. This subsumes the reference's
+  Hive-layout read (no ``lazy_errors``, inference off): it loads the
+  directories its walk kept under ``basePath`` with the reader's format,
+  schema, options and ``columns`` instead (``api._load_prefixes``), so
+  Spark lists directories, not one path per file. This subsumes the reference's
   DaskReader (`deser_dask.py:18-56`): Spark is already lazy, one task per
   file split.
 - :class:`PandasReader` — fsql-parity driver-side reader (32-thread pool,

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from fsql_spark import AtomicQuery, read_partitioned_table, write_table
-from fsql_spark.column_parser import AUTO_PARSER, DateRangeGenerator, FixedColumnsParser
-from fsql_spark.discovery import Partition, discover_partitions, hive_layout
+from fsql_spark.column_parser import AUTO_PARSER, AutoParser, DateRangeGenerator, FixedColumnsParser
+from fsql_spark.discovery import Partition, discover_partitions
 from fsql_spark.formats import InputFormat
 from fsql_spark.fs import LocalFileSystem
 from fsql_spark.queries import DateRangeQuery, Q_EQ, Q_TRUE
@@ -92,6 +92,19 @@ def _date_read(rng, leaves):
     return DateRangeQuery(start, end), DateRangeGenerator.build(start, end)
 
 
+def _declared(rng, leaves):
+    """A from_str grammar declaring the year and month of one of the tree's
+    leaves plus a random share of the others; the day level is listed."""
+    year, month, _ = rng.choice(leaves)
+
+    def some(value, values):
+        others = sorted(set(values) - {value})
+        return ",".join([value, *rng.sample(others, rng.randint(0, len(others)))])
+
+    spec = f"year=[{some(year, [l[0] for l in leaves])}]/month=[{some(month, [l[1] for l in leaves])}]/day"
+    return Q_TRUE, AutoParser.from_str(spec)
+
+
 @pytest.fixture()
 def join_calls(monkeypatch):
     """How often the read took the broadcast path join."""
@@ -112,14 +125,14 @@ def test_prefix_load_equals_path_join(spark, tmp_path, join_calls):
     branches = {"leaves": 0, "ancestors": 0}
     for root in (tmp_path / "spark0", tmp_path / "spark1", tmp_path / "shadow"):
         leaves = _shadow_tree(rng, root) if root.name == "shadow" else _spark_tree(spark, rng, root)
-        for make in [_atomic] * 5 + [_date_read] * 3:
+        for make in [_atomic] * 5 + [_date_read] * 3 + [_declared] * 2:
             query, parser = make(rng, leaves)
             parts = list(discover_partitions(query, parser, Partition(f"{root}/", {}), fs))
             want = SparkReader().read(spark, parts, fs, InputFormat.AUTO)
             before = len(join_calls)
             got = read_partitioned_table(str(root), query, column_parser=parser, spark=spark)
             if len(join_calls) == before:  # the prefix load
-                kept = len(hive_layout(f"{root}/", parts)[1])
+                kept = len({tuple(p.columns.values()) for p in parts})
                 branches["leaves" if kept <= SERIAL_LIMIT else "ancestors"] += 1
             where = f"{root.name}: {query}"
             assert want.columns and got.columns == want.columns, where

@@ -234,7 +234,8 @@ def test_fast_path_restores_caller_conf(spark, tmp_path):
 def test_library_sets_no_session_conf(spark, tmp_path, monkeypatch, call):
     """Reads, compaction and dynamic overwrite say what they need on the call
     itself: none writes a session-wide conf, which every other client of the
-    same session would see. Only the AtomicQuery read takes driver discovery."""
+    same session would see. No read takes driver discovery: the AtomicQuery
+    read walks the Hive tree like the others."""
     from pyspark.sql import functions as F
     from pyspark.sql.conf import RuntimeConfig
 
@@ -270,18 +271,19 @@ def test_library_sets_no_session_conf(spark, tmp_path, monkeypatch, call):
     out = read_partitioned_table(root, query, spark=spark)
     assert dict(out.dtypes)["p"] == "string"
     assert sorted(r.id for r in out.collect()) == ([99] if call == "overwrite_partitions" else [1, 4])
-    assert discovered == ([query] if call == "driver_read" else [])
+    assert discovered == []
     if call == "overwrite_partitions":  # the other partitions are untouched
         assert read_partitioned_table(root, Q_TRUE, spark=spark).count() == 5
 
 
 @pytest.mark.parametrize("inference", ["false", "true"])
 def test_threads_share_one_session(spark, tmp_path, monkeypatch, inference):
-    """Four threads on one session: two fast-path-shaped reads, one
-    driver-discovery read and the caller's own ``spark.read``. Every answer
-    is checked; the caller's reads follow the caller's conf every time, and
-    the conf is unchanged afterwards. With inference on, the library takes
-    driver discovery for every read instead of flipping the conf."""
+    """Four threads on one session: two expressible reads, one AtomicQuery
+    read and the caller's own ``spark.read``. Every answer is checked; the
+    caller's reads follow the caller's conf every time, and the conf is
+    unchanged afterwards. With inference off, every library read loads
+    prefixes; with it on, the library takes driver discovery for every
+    read instead of flipping the conf."""
     import sys
     import threading
     from concurrent.futures import ThreadPoolExecutor
@@ -343,7 +345,7 @@ def test_threads_share_one_session(spark, tmp_path, monkeypatch, inference):
         pool.shutdown(wait=False, cancel_futures=True)
         sys.setswitchinterval(switch)
         spark.conf.set(key, old)
-    assert len(discoveries) == (3 * rounds if inference == "true" else rounds)
+    assert len(discoveries) == (3 * rounds if inference == "true" else 0)
 
 
 def _read_atomic(spark, root):

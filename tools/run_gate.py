@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Full strict driver-twin gate over the whole catalog at the driver's
-scale — the round-closing artifact (GATE_r{N}.json, COVERAGE.md ritual).
+scale (``make gate``, COVERAGE.md ritual).
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 at sf0.01 via tests/driver_mimic.compare (the exact hash the driver
@@ -8,23 +8,24 @@ computes), one JSON object per entry plus a ``_summary`` row. Previously
 assembled ad hoc each round; committed so the artifact is reproducible.
 
 Run EXCLUSIVELY (PERF.md host contract).
-Usage: python tools/run_gate.py <round-number> [out.json] [sf_dir]
+Usage: python tools/run_gate.py [out.json] [sf_dir]
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "tests"))
 
 
 def main() -> None:
-    rnd = int(sys.argv[1])
-    out_path = sys.argv[2] if len(sys.argv) > 2 else f"GATE_r{rnd}.json"
-    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/fsql_gate.json"
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
     import __spark_entry__ as entry_mod
     import fsql_spark as fq
@@ -57,8 +58,7 @@ def main() -> None:
         "hash_green": green,
         "total_wall": wall,
         "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]),
-        "round": rnd,
-        "note": f"round-{rnd} strict gate over the full {len(names)}-entry "
+        "note": f"strict gate over the full {len(names)}-entry "
                 "catalog (driver-twin compare, tests/driver_mimic)",
     }}
     out.update(dict(sorted(results.items())))
