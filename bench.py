@@ -497,15 +497,17 @@ def main() -> None:
     # block) — and the same payload is mirrored to the legacy
     # BENCH_DETAIL.json name for anything that greps the old path. The
     # compact line names the per-run file in its "detail" field.
-    # FSQL_BENCH_DETAIL_PATH still redirects the artifact so a builder's
-    # exclusive-host clean bench (BENCH_CLEAN_r{N}.json) and the driver's
-    # post-round run can't overwrite each other (r11: the driver's
-    # contended run clobbered the working-tree clean copy).
+    # FSQL_BENCH_DETAIL_PATH redirects the artifact, and then it is the
+    # only file written: a run outside the checkout (``make bench``) leaves
+    # the tree clean.
     base_dir = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.environ.get("FSQL_BENCH_DETAIL_PATH") or os.path.join(
-        base_dir, f"BENCH_DETAIL_c{cpus}_{order_seed}.json"
-    )
-    for path in dict.fromkeys([detail_path, os.path.join(base_dir, "BENCH_DETAIL.json")]):
+    detail_paths = [os.environ.get("FSQL_BENCH_DETAIL_PATH")]
+    if not detail_paths[0]:
+        detail_paths = [
+            os.path.join(base_dir, f"BENCH_DETAIL_c{cpus}_{order_seed}.json"),
+            os.path.join(base_dir, "BENCH_DETAIL.json"),
+        ]
+    for path in detail_paths:
         try:
             with open(path, "w") as f:
                 json.dump(out, f, indent=1, sort_keys=True)
@@ -532,7 +534,7 @@ def main() -> None:
         "calibration_class": out["calibration_class"],
         "family_normalized": out["family_normalized"],
         "entry_order_seed": order_seed,
-        "detail": os.path.basename(detail_path),
+        "detail": os.path.basename(detail_paths[0]),
     }
     if probe_ticks:
         ticks = sorted(probe_ticks.values())

@@ -58,9 +58,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .column_parser import AUTO_PARSER, AutoParser, ColumnParser, DateRangeGenerator
-from .discovery import GLOB_CHARS, Partition, Walk, binds_alike, discover_partitions, query_prefixes
+from .discovery import GLOB_CHARS, Partition, Walk, binds_alike, discover_partitions, list_level, query_prefixes
 from .formats import InputFormat
-from .fs import FileSystem, get_url_and_fs, is_hidden
+from .fs import FileSystem, get_url_and_fs
 from .queries import Query
 from .readers import DataReader, SparkReader, SPARK_READER, project_columns
 from .session import get_spark
@@ -83,8 +83,8 @@ def _active_spark(spark: Optional[SparkSession]) -> SparkSession:
 def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[Optional[str], list[str]]:
     """The first data file below ``root``, depth first in listing order, and
     the Hive keys of the directories down to it; (None, []) when there is
-    none. A directory holding nothing visible is passed over for its next
-    sibling.
+    none. A directory holding nothing visible, or missing, is passed over
+    for its next sibling.
 
     Used only to (a) autodetect the input format and (b) learn the
     partition-column names below the walk. Cost: about one ``ls`` per
@@ -95,9 +95,7 @@ def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[O
     stack: list[tuple[str, list[str]]] = [(root, [])]
     while stack:
         url, segments = stack.pop()
-        files, dirs = fs.ls(url)
-        files = [f for f in files if not is_hidden(f)]
-        dirs = [d for d in dirs if not is_hidden(d)]  # _spark_metadata etc.
+        [(files, dirs)] = list_level(fs, [(Partition(url), AUTO_PARSER)])  # a bare parser lists
         if files and dirs:
             # mixed files+dirs at one level: the bare-AutoParser mixed-depth
             # quirk (reference `column_parser.py:106-110`) — Spark's native
@@ -140,9 +138,7 @@ def read_partitioned_table(
             return result
     partitions = list(discover_partitions(query, column_parser, Partition(path, {}), fs))
     if loads_prefixes and not partitions:
-        result = _read_empty(spark, path, fs, reader)
-        if result is not None:
-            return result
+        return _read_empty(spark, path, fs, reader)
     return reader.read(spark, partitions, fs, InputFormat.AUTO)
 
 
@@ -187,7 +183,9 @@ def _read_prefixes(
 
     The first-leaf probe starts from the directories the walk kept, in
     order, and gives the format and the partition keys below the walk.
-    When nothing kept holds data, the result is :func:`_read_empty`.
+    When nothing kept holds data, discovery would keep nothing either: the
+    result is :func:`_read_empty`, or no partitions when the probe ran from
+    ``path`` itself.
 
     Without ``reader.schema``, Spark infers the data columns from the
     loaded prefixes only: parquet and orc read one footer of a kept file,
@@ -203,6 +201,8 @@ def _read_prefixes(
         probe_file, keys = _first_leaf(fs, walk)
     except ValueError:
         return None  # not one Hive layout below a kept directory
+    if probe_file is None and walk.kept and not walk.keys:
+        return reader.read(spark, [], fs, InputFormat.AUTO)  # the probe ran from path
     if probe_file is None:
         return _read_empty(spark, path, fs, reader)
     fmt = _spark_format(reader, probe_file, keys)
@@ -214,31 +214,29 @@ def _read_prefixes(
     return _load_prefixes(spark, path, fs, reader, fmt, keys, prefixes, where, walk.exact)
 
 
-def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkReader) -> Optional[DataFrame]:
+def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkReader) -> DataFrame:
     """The typed empty result of a read that keeps nothing: the first-leaf
     probe's leaf directory under a false filter, so the result keeps the
-    partition columns. None for an empty or non-Hive tree."""
+    partition columns; no partitions for an empty or non-Hive tree."""
     try:
         probe_file, keys = _probe_first_leaf(fs, path)
     except ValueError:
-        return None
+        probe_file, keys = None, []
     fmt = _spark_format(reader, probe_file, keys)
-    if fmt is None:
-        return None
-    leaf = probe_file.rsplit("/", 1)[0] + "/"
-    if _merges_schema(spark, fmt, reader.options) or not GLOB_CHARS.isdisjoint(leaf):
-        leaf = path
-    return _load_prefixes(spark, path, fs, reader, fmt, keys, [leaf], F.lit(False), False)
+    result = None
+    if fmt is not None:
+        leaf = probe_file.rsplit("/", 1)[0] + "/"
+        if _merges_schema(spark, fmt, reader.options) or not GLOB_CHARS.isdisjoint(leaf):
+            leaf = path
+        result = _load_prefixes(spark, path, fs, reader, fmt, keys, [leaf], F.lit(False), False)
+    return result if result is not None else reader.read(spark, [], fs, InputFormat.AUTO)
 
 
 def _first_leaf(fs: FileSystem, walk: Walk) -> tuple[Optional[str], list[str]]:
     """The first-leaf probe from the walk's kept directories: the first
     data file below one of them and the keys from the root down to it."""
     for part in walk.kept:
-        try:
-            probe_file, below = _probe_first_leaf(fs, part.url)
-        except FileNotFoundError:
-            continue  # a generated directory the tree lacks
+        probe_file, below = _probe_first_leaf(fs, part.url)
         if probe_file is not None:
             return probe_file, walk.keys + below
     return None, []

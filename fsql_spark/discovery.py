@@ -1,7 +1,8 @@
 """Driver-side partition discovery: crawl + prune for the non-Catalyst paths.
 
-Reproduces the reference's recursive lazy crawl
-(``/root/reference/src/fsql/partition_discovery.py:48-90``):
+Reproduces the reference's lazy crawl
+(``/root/reference/src/fsql/partition_discovery.py:48-90``), one level of
+the tree at a time:
 
 1. if the parser can ``generate()`` candidate segment names, synthesize the
    listing without touching the filesystem (static pruning, zero ``ls``);
@@ -11,21 +12,22 @@ Reproduces the reference's recursive lazy crawl
    `partition.py:15-21`);
 4. prune subtrees whose bindings already falsify the query
    (``eval_available`` — the pruning oracle);
-5. recurse with ``parser.tail()``; at terminal levels bind/filter files.
+5. go down with ``parser.tail()``; at terminal levels bind/filter files.
 
-Two walks live here. :func:`discover_partitions` is this crawl, down to
-the files; it serves value-only layouts with filename columns, bare-name
-date generators, trees that are not one Hive layout, names Spark binds
-otherwise than the driver, and non-Spark readers, which then get the file
-list. :func:`query_prefixes` is the walk of every other Hive read: the same
-pruning oracle, ``generate()`` before ``ls`` and the same per-level pool,
-but it judges directories, not files, and stops as soon as every generated
-level and every key the query references is bound. Spark gets the kept
-prefixes under ``basePath`` (or their ancestors within its serial-listing
-threshold, :func:`covering_prefixes`), its ``InMemoryFileIndex`` lists below
-them, and a filter on the partition columns keeps the answer exact. Listing
-fan-out uses a thread pool per level, mirroring the reference's noted
-"parallelisation opportunity" (`partition_discovery.py:71`).
+One listing loop serves every driver walk: :func:`list_level` does steps 1
+and 2 for a whole level, its ``ls`` calls on one pool of at most 32 threads
+per level, the reference's fetch pool and its noted "parallelisation
+opportunity" (`partition_discovery.py:71`). :func:`discover_partitions`
+goes down to the files; it serves value-only layouts with filename
+columns, bare-name date generators, trees that are not one Hive layout,
+names Spark binds otherwise than the driver, non-Spark readers (which
+then get the file list) and the maintenance calls. :func:`query_prefixes`
+is the walk of every other Hive read: it judges directories, not files,
+and stops as soon as every generated level and every key the query
+references is bound. Spark gets the kept prefixes under ``basePath`` (or
+their ancestors within its serial-listing threshold,
+:func:`covering_prefixes`), its ``InMemoryFileIndex`` lists below them, and
+a filter on the partition columns keeps the answer exact.
 """
 
 from __future__ import annotations
@@ -72,59 +74,47 @@ class Partition:
 def discover_partitions(
     query: Query, parser: ColumnParser, root: Partition, fs: FileSystem
 ) -> Iterator[Partition]:
-    """Yield terminal (file-level) partitions surviving the query."""
+    """Yield terminal (file-level) partitions surviving the query, in the
+    order of a depth-first crawl: listing order (generated names in
+    generated order), a directory's subdirectory partitions before its own
+    files. The crawl goes level by level, so each partition carries its
+    position in that order and one sort restores it."""
     if not root.url.endswith("/"):
         root = Partition(root.url + "/", root.columns)
-    yield from _walk(query, parser, root, fs)
+    level: list[tuple[Partition, ColumnParser, tuple[int, ...]]] = [(root, parser, ())]
+    found: list[tuple[tuple[int, ...], Partition]] = []
+    while level:
+        children = []
+        listings = list_level(fs, [(part, p) for part, p, _ in level])
+        for (part, p, at), (files, dirs) in zip(level, listings):
+            for i, d in enumerate(dirs):
+                child = part.expand_by(d + "/", p.parse(d))
+                if query.eval_available(child.columns):
+                    children.append((child, p.tail(child.columns), (*at, i)))
+            numbered = list(enumerate(files, len(dirs)))  # files follow the subdirectories
+            if p.is_terminal_level() and p.parses_filenames():
+                candidates = [(j, part.expand_by(f, p.parse(f))) for j, f in numbered]
+                found += [((*at, j), c) for j, c in candidates if query.eval_all(c.columns)]
+            elif p.is_terminal_level() and query.eval_all(part.columns):
+                found += [((*at, j), part.expand_by(f, None)) for j, f in numbered]
+        level = children
+    found.sort(key=lambda item: item[0])
+    yield from (part for _, part in found)
 
 
-def _walk(query: Query, parser: ColumnParser, part: Partition, fs: FileSystem) -> Iterator[Partition]:
-    generated = parser.generate()
-    if generated is not None:
-        if parser.is_terminal_level():
-            files, dirs = list(generated), []
-        else:
-            files, dirs = [], list(generated)
-    else:
-        try:
-            files, dirs = fs.ls(part.url)
-        except FileNotFoundError:
-            # a GENERATED parent (zero-ls candidate synthesis) may name a
-            # partition that holds no data — e.g. a DateRangeGenerator day
-            # with no files. Treat as empty instead of crashing; listings of
-            # real (listed) parents can't hit this outside delete races.
-            files, dirs = [], []
-        # Spark's convention: metadata paths (_spark_metadata, _SUCCESS,
-        # .crc, ...) are invisible to table readers; _key=value is not
-        files = [f for f in files if not is_hidden(f)]
-        dirs = [d for d in dirs if not is_hidden(d)]
-
-    survivors = []
-    for d in dirs:
-        child = part.expand_by(d + "/", parser.parse(d))
-        if query.eval_available(child.columns):
-            survivors.append(child)
-
-    if len(survivors) > 1:
-        with ThreadPoolExecutor(min(_LIST_POOL_SIZE, len(survivors))) as pool:
-            subtrees = list(
-                pool.map(lambda c: list(_walk(query, parser.tail(c.columns), c, fs)), survivors)
-            )
-        for subtree in subtrees:
-            yield from subtree
-    else:
-        for child in survivors:
-            yield from _walk(query, parser.tail(child.columns), child, fs)
-
-    if parser.is_terminal_level():
-        if parser.parses_filenames():
-            for f in files:
-                candidate = part.expand_by(f, parser.parse(f))
-                if query.eval_all(candidate.columns):
-                    yield candidate
-        elif query.eval_all(part.columns):
-            for f in files:
-                yield part.expand_by(f, None)
+def list_level(fs: FileSystem, level: list[tuple[Partition, ColumnParser]]) -> list[tuple[list[str], list[str]]]:
+    """The ``(files, dirs)`` of each ``(partition, parser)`` of ``level``:
+    the names the parser generates, else one ``ls`` of the partition's
+    directory, every ``ls`` of the level concurrently on one pool. Listed
+    names drop what Spark's readers skip (:func:`~fsql_spark.fs.is_hidden`),
+    and a directory that does not exist lists as empty. Every driver-side
+    listing goes through here."""
+    generated = [p.generate() for _, p in level]
+    listed = iter(_each(partial(_ls_visible, fs), [part.url for (part, _), g in zip(level, generated) if g is None]))
+    return [
+        next(listed) if names is None else (names, []) if p.is_terminal_level() else ([], names)
+        for (_, p), names in zip(level, generated)
+    ]
 
 
 def _each(fn, items: list) -> list:
@@ -136,22 +126,26 @@ def _each(fn, items: list) -> list:
         return list(pool.map(fn, items))
 
 
-def _ls_or_empty(fs: FileSystem, url: str) -> tuple[list[str], list[str]]:
+def _ls_visible(fs: FileSystem, url: str) -> tuple[list[str], list[str]]:
     try:
-        return fs.ls(url)
+        files, dirs = fs.ls(url)
     except FileNotFoundError:
         # a generated parent may name a directory the tree lacks, and a
         # listed one may vanish before its turn: both hold nothing
         return [], []
+    return [f for f in files if not is_hidden(f)], [d for d in dirs if not is_hidden(d)]
 
 
-def _generated_depth(parser: ColumnParser) -> int:
-    """The depth of the deepest level ``parser`` generates, 0 for none.
-    The generated names, not the tree, say which directories belong to
-    the table, so the walk binds every such level."""
-    if isinstance(parser, AutoParser):
-        return max((i + 1 for i, g in enumerate(parser.grammars or ()) if g.values), default=0)
-    return 3 if isinstance(parser, DateRangeGenerator) else 0  # year, month, day
+def _generated_levels(parser: ColumnParser) -> list[bool]:
+    """Whether ``parser`` generates each level below the root, down to the
+    deepest one it generates. The generated names, not the tree, say which
+    directories belong to the table, so the walk binds every such level."""
+    if isinstance(parser, DateRangeGenerator):
+        return [True] * 3  # year, month, day
+    levels = [bool(g.values) for g in parser.grammars or ()] if isinstance(parser, AutoParser) else []
+    while levels and not levels[-1]:
+        levels.pop()
+    return levels
 
 
 @dataclass
@@ -202,36 +196,32 @@ def query_prefixes(
     Every other read is ``exact``, answering as the path join: the
     survivors are judged with ``eval_all`` and loaded, or their ancestors
     within ``serial_limit`` (:func:`covering_prefixes`) are; a loaded
-    prefix ending in a generated level is checked to exist. A name that
-    is not ``key=value`` or that Spark would bind otherwise than the
-    driver (:func:`binds_alike`) returns None.
+    prefix ending in a generated level is checked to exist
+    (:func:`_existing`). A name that is not ``key=value`` or that Spark
+    would bind otherwise than the driver (:func:`binds_alike`) returns
+    None.
 
     Either way a listed level that holds data files returns None, beside
     or instead of the next key's directories, unless it is the root of an
     unpartitioned table: loading the kept prefixes could hide a key from
     Spark's layout check.
     """
-    must = _generated_depth(parser)
+    generated = _generated_levels(parser)
     # a bare AutoParser with an expressible query answers as Spark's own
     # partition discovery; every other read answers as the path join
     exact = not (query.expressible and isinstance(parser, AutoParser) and parser.grammars is None)
     referenced = query.referenced_columns()
     keys: list[str] = []
-    generated: list[bool] = []
     level = [(Partition(root, {}), parser)]
     depth = None  # set when an expressible walk stops above its survivors
-    while level and (len(keys) < must or not referenced.issubset(keys)):
-        names = [p.generate() for _, p in level]
-        generated.append(names[0] is not None)
-        if not generated[-1]:
-            listings = _each(partial(_ls_or_empty, fs), [part.url for part, _ in level])
-            names = [[d for d in dirs if not is_hidden(d)] for _, dirs in listings]
-            if not all(is_hidden(f) for files, _ in listings for f in files):
-                if keys or any(names):
-                    return None
-                break  # an unpartitioned table
+    while level and (len(keys) < len(generated) or not referenced.issubset(keys)):
+        listings = list_level(fs, level)
+        if any(files for files, _ in listings):
+            if keys or any(dirs for _, dirs in listings):
+                return None
+            break  # an unpartitioned table
         key, judged, children = None, 0, []
-        for (part, p), segments in zip(level, names):
+        for (part, p), (_, segments) in zip(level, listings):
             for segment in segments:
                 name, sep, value = segment.partition("=")
                 key = name if key is None else key
@@ -259,11 +249,24 @@ def query_prefixes(
         kept = [part for part in kept if query.eval_all(part.columns)]
     depth = len(keys) if depth is None else depth
     depth, prefixes = covering_prefixes(root, [p.url for p in kept], depth, serial_limit)
-    if depth and generated[depth - 1]:
-        prefixes = [url for url, found in zip(prefixes, _each(fs.isdir, prefixes)) if found]
-        found = set(prefixes)
+    if 0 < depth <= len(generated) and generated[depth - 1]:
+        found = _existing(fs, prefixes)
+        prefixes = [url for url in prefixes if url in found]
         kept = [part for part in kept if _ancestor(root, part.url, depth) in found]
     return Walk(keys, kept, prefixes, exact)
+
+
+def _existing(fs: FileSystem, urls: list[str]) -> set[str]:
+    """The directories among ``urls`` that exist: a parent of several of
+    them is listed once, and any other costs one ``isdir``."""
+    below: dict[str, list[str]] = {}
+    for url in urls:
+        below.setdefault(url[: url.rstrip("/").rindex("/") + 1], []).append(url)
+    shared = [parent for parent, children in below.items() if len(children) > 1]
+    listings = list_level(fs, [(Partition(parent), AutoParser()) for parent in shared])
+    found = {parent + d + "/" for parent, (_, dirs) in zip(shared, listings) for d in dirs}
+    alone = [children[0] for children in below.values() if len(children) == 1]
+    return found.union(url for url, is_dir in zip(alone, _each(fs.isdir, alone)) if is_dir)
 
 
 def _ancestor(root: str, url: str, depth: int) -> str:

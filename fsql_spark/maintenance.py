@@ -22,33 +22,25 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from .api import read_partitioned_table
+from .column_parser import AUTO_PARSER
+from .discovery import Partition, discover_partitions
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs, is_hidden
 from .queries import Q_TRUE
 from .readers import SparkReader
 
 
-def _walk_files(fs: FileSystem, url: str, rel: str = "") -> list[tuple[str, str]]:
-    """Recursive (relative_dir, file_url) listing of data files via fs.ls."""
-    files, dirs = fs.ls(url)
-    base = url.rstrip("/") + "/"
-    out = [(rel, base + f) for f in files if not is_hidden(f)]
-    for d in dirs:
-        if is_hidden(d):
-            continue
-        out += _walk_files(fs, base + d + "/", f"{rel}/{d}".lstrip("/"))
-    return out
-
-
 def file_stats(spark: SparkSession, url: str, fs: Optional[FileSystem] = None) -> DataFrame:
     """Per-partition-directory file counts and byte sizes for a parquet tree.
 
-    Driver-side metadata walk (O(#files) stat calls, no data I/O) — the same
-    cost class as partition discovery."""
+    Driver-side metadata walk, no data I/O: driver discovery's crawl of the
+    Hive tree (``Q_TRUE`` keeps every visible file, at any depth), then one
+    stat call per file."""
     path, fs = get_url_and_fs(url, fs)
+    root = path.rstrip("/") + "/"
     by_dir: dict[str, list[int]] = {}
-    for rel, file_url in _walk_files(fs, path):
-        by_dir.setdefault(rel, []).append(fs.size(file_url))
+    for part in discover_partitions(Q_TRUE, AUTO_PARSER, Partition(root), fs):
+        by_dir.setdefault(part.url[len(root):].rpartition("/")[0], []).append(fs.size(part.url))
     rows = [
         (rel, len(sizes), sum(sizes), min(sizes), max(sizes))
         for rel, sizes in sorted(by_dir.items())
@@ -68,7 +60,8 @@ def compact(
     """Rewrite the tree with ~target-sized files.
 
     Reads the whole table with :func:`read_partitioned_table` (parquet only),
-    repartitions to ceil(total_bytes / target) tasks (per partition-key when
+    sizes its files as :func:`file_stats` finds them, repartitions to
+    ceil(total_bytes / target) tasks (per partition-key when
     ``partition_by`` is given, so each Hive partition compacts
     independently), and swaps directories. The swap is atomic only
     where ``FileSystem.move`` is (local/HDFS) — see the module docstring for
@@ -77,7 +70,8 @@ def compact(
     import math
 
     path, fs = get_url_and_fs(url, fs)
-    total_bytes = sum(fs.size(file_url) for _, file_url in _walk_files(fs, path))
+    files = discover_partitions(Q_TRUE, AUTO_PARSER, Partition(path), fs)
+    total_bytes = sum(fs.size(part.url) for part in files)
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
 
     df = read_partitioned_table(
@@ -161,9 +155,6 @@ def drop_partitions(
 
     This intentionally has no Spark job: deletion is driver-side metadata
     work, O(matched files) like discovery itself."""
-    from .column_parser import AUTO_PARSER
-    from .discovery import Partition, discover_partitions
-
     parser = column_parser if column_parser is not None else AUTO_PARSER
     path, fs = get_url_and_fs(url, fs)
     if not path.endswith("/") and fs.isdir(path):

@@ -11,6 +11,7 @@ import datetime
 
 import pandas as pd
 import pytest
+from pyspark.sql.types import StructType
 
 import fsql_spark.api as api
 from fsql_spark import AtomicQuery, DateRangeGenerator, read_partitioned_table
@@ -78,14 +79,16 @@ def _path_join(spark, root, query, parser=AUTO_PARSER):
 
 
 def test_inexpressible_and_generated_reads_list_what_they_keep(spark, dated, discovered):
-    """Two kept months of an AtomicQuery and a 40-day generator each take at
-    most 8 listing and stat calls; driver discovery listed every kept
-    leaf, or every generated day."""
+    """Two kept months of an AtomicQuery, a 40-day generator and a 30-day
+    one each take at most 8 listing and stat calls; driver discovery listed
+    every kept leaf, or every generated day. The 30 generated days Spark
+    loads are checked to exist by listing the two months that hold them."""
     months = {("2021", "12"), ("2022", "1")}
     start, end = "2021/12/10", "2022/01/19"
     reads = [
         (AtomicQuery(lambda year, month: (year, month) in months), AUTO_PARSER),
         (DateRangeQuery(start, end), DateRangeGenerator.build(start, end)),
+        (DateRangeQuery("2021/12/05", "2022/01/04"), DateRangeGenerator.build("2021/12/05", "2022/01/04")),
     ]
     for query, parser in reads:
         fs = CountingFileSystem()
@@ -94,7 +97,7 @@ def test_inexpressible_and_generated_reads_list_what_they_keep(spark, dated, dis
         assert not any("month=11" in url or "month=2/" in url for _, url in fs.calls), fs.calls
         want = _path_join(spark, dated, query, parser)
         assert got.columns == want.columns == ["x", "year", "month", "day"]
-        assert _rows(got) == _rows(want) and got.count() in (31 + 31, 40)
+        assert _rows(got) == _rows(want) and got.count() in (31 + 31, 40, 30)
     assert discovered == []
 
 
@@ -108,6 +111,23 @@ def test_generated_range_beyond_the_tree(spark, dated, discovered, start, end):
     assert got.dtypes == want.dtypes
     assert _rows(got) == _rows(want) and want.count() > 0
     assert discovered == []
+
+
+@pytest.mark.parametrize("query", [Q_TRUE, AtomicQuery(lambda k: True)], ids=["Q_TRUE", "AtomicQuery"])
+def test_empty_table_is_probed_once(spark, tmp_path, monkeypatch, discovered, query):
+    """A table root holding only ``_SUCCESS`` reads as no partitions after
+    one first-leaf probe and at most two listings of the root, without
+    driver discovery."""
+    (tmp_path / "t").mkdir()
+    (tmp_path / "t" / "_SUCCESS").touch()
+    probes = []
+    probe = api._probe_first_leaf
+    monkeypatch.setattr(api, "_probe_first_leaf", lambda fs, url: probes.append(url) or probe(fs, url))
+    fs = CountingFileSystem()
+    got = read_partitioned_table(str(tmp_path / "t"), query, fs=fs, spark=spark)
+    assert got.schema == StructType([]) and got.count() == 0
+    assert len([call for call in fs.calls if call[0] == "ls"]) <= 2, fs.calls
+    assert len(probes) == 1 and discovered == []
 
 
 def test_empty_partition_value_takes_the_path_join(spark, tmp_path):
