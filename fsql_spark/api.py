@@ -40,9 +40,12 @@ Either way a binding replaces a same-named data column.
 No transactional guarantees, like the reference (`api.py:33-36`): files deleted
 between discovery and read raise (soften with
 ``spark.sql.files.ignoreMissingFiles`` on the file-list read). The prefix
-load sees files added to a kept directory before the scan, and infers the
-data columns from the loaded prefixes; the file-list read sees only the
-files discovered.
+load sees files added to a kept directory before the scan; the file-list
+read sees only the files discovered. Without ``reader.schema``, a parquet
+read that does not merge schemas takes its data columns from one file's
+footer, read on the driver: the first-leaf probe's file, or the first file
+discovered. That choice is deterministic, where Spark's own inference reads
+whichever file its index lists first, and it plans without a Spark job.
 """
 
 from __future__ import annotations
@@ -62,7 +65,7 @@ from .discovery import GLOB_CHARS, Partition, Walk, binds_alike, discover_partit
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs
 from .queries import Query
-from .readers import DataReader, SparkReader, SPARK_READER, project_columns
+from .readers import DataReader, SparkReader, SPARK_READER, input_files, merges_schema, project_columns
 from .session import get_spark
 
 _TYPE_INFERENCE = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -86,8 +89,9 @@ def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[O
     none. A directory holding nothing visible, or missing, is passed over
     for its next sibling.
 
-    Used only to (a) autodetect the input format and (b) learn the
-    partition-column names below the walk. Cost: about one ``ls`` per
+    Used to (a) autodetect the input format, (b) learn the
+    partition-column names below the walk and (c) read a parquet read's
+    data schema from the file's footer. Cost: about one ``ls`` per
     tree level, negligible vs. the scan. Raises ValueError when a segment
     on the way is not ``key=value`` or a directory holds files beside
     directories (callers fall back to driver discovery).
@@ -155,26 +159,6 @@ def _loads_prefixes(spark: SparkSession, parser: ColumnParser, reader: DataReade
     )
 
 
-# parquet/orc readers union every file's schema when this (or the mergeSchema
-# option) is true; json/csv have no such switch
-_MERGE_SCHEMA = {
-    InputFormat.PARQUET: "spark.sql.parquet.mergeSchema",
-    InputFormat.ORC: "spark.sql.orc.mergeSchema",
-}
-
-
-def _merges_schema(spark: SparkSession, fmt: InputFormat, options: dict[str, Any]) -> bool:
-    """Whether Spark merges the schemas of all loaded files for this read:
-    the ``mergeSchema`` option (any case, like Spark) else the session
-    default of the format."""
-    if fmt not in _MERGE_SCHEMA:
-        return False
-    value = next((v for k, v in options.items() if k.lower() == "mergeschema"), None)
-    if value is None:
-        value = spark.conf.get(_MERGE_SCHEMA[fmt])
-    return str(value).strip().lower() == "true"
-
-
 def _read_prefixes(
     spark: SparkSession, path: str, fs: FileSystem, query: Query, parser: ColumnParser, reader: SparkReader
 ) -> Optional[DataFrame]:
@@ -187,13 +171,15 @@ def _read_prefixes(
     result is :func:`_read_empty`, or no partitions when the probe ran from
     ``path`` itself.
 
-    Without ``reader.schema``, Spark infers the data columns from the
-    loaded prefixes only: parquet and orc read one footer of a kept file,
-    json and csv sample the kept files. On a table whose schema drifts, the
-    result's data columns can thus depend on the query; callers that need
-    the table-wide schema pass ``reader.schema``. A read that merges
-    schemas (``mergeSchema``, as option or session default) loads ``path``,
-    so the merged schema spans every file."""
+    Without ``reader.schema``, the data columns come from the loaded
+    prefixes only: a parquet read takes the probe file's footer, read on
+    the driver (:meth:`SparkReader.load_schema`); Spark infers the others,
+    orc from one footer of a kept file, json and csv by sampling the kept
+    files. On a table whose schema drifts, the result's data columns can
+    thus depend on the query; callers that need the table-wide schema pass
+    ``reader.schema``. A read that merges schemas (``mergeSchema``, as
+    option or session default) loads ``path``, so the merged schema spans
+    every file."""
     walk = query_prefixes(query, path, parser, fs, int(spark.conf.get(_SERIAL_LISTING)))
     if walk is None:
         return None
@@ -210,8 +196,8 @@ def _read_prefixes(
         return None  # no Spark source, a repeated key, or directories below a generator's levels
     where = _kept_filter(walk) if walk.exact else query.to_column(frozenset(keys))
     # a merged schema spans every file
-    prefixes = [path] if _merges_schema(spark, fmt, reader.options) else walk.prefixes
-    return _load_prefixes(spark, path, fs, reader, fmt, keys, prefixes, where, walk.exact)
+    prefixes = [path] if merges_schema(spark, fmt, reader.options) else walk.prefixes
+    return _load_prefixes(spark, path, fs, reader, fmt, probe_file, keys, prefixes, where, walk.exact)
 
 
 def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkReader) -> DataFrame:
@@ -226,9 +212,9 @@ def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkRea
     result = None
     if fmt is not None:
         leaf = probe_file.rsplit("/", 1)[0] + "/"
-        if _merges_schema(spark, fmt, reader.options) or not GLOB_CHARS.isdisjoint(leaf):
+        if merges_schema(spark, fmt, reader.options) or not GLOB_CHARS.isdisjoint(leaf):
             leaf = path
-        result = _load_prefixes(spark, path, fs, reader, fmt, keys, [leaf], F.lit(False), False)
+        result = _load_prefixes(spark, path, fs, reader, fmt, probe_file, keys, [leaf], F.lit(False), False)
     return result if result is not None else reader.read(spark, [], fs, InputFormat.AUTO)
 
 
@@ -276,6 +262,7 @@ def _load_prefixes(
     fs: FileSystem,
     reader: SparkReader,
     fmt: InputFormat,
+    probe_file: str,
     keys: list[str],
     prefixes: list[str],
     where: Column,
@@ -284,13 +271,16 @@ def _load_prefixes(
     """The Spark load: ``prefixes`` under ``basePath=path``, filtered by
     ``where``, partition columns last in path order (a same-named data
     column gives way, as in the path join), then the ``columns=``
-    projection. Returns None when Spark finds more than one layout or an
-    empty value, when a loaded file of an AUTO-format read has another
-    suffix, or when an ``exact`` read loads a directory Spark binds
-    otherwise than the path join."""
+    projection. The data columns of a parquet read come from
+    ``probe_file``'s footer (:meth:`SparkReader.load_schema`). Returns
+    None when Spark finds more than one layout or an empty value, when a
+    loaded file of an AUTO-format read has another suffix, or when an
+    ``exact`` read loads a directory Spark binds otherwise than the path
+    join."""
     load = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **reader.options})
-    if reader.schema is not None:
-        load = load.schema(reader.schema)
+    schema = reader.load_schema(spark, fs, fmt, probe_file, keys)
+    if schema is not None:
+        load = load.schema(schema)
     load = load.option("basePath", fs.spark_url(path))
     try:
         df = load.load([fs.spark_url(p) for p in prefixes])
@@ -309,7 +299,7 @@ def _load_prefixes(
     # from_url resolves compression suffixes (.json.gz) as the probe did
     # (regression-tested in test_jsongz_scan_prunes_partitions)
     auto = reader.input_format is InputFormat.AUTO
-    files = [unquote(f) for f in df.inputFiles()] if auto or exact else []
+    files = [unquote(f) for f in input_files(df)] if auto or exact else []
     if auto and any(_format_of(f) is not fmt for f in files):
         return None
     if exact:  # answer as the path join would

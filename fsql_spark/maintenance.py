@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .api import read_partitioned_table
 from .column_parser import AUTO_PARSER
-from .discovery import Partition, discover_partitions
+from .discovery import Partition, _each, discover_partitions
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs, is_hidden
 from .queries import Q_TRUE
@@ -35,12 +35,13 @@ def file_stats(spark: SparkSession, url: str, fs: Optional[FileSystem] = None) -
 
     Driver-side metadata walk, no data I/O: driver discovery's crawl of the
     Hive tree (``Q_TRUE`` keeps every visible file, at any depth), then one
-    stat call per file."""
+    stat call per file on the listing pool."""
     path, fs = get_url_and_fs(url, fs)
     root = path.rstrip("/") + "/"
+    files = [part.url for part in discover_partitions(Q_TRUE, AUTO_PARSER, Partition(root), fs)]
     by_dir: dict[str, list[int]] = {}
-    for part in discover_partitions(Q_TRUE, AUTO_PARSER, Partition(root), fs):
-        by_dir.setdefault(part.url[len(root):].rpartition("/")[0], []).append(fs.size(part.url))
+    for file, size in zip(files, _each(fs.size, files)):
+        by_dir.setdefault(file[len(root):].rpartition("/")[0], []).append(size)
     rows = [
         (rel, len(sizes), sum(sizes), min(sizes), max(sizes))
         for rel, sizes in sorted(by_dir.items())
@@ -60,8 +61,8 @@ def compact(
     """Rewrite the tree with ~target-sized files.
 
     Reads the whole table with :func:`read_partitioned_table` (parquet only),
-    sizes its files as :func:`file_stats` finds them, repartitions to
-    ceil(total_bytes / target) tasks (per partition-key when
+    sizes its files on the listing pool as :func:`file_stats` finds them,
+    repartitions to ceil(total_bytes / target) tasks (per partition-key when
     ``partition_by`` is given, so each Hive partition compacts
     independently), and swaps directories. The swap is atomic only
     where ``FileSystem.move`` is (local/HDFS) — see the module docstring for
@@ -70,8 +71,8 @@ def compact(
     import math
 
     path, fs = get_url_and_fs(url, fs)
-    files = discover_partitions(Q_TRUE, AUTO_PARSER, Partition(path), fs)
-    total_bytes = sum(fs.size(part.url) for part in files)
+    files = [part.url for part in discover_partitions(Q_TRUE, AUTO_PARSER, Partition(path), fs)]
+    total_bytes = sum(_each(fs.size, files))
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
 
     df = read_partitioned_table(

@@ -36,6 +36,7 @@ columns); ``SparkReader.read`` itself cannot know a schema.
 
 from __future__ import annotations
 
+import functools
 import io
 import json
 from abc import ABC, abstractmethod
@@ -46,7 +47,25 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from .discovery import Partition
 from .formats import InputFormat
@@ -88,6 +107,158 @@ def project_columns(df: DataFrame, columns: Optional[list[str]], keys: Collectio
     return df.select(*keep, *[c for c in have if c in keys and c not in keep])
 
 
+def input_files(df: DataFrame) -> list[str]:
+    """``df.inputFiles()`` in one py4j call: pyspark fetches the Java array
+    one element per call, ~27 CPU-ms for 110 files. NUL is in no path."""
+    jvm = df.sparkSession._jvm
+    joined = jvm.scala.collection.mutable.ArraySeq.make(df._jdf.inputFiles()).mkString("\0")
+    return joined.split("\0") if joined else []
+
+
+# parquet/orc readers union every file's schema when this (or the mergeSchema
+# option) is true; json/csv have no such switch
+_MERGE_SCHEMA = {
+    InputFormat.PARQUET: "spark.sql.parquet.mergeSchema",
+    InputFormat.ORC: "spark.sql.orc.mergeSchema",
+}
+
+
+def merges_schema(spark: SparkSession, fmt: InputFormat, options: dict[str, Any]) -> bool:
+    """Whether Spark merges the schemas of all loaded files for this read:
+    the ``mergeSchema`` option (any case, like Spark) else the session
+    default of the format."""
+    if fmt not in _MERGE_SCHEMA:
+        return False
+    value = next((v for k, v in options.items() if k.lower() == "mergeschema"), None)
+    if value is None:
+        value = spark.conf.get(_MERGE_SCHEMA[fmt])
+    return str(value).strip().lower() == "true"
+
+
+# the footer key under which Spark stores a file's schema as StructType JSON
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_BINARY_AS_STRING = "spark.sql.parquet.binaryAsString"
+_INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+_CASE_SENSITIVE = "spark.sql.caseSensitive"
+# (physical type, logical type) -> the Spark type no session conf decides;
+# INT annotations add (bit width, signed). Spark's ParquetToSparkSchemaConverter,
+# cut down to the flat types pyarrow and pandas write
+_PARQUET_TYPES = {
+    ("BOOLEAN", "NONE"): BooleanType(),
+    ("INT32", "NONE"): IntegerType(),
+    ("INT32", "INT", 8, True): ByteType(),
+    ("INT32", "INT", 16, True): ShortType(),
+    ("INT32", "INT", 32, True): IntegerType(),
+    ("INT32", "DATE"): DateType(),
+    ("INT64", "NONE"): LongType(),
+    ("INT64", "INT", 64, True): LongType(),
+    ("FLOAT", "NONE"): FloatType(),
+    ("DOUBLE", "NONE"): DoubleType(),
+    ("BYTE_ARRAY", "STRING"): StringType(),
+    ("BYTE_ARRAY", "ENUM"): StringType(),
+    ("BYTE_ARRAY", "JSON"): StringType(),
+}
+
+
+def footer_schema(spark: SparkSession, fs: FileSystem, url: str, keys: Collection[str]) -> Optional[StructType]:
+    """The data schema Spark infers from the parquet file at ``url``, read
+    from its footer on the driver, without the Spark job of Spark's own
+    inference; None where this map does not reach, so that Spark infers.
+
+    A Spark-written file carries its schema as StructType JSON, which
+    Spark prefers (``readSchemaFromFooter``). Any other file maps its
+    Parquet schema (physical plus logical type, not the Arrow schema
+    pyarrow restores) as Spark does, for flat columns of the types in
+    ``_PARQUET_TYPES``, unannotated binary (``binaryAsString``) and
+    millisecond or microsecond timestamps (``inferTimestampNTZ``); the
+    confs are read only when a column needs them. Nested, repeated,
+    unsigned, INT96, nanosecond, decimal and field-id columns give None.
+
+    Fields named like one of the read's partition ``keys`` are left out
+    (under ``spark.sql.caseSensitive``): a given schema types the
+    partition column of the same name, and the key binds as a string."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        with fs.open(url, "rb") as fd:
+            meta = pq.read_metadata(fd)
+    except (OSError, pa.ArrowException):
+        return None
+    conf = functools.cache(lambda key: spark.conf.get(key).strip().lower() == "true")
+    stored = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    fields = _stored_fields(stored) if stored is not None else _parquet_fields(meta.schema, conf)
+    return None if fields is None else StructType(_without_keys(fields, keys, conf))
+
+
+def _stored_fields(stored: bytes) -> Optional[list[StructField]]:
+    """The fields of the StructType JSON a Spark-written file stores; None
+    for JSON this cannot parse (Spark then tries its legacy format)."""
+    try:
+        schema = StructType.fromJson(json.loads(stored))
+    except (ValueError, TypeError, KeyError, AttributeError):
+        return None
+    return [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in schema.fields]
+
+
+def _parquet_fields(parquet, conf: Callable[[str], bool]) -> Optional[list[StructField]]:
+    """The Spark fields of a flat Parquet schema without field ids; None
+    when a column is nested, repeated or outside the map."""
+    import pyarrow as pa
+
+    try:  # pyarrow surfaces field ids only on the Arrow fields
+        if any(f.metadata and b"PARQUET:field_id" in f.metadata for f in parquet.to_arrow_schema()):
+            return None
+    except pa.ArrowException:
+        return None
+    fields = []
+    for column in (parquet.column(i) for i in range(len(parquet))):
+        dtype = _spark_type(column, conf)
+        if dtype is None or column.path != column.name or column.max_repetition_level:
+            return None  # a leaf below a group has a longer path than its name
+        fields.append(StructField(column.name, dtype, True))
+    return fields
+
+
+def _spark_type(column, conf: Callable[[str], bool]) -> Optional[DataType]:
+    """The Spark type of one Parquet leaf column, or None outside the map."""
+    logical = column.logical_type
+    kind = logical.type
+    if kind == "NONE" and column.converted_type != "NONE":
+        return None  # a legacy annotation without a logical type (e.g. INTERVAL)
+    if kind in ("INT", "TIMESTAMP"):
+        detail = json.loads(logical.to_json())
+        if kind == "INT":
+            return _PARQUET_TYPES.get((column.physical_type, kind, detail["bitWidth"], detail["isSigned"]))
+        if column.physical_type != "INT64" or detail["timeUnit"] not in ("milliseconds", "microseconds"):
+            return None
+        return TimestampNTZType() if not detail["isAdjustedToUTC"] and conf(_INFER_NTZ) else TimestampType()
+    if (column.physical_type, kind) == ("BYTE_ARRAY", "NONE"):
+        return StringType() if conf(_BINARY_AS_STRING) else BinaryType()
+    return _PARQUET_TYPES.get((column.physical_type, kind))
+
+
+def _nullable(dtype: DataType) -> DataType:
+    """``dtype`` with every field, element and map value nullable, as
+    Spark's ``asNullable`` makes a file source's data schema."""
+    if isinstance(dtype, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dtype.fields])
+    if isinstance(dtype, ArrayType):
+        return ArrayType(_nullable(dtype.elementType), True)
+    if isinstance(dtype, MapType):
+        return MapType(_nullable(dtype.keyType), _nullable(dtype.valueType), True)
+    return dtype
+
+
+def _without_keys(fields: list[StructField], keys: Collection[str], conf: Callable[[str], bool]) -> list[StructField]:
+    """``fields`` less those a partition key names, case-insensitively
+    unless the session is case-sensitive."""
+    folded = {k.lower() for k in keys}
+    if any(f.name not in keys and f.name.lower() in folded for f in fields) and not conf(_CASE_SENSITIVE):
+        return [f for f in fields if f.name.lower() not in folded]
+    return [f for f in fields if f.name not in keys]
+
+
 class SparkReader(DataReader):
     """Distributed read: the engine's default output is a Spark DataFrame.
 
@@ -95,7 +266,10 @@ class SparkReader(DataReader):
     ----------
     input_format: fixed format override (AUTO = detect per file suffix;
         all files must agree within one read).
-    schema: explicit StructType (skips inference — recommended at scale).
+    schema: explicit StructType. Without it a parquet read that does not
+        merge schemas takes its data columns from one file's footer, read
+        on the driver (:func:`footer_schema`), and starts no Spark job to
+        plan; orc, json and csv reads infer with Spark.
     options: Spark reader options merged over the format defaults.
     columns: projection pushed into the scan (reference's ``columns=`` kwarg,
         `deser.py:170-176`; Catalyst prunes parquet columns natively).
@@ -127,6 +301,16 @@ class SparkReader(DataReader):
         df = project_columns(df, self.columns, {k for p in parts for k in p.columns})
         return (df, failures) if self.lazy_errors else df
 
+    def load_schema(
+        self, spark: SparkSession, fs: FileSystem, fmt: InputFormat, probe_file: str, keys: Collection[str]
+    ) -> Optional[StructType]:
+        """The schema ``load()`` gets: ``schema`` when given, else for a
+        parquet read that does not merge schemas ``probe_file``'s footer
+        schema; None lets Spark infer."""
+        if self.schema is not None or fmt is not InputFormat.PARQUET or merges_schema(spark, fmt, self.options):
+            return self.schema
+        return footer_schema(spark, fs, probe_file, keys)
+
     # -- internals ---------------------------------------------------------
 
     def _load(
@@ -153,7 +337,8 @@ class SparkReader(DataReader):
         self, spark: SparkSession, group: list[Partition], fs: FileSystem, fmt: InputFormat
     ) -> DataFrame:
         """ONE scan over the group's files, then partition columns bound by a
-        broadcast left join on ``input_file_name()``.
+        broadcast left join on ``input_file_name()``. The data columns of
+        a parquet read come from the group's first file (:meth:`load_schema`).
 
         The map is keyed by Spark's own path strings (``df.inputFiles()``,
         the same form ``input_file_name()`` returns); each is unquoted only
@@ -165,15 +350,16 @@ class SparkReader(DataReader):
         import pyarrow as pa
 
         by_url = {fs.spark_url(p.url): p.columns for p in group}
-        reader = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **self.options})
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
         keys = list(dict.fromkeys(k for p in group for k in p.columns))
+        reader = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **self.options})
+        schema = self.load_schema(spark, fs, fmt, group[0].url, keys)
+        if schema is not None:
+            reader = reader.schema(schema)
         df = reader.load(list(by_url))
         if not keys:
             return df
 
-        files = df.inputFiles()
+        files = input_files(df)
         try:
             bindings = [by_url[unquote(f)] for f in files]
         except KeyError as exc:

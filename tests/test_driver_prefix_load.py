@@ -141,16 +141,18 @@ def test_prefix_load_equals_path_join(spark, tmp_path, join_calls):
     assert min(branches.values()) > 0, branches
 
 
-def test_shadowed_key_binds_from_the_path(spark, tmp_path, join_calls):
+@pytest.mark.parametrize("data_value", ["from-data", 7], ids=["string", "int64"])
+def test_shadowed_key_binds_from_the_path(spark, tmp_path, join_calls, data_value):
     """A data column named like a key gives way to the path binding and
-    moves to the key's place, as in the path join."""
+    moves to the key's place, as in the path join; a numeric one does not
+    type the key."""
     for i in range(40):
         target = tmp_path / "t" / f"k={i}"
         target.mkdir(parents=True)
-        pd.DataFrame({"k": ["from-data"], "x": [i]}).to_parquet(target / "f.parquet")
+        pd.DataFrame({"k": [data_value], "x": [i]}).to_parquet(target / "f.parquet")
     out = read_partitioned_table(str(tmp_path / "t"), AtomicQuery(lambda k: k != "3"), spark=spark)
     assert join_calls == []
-    assert out.columns == ["x", "k"]
+    assert out.dtypes == [("x", "bigint"), ("k", "string")]
     assert sorted((r.x, r.k) for r in out.collect()) == [(i, str(i)) for i in range(40) if i != 3]
 
 
@@ -178,23 +180,59 @@ def _jobs_during(spark, fn):
     return out, len(tracker.getJobIdsForGroup(group))
 
 
-def test_driver_discovery_plans_without_a_listing_job(spark, tmp_path, join_calls):
-    """An AtomicQuery keeping 40 leaf directories used to hand Spark 40 file
-    paths, above the serial-listing threshold, so planning ran a listing
-    job; the prefix load lists on the driver."""
-    for a in range(5):
-        for b in range(10):
-            target = tmp_path / "t" / f"a={a}" / f"b={b}"
+def _forty_days(root):
+    """year=2021/month=1|2/day=1..20: 40 leaf directories, above the
+    serial-listing threshold; ``x`` is 100 * month + day."""
+    for m in (1, 2):
+        for d in range(1, 21):
+            target = root / "year=2021" / f"month={m}" / f"day={d}"
             target.mkdir(parents=True)
-            pd.DataFrame({"x": [10 * a + b]}).to_parquet(target / "f.parquet")
-    reader = SparkReader(schema=StructType([StructField("x", LongType())]))
-    query = AtomicQuery(lambda a, b: a != "4")
+            pd.DataFrame({"x": [100 * m + d]}).to_parquet(target / "f.parquet")
+
+
+def _fixed_months(root):
+    """Value-only 2021/1|2/a|b.parquet, read through the path join."""
+    for m in (1, 2):
+        for i, name in enumerate("ab"):
+            target = root / "2021" / str(m)
+            target.mkdir(parents=True, exist_ok=True)
+            pd.DataFrame({"x": [100 * m + i]}).to_parquet(target / f"{name}.parquet")
+
+
+@pytest.mark.parametrize(
+    "build, query, parser, reader, want, joins",
+    [
+        (_forty_days, AtomicQuery(lambda year, month, day: day != "20"), AUTO_PARSER,
+         SparkReader(schema=StructType([StructField("x", LongType())])),
+         [100 * m + d for m in (1, 2) for d in range(1, 20)], False),
+        (_forty_days, AtomicQuery(lambda year, month, day: day != "20"), AUTO_PARSER, SparkReader(),
+         [100 * m + d for m in (1, 2) for d in range(1, 20)], False),
+        (_forty_days, Q_EQ("month", "1"), AUTO_PARSER, None, list(range(101, 121)), False),
+        (_forty_days, DateRangeQuery("2021/01/15", "2021/02/03"),
+         DateRangeGenerator.build("2021/01/15", "2021/02/03"), None, [*range(115, 121), 201, 202], False),
+        (_fixed_months, AtomicQuery(lambda year, month, fname: fname == "b.parquet"),
+         FixedColumnsParser.from_str("year/month/fname"), None, [101, 201], True),
+        (_forty_days, AtomicQuery(lambda year, month, day: year == "1999"), AUTO_PARSER, None, [], False),
+    ],
+    ids=["atomic with schema", "atomic", "Q_EQ", "date generator", "fixed columns", "all pruned"],
+)
+def test_driver_discovery_plans_without_a_listing_job(spark, tmp_path, join_calls, build, query, parser, reader, want, joins):
+    """Planning a read starts no Spark job. Driver discovery lists on the
+    driver: an AtomicQuery keeping 38 leaf directories used to hand Spark
+    38 file paths, above the serial-listing threshold, so planning ran a
+    listing job. A parquet read takes its data columns from one file's
+    footer: Spark's own inference would run a one-task job."""
+    build(tmp_path / "t")
     out, jobs = _jobs_during(
-        spark, lambda: read_partitioned_table(str(tmp_path / "t"), query, data_reader=reader, spark=spark)
+        spark,
+        lambda: read_partitioned_table(
+            str(tmp_path / "t"), query, column_parser=parser, data_reader=reader, spark=spark
+        ),
     )
     assert jobs == 0
-    assert join_calls == []
-    assert sorted(r.x for r in out.collect()) == list(range(40))
+    assert bool(join_calls) == joins
+    assert out.dtypes[0] == ("x", "bigint")
+    assert sorted(r.x for r in out.collect()) == want
 
 
 def test_all_pruned_driver_read_keeps_the_table_dtypes(spark, tmp_path):

@@ -1,8 +1,8 @@
 """One listing loop serves every driver walk (``discovery.list_level``):
 driver discovery goes down one level at a time on one listing pool per
 level, so its yield order is pinned here, and so is the number of threads
-a crawl may start. ``file_stats`` lists through the same loop. No Spark
-session is needed."""
+a crawl may start. ``file_stats`` lists through the same loop and sizes
+its files on the same pool. No Spark session is needed."""
 
 from __future__ import annotations
 
@@ -141,3 +141,24 @@ def test_file_stats_rows(tmp_path):
         ("k=1", 2, 8, 3, 5),
         ("k=2/j=3", 1, 2, 2, 2),
     ]
+
+
+def test_file_stats_sizes_files_on_the_listing_pool(tmp_path):
+    """Each file's size is a request on an object store: the stat calls run
+    on the listing pool, not one by one on the calling thread."""
+    root = _tree(tmp_path / "t", {f"k={k}/f{i}.parquet": k + i for k in range(4) for i in range(10)})
+    threads: list[str] = []
+
+    class CountingFileSystem(LocalFileSystem):
+        def size(self, url):
+            threads.append(threading.current_thread().name)
+            return super().size(url)
+
+    class RowsSession:
+        def createDataFrame(self, rows, schema):
+            return rows
+
+    rows = file_stats(RowsSession(), root, fs=CountingFileSystem())
+    assert rows == [(f"k={k}", 10, 10 * k + 45, k, k + 9) for k in range(4)]
+    assert len(threads) == 40
+    assert threading.main_thread().name not in threads

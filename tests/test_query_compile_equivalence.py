@@ -13,12 +13,14 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from fsql_spark import queries as queries_module
 from fsql_spark.queries import (
     AtomicQuery,
     ColumnComparator,
     ColumnRange,
     DateRangeQuery,
     LexRangeQuery,
+    NotExpressibleError,
     Q_AND,
     Q_EQ,
     Q_FALSE,
@@ -139,6 +141,37 @@ def test_atomic_query_not_expressible():
     assert not q.expressible
     assert Q_AND(q, Q_EQ("c1", "1")).expressible is False
     assert Q_EQ("c1", "1").expressible is True
+
+
+def test_expressible_answers_without_compiling(spark, monkeypatch):
+    """``expressible`` agrees with whether ``to_column`` compiles, and
+    builds no Column to find out."""
+    atomic = AtomicQuery(lambda c1: True)
+    dates = DateRangeQuery("2022/04/30", "2022/05/02")
+    queries = [
+        *random_queries(random.Random(SEED), ["c1", "c2"])[:20],
+        dates, atomic, Q_TRUE,
+        Q_AND(atomic, Q_EQ("c1", "1")),
+        Q_OR(Q_EQ("c1", "1"), Q_AND(dates, Q_IN("c2", ["a"]))),
+        Q_OR(Q_EQ("c1", "1"), Q_AND(dates, atomic)),
+    ]
+
+    def compiles(q):
+        try:
+            q.to_column()
+        except NotExpressibleError:
+            return False
+        return True
+
+    want = [compiles(q) for q in queries]
+    assert True in want and False in want
+
+    class NoColumns:
+        def __getattr__(self, name):
+            raise AssertionError(f"expressible called F.{name}")
+
+    monkeypatch.setattr(queries_module, "F", NoColumns())
+    assert [q.expressible for q in queries] == want
 
 
 def test_daterange_compile_matches_eval(spark):

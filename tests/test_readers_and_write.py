@@ -24,6 +24,7 @@ from fsql_spark import (
     read_partitioned_table,
     write_object,
 )
+from fsql_spark.readers import input_files
 
 from .conftest import assert_same
 
@@ -349,3 +350,15 @@ def test_write_object_feather_roundtrip(spark, tmp_path, df1):
     )
     left = got.drop(columns=["k"]).sort_values(list(df1.columns)).reset_index(drop=True)
     assert left.equals(df1.sort_values(list(df1.columns)).reset_index(drop=True))
+
+
+def test_input_files_matches_pyspark(spark, tmp_path):
+    """One py4j call returns what ``df.inputFiles()`` returns, in order."""
+    for i, value in enumerate(["a", "s p", "ü", "x=y"]):
+        target = tmp_path / "t" / f"k={value}"
+        target.mkdir(parents=True)
+        pd.DataFrame({"x": [i]}).to_parquet(target / "f.parquet")
+    df = spark.read.parquet(str(tmp_path / "t"))
+    assert len(df.inputFiles()) == 4
+    assert input_files(df) == df.inputFiles()
+    assert input_files(spark.range(1)) == []
