@@ -14,6 +14,9 @@
 #   make fsqlcheck            - the core fsql tests (read paths, discovery,
 #                               readers, fs contract; ~1.5 min) with the
 #                               tier-1 environment
+#   make dedupcheck           - the MinHash kernel tests (oracle property test,
+#                               signature tests in test_operators.py; ~2 min)
+#                               with the tier-1 environment
 #   make gate                 - strict driver-twin gate -> /tmp/fsql_gate.json
 #                               (every catalog entry hash-compared against
 #                               its DuckDB oracle at the driver's sf0.01)
@@ -27,7 +30,7 @@
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.1
 
-.PHONY: test perfbench perfcheck fsqlcheck gate bench verify
+.PHONY: test perfbench perfcheck fsqlcheck dedupcheck gate bench verify
 
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
@@ -49,6 +52,11 @@ FSQL_TESTS = test_path_equivalence.py test_fs_contract.py test_readers_and_write
 fsqlcheck:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 		timeout -k 10 2670 $(PY) -m pytest $(addprefix tests/,$(FSQL_TESTS)) -q -p no:cacheprovider
+
+dedupcheck:
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 $(PY) -m pytest tests/test_minhash_kernel.py tests/test_operators.py \
+		-k "minhash or signature" -q -p no:cacheprovider
 
 gate:
 	$(PY) tools/run_gate.py /tmp/fsql_gate.json

@@ -11,16 +11,17 @@ Scale design (the point of each variant):
   Provided as the *oracle-able* exact formulation; use it on small/filtered
   candidate sets.
 - **MinHash+LSH**: the scale path for near-dup. shingle -> k independent
-  min-hashes (xxhash64 with seed salts, all JVM-side) -> band signatures ->
-  bucket join => candidate pairs ~ O(true pairs), then exact-Jaccard refine.
-  Banding makes the shuffle carry only (band-hash, doc) pairs.
+  min-hashes (FNV-1a + splitmix64 seed mixes, one Arrow kernel that also
+  returns the shingle set) -> band signatures (xxhash64) -> bucket join =>
+  candidate pairs ~ O(true pairs), then exact-Jaccard refine. Banding makes
+  the shuffle carry only (band-hash, doc) pairs.
 - **SimHash**: 64-bit signature per doc (one map pass), near-dups = signatures
   within Hamming distance d; bucketed by rotated prefixes for a join-friendly
   formulation.
 - **embedding cosine**: see ``similarity.py`` — near-dup = cosine above a
   threshold.
 
-All hashing is deterministic (xxhash64/sha2/md5), so results are stable across
+All hashing is deterministic (xxhash64/sha2/md5/FNV-1a), so results are stable across
 runs and cluster sizes.
 """
 
@@ -87,7 +88,13 @@ def _word_shingles(text: Column, n: int, distinct: bool = True, sep: str = "\x01
     (SimHash, passage windows). ``sep`` joins the window's tokens — the
     default control byte prevents cross-boundary collisions ('ab'+'c' vs
     'a'+'bc'); passage operators pass ' ' for human-readable output. Any
-    SQL twin must join with the SAME separator (chr(1) for the default)."""
+    SQL twin must join with the SAME separator (chr(1) for the default).
+
+    The MinHash kernel (``_hashing.minhash_shingles``) computes the
+    distinct default-separator form itself, over Arrow buffers, and mirrors
+    this function exactly (split on ' ', window join, first-occurrence
+    order): a change to one must change the other, or MinHash-verified
+    Jaccard stops matching the exact paths that call this."""
     if n == 1:
         words = F.split(text, " ")
         return F.array_distinct(words) if distinct else words
@@ -363,39 +370,39 @@ def prefix_filter_pairs(
 def minhash_signatures(
     df: DataFrame, key_col: str, text_col: str, num_hashes: int = 32, ngram: int = 3
 ) -> DataFrame:
-    """k min-hashes per doc, computed by a vectorized Arrow-batched kernel
-    (see ``_hashing`` for why not a Column expression). One map pass, no
-    shuffle; signature is an array<long>; the shingle set rides along for
-    exact verification."""
-    import pandas as pd
+    """k min-hashes per doc plus its shingle set, as (k, sig array<long>,
+    sh array<string>). One ``mapInArrow`` kernel (``_hashing.minhash_shingles``)
+    tokenizes each document once and returns both the signature and the
+    shingle set that rides along for exact verification; ``sh`` equals
+    ``array_distinct(_word_shingles(text, ngram))``, order included. One map
+    pass, no shuffle (see ``_hashing`` for why not a Column expression)."""
+    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
+    from ._hashing import minhash_shingles
 
-    from ._hashing import minhash_batch
-
-    def _sig(texts):
-        return minhash_batch(texts, num_hashes, ngram)
-
-    _sig.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    sig_udf = pandas_udf(_sig, ArrayType(LongType()))
-    sh = _word_shingles(F.col(text_col), ngram)
     # spread here, the shared entry point: every consumer (within-corpus
     # pairs, cross-corpus batches, the persisted-table build) gets a
     # parallel kernel on single-file inputs.
     # Empty shingle sets (empty/whitespace-only docs, docs shorter than the
-    # n-gram) are EXCLUDED: Jaccard is undefined on empty sets, their
-    # constant signatures collide in every band (an all-empty-docs bucket is
-    # a quadratic blowup AND a 0/0 in the verify join under ANSI mode —
-    # found by the degenerate-corpus regression test), and the exact
-    # inverted-index path drops them identically (no shingles -> no index
-    # rows -> no pairs). Empty docs are exact-dedup's job, not near-dup's.
-    return (
-        _spread(df)
-        .select(
-            F.col(key_col).alias("k"), sig_udf(F.col(text_col)).alias("sig"), sh.alias("sh")
-        )
-        .where(F.size("sh") > 0)
+    # n-gram) are EXCLUDED, inside the kernel: Jaccard is undefined on empty
+    # sets, their constant signatures collide in every band (an
+    # all-empty-docs bucket is a quadratic blowup AND a 0/0 in the verify
+    # join under ANSI mode — found by the degenerate-corpus regression test),
+    # and the exact inverted-index path drops them identically (no shingles
+    # -> no index rows -> no pairs). Empty docs are exact-dedup's job, not
+    # near-dup's.
+    src = _spread(df).select(F.col(key_col).alias("k"), F.col(text_col).alias("text"))
+    schema = StructType(
+        [
+            src.schema["k"],
+            StructField("sig", ArrayType(LongType())),
+            # element nullability as _word_shingles types it: split() is
+            # non-null, the n-gram branch's when/otherwise is nullable
+            StructField("sh", ArrayType(StringType(), containsNull=ngram > 1)),
+        ]
+    )
+    return src.mapInArrow(
+        lambda batches: (minhash_shingles(b, num_hashes, ngram) for b in batches), schema
     )
 
 
