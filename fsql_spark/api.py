@@ -13,10 +13,9 @@ PREFIX LOAD (Hive ``key=value`` trees read by a bare or declared
     one driver walk (:func:`~fsql_spark.discovery.query_prefixes`) judges
     the tree's directories level by level, generating the levels the
     parser generates, and keeps the prefixes the query cannot rule out.
-    Spark runs ``spark.read.format(f).option("basePath", root)
-    .load(prefixes)`` plus a filter that keeps the answer exact:
-    ``query.to_column()`` for an expressible query, else one literal
-    ``array_contains`` over the partitions the walk judged with
+    Spark loads them under ``basePath=root`` plus a filter that keeps the
+    answer exact: ``query.to_column()`` for an expressible query, else one
+    literal ``array_contains`` over the partitions the walk judged with
     ``eval_all``. Partition discovery, pruning, predicate/projection
     pushdown and vectorized scans stay Catalyst/Tungsten built-ins;
     partition columns bind as strings because ``get_spark``/``configure``
@@ -35,7 +34,9 @@ DISCOVERY + PATH JOIN (everything else — SURVEY §4.3): value-only
     ``input_file_name()`` against a small file -> binding map keyed by
     Spark's own path strings.
 
-Either way a binding replaces a same-named data column.
+Either way the one ``load()`` is :meth:`~fsql_spark.readers.SparkReader.scan`,
+which escapes Hadoop's glob characters so that every name reads as itself,
+and a binding replaces a same-named data column.
 
 No transactional guarantees, like the reference (`api.py:33-36`): files deleted
 between discovery and read raise (soften with
@@ -61,11 +62,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .column_parser import AUTO_PARSER, AutoParser, ColumnParser, DateRangeGenerator
-from .discovery import GLOB_CHARS, Partition, Walk, binds_alike, discover_partitions, list_level, query_prefixes
+from .discovery import Partition, Walk, binds_alike, discover_partitions, list_level, query_prefixes
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs
 from .queries import Query
-from .readers import DataReader, SparkReader, SPARK_READER, input_files, merges_schema, project_columns
+from .readers import DataReader, SparkReader, SPARK_READER, input_files, merges_schema, project_columns, unmatched
 from .session import get_spark
 
 _TYPE_INFERENCE = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -173,7 +174,7 @@ def _read_prefixes(
 
     Without ``reader.schema``, the data columns come from the loaded
     prefixes only: a parquet read takes the probe file's footer, read on
-    the driver (:meth:`SparkReader.load_schema`); Spark infers the others,
+    the driver (:meth:`SparkReader.scan`); Spark infers the others,
     orc from one footer of a kept file, json and csv by sampling the kept
     files. On a table whose schema drifts, the result's data columns can
     thus depend on the query; callers that need the table-wide schema pass
@@ -211,9 +212,7 @@ def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkRea
     fmt = _spark_format(reader, probe_file, keys)
     result = None
     if fmt is not None:
-        leaf = probe_file.rsplit("/", 1)[0] + "/"
-        if merges_schema(spark, fmt, reader.options) or not GLOB_CHARS.isdisjoint(leaf):
-            leaf = path
+        leaf = path if merges_schema(spark, fmt, reader.options) else probe_file.rsplit("/", 1)[0] + "/"
         result = _load_prefixes(spark, path, fs, reader, fmt, probe_file, keys, [leaf], F.lit(False), False)
     return result if result is not None else reader.read(spark, [], fs, InputFormat.AUTO)
 
@@ -268,22 +267,16 @@ def _load_prefixes(
     where: Column,
     exact: bool,
 ) -> Optional[DataFrame]:
-    """The Spark load: ``prefixes`` under ``basePath=path``, filtered by
-    ``where``, partition columns last in path order (a same-named data
-    column gives way, as in the path join), then the ``columns=``
-    projection. The data columns of a parquet read come from
-    ``probe_file``'s footer (:meth:`SparkReader.load_schema`). Returns
-    None when Spark finds more than one layout or an empty value, when a
-    loaded file of an AUTO-format read has another suffix, or when an
-    ``exact`` read loads a directory Spark binds otherwise than the path
-    join."""
-    load = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **reader.options})
-    schema = reader.load_schema(spark, fs, fmt, probe_file, keys)
-    if schema is not None:
-        load = load.schema(schema)
-    load = load.option("basePath", fs.spark_url(path))
+    """The Spark load (:meth:`SparkReader.scan`): ``prefixes`` under
+    ``basePath=path``, filtered by ``where``, partition columns last in
+    path order (a same-named data column gives way, as in the path join),
+    then the ``columns=`` projection. The data columns of a parquet read
+    come from ``probe_file``'s footer. Returns None when Spark finds more
+    than one layout or an empty value, when a loaded file of an
+    AUTO-format read has another suffix, or when an ``exact`` read loads a
+    directory Spark binds otherwise than the path join."""
     try:
-        df = load.load([fs.spark_url(p) for p in prefixes])
+        df = reader.scan(spark, fs, fmt, prefixes, probe_file, keys, base=path)
     except PySparkException as exc:
         if exc.getCondition() in _NOT_ONE_LAYOUT:
             return None
@@ -306,10 +299,7 @@ def _load_prefixes(
         base = fs.spark_url(path)
         for f in files:
             if not f.startswith(base):
-                raise RuntimeError(
-                    f"scanned file {f!r} matches no discovered partition under {base!r}: "
-                    f"{type(fs).__name__}.spark_url must return the qualified URL Spark reports"
-                )
+                raise unmatched(fs, f)
             if not all(map(binds_alike, f[len(base):].strip("/").split("/")[:-1])):
                 return None
 

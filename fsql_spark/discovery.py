@@ -42,13 +42,10 @@ from .fs import FileSystem, is_hidden
 from .queries import Query
 
 _LIST_POOL_SIZE = 32  # reference uses a 32-thread fetch pool (`deser.py:153`)
-# Hadoop globs every path handed to load(): a name holding one of these
-# would be read as a pattern, not as itself
-GLOB_CHARS = frozenset("*?[]{}\\")
 # names Spark's own partition discovery would bind differently from the
 # driver: it unescapes "%", and NUL separates the kept list of the exact
 # filter
-_UNSAFE_CHARS = GLOB_CHARS | {"%", "\0"}
+_UNSAFE_CHARS = frozenset("%\0")
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
@@ -165,8 +162,7 @@ class Walk:
 def binds_alike(segment: str) -> bool:
     """Whether Spark's partition discovery binds the directory ``segment``
     as the path join does: ``key=value`` with a value neither empty nor
-    the Hive null, and no ``%`` (Spark unescapes it), Hadoop glob
-    character or NUL."""
+    the Hive null, and no ``%`` (Spark unescapes it) or NUL."""
     _, sep, value = segment.partition("=")
     return bool(sep and value) and value != _HIVE_NULL and _UNSAFE_CHARS.isdisjoint(segment)
 
@@ -190,8 +186,8 @@ def query_prefixes(
     files in fewer paths) or whose survivors exceed ``serial_limit``
     (Spark's serial-listing threshold: more paths than that start a
     listing job). A name it cannot judge (not ``key=value`` under the
-    level's key, or a Hadoop glob character) loads the whole ``root``; a
-    ``%`` value is kept unpruned and unbound, since Spark unescapes it.
+    level's key) loads the whole ``root``; a ``%`` value is kept unpruned
+    and unbound, since Spark unescapes it.
 
     Every other read is ``exact``, answering as the path join: the
     survivors are judged with ``eval_all`` and loaded, or their ancestors
@@ -225,7 +221,7 @@ def query_prefixes(
             for segment in segments:
                 name, sep, value = segment.partition("=")
                 key = name if key is None else key
-                if not sep or name != key or not GLOB_CHARS.isdisjoint(segment):
+                if not sep or name != key:
                     return None if exact else Walk([], [Partition(root, {})], [root], False)
                 if exact and not binds_alike(segment):
                     return None

@@ -353,34 +353,32 @@ class LexRangeQuery(Query):
             if r.comparator is not ColumnComparator.wld:
                 effective.append(r)
 
-        def val(r: ColumnRange) -> Column:
-            c = F.col(r.name)
+        def columns(r: ColumnRange) -> tuple[Column, Column, Column]:
+            """The value, min and max Columns of ``r``, built once."""
+            if r.comparator is not ColumnComparator.num:
+                return F.col(r.name), F.lit(r.min_value), F.lit(r.max_value)
             # try_cast: ANSI mode (Spark 4 default) makes a plain cast THROW
             # on non-numeric values, crashing the scan; NULL comparisons
             # propagate to NULL and the filter drops the row — matching the
             # Python evaluator's lenient semantics above
-            return c.try_cast("long") if r.comparator is ColumnComparator.num else c
+            return F.col(r.name).try_cast("long"), F.lit(int(r.min_value)), F.lit(int(r.max_value))
 
-        def lo(r: ColumnRange) -> Column:
-            return F.lit(int(r.min_value) if r.comparator is ColumnComparator.num else r.min_value)
-
-        def hi(r: ColumnRange) -> Column:
-            return F.lit(int(r.max_value) if r.comparator is ColumnComparator.num else r.max_value)
+        chain = [columns(r) for r in effective]
 
         def ge_min(i: int) -> Column:
-            if i == len(effective):
+            if i == len(chain):
                 # full chain: tuple == min is included; truncated chain: being
                 # still tied at the cut means eval_all would have hit the
                 # missing column and returned False
                 return F.lit(not truncated)
-            r = effective[i]
-            return (val(r) > lo(r)) | ((val(r) == lo(r)) & ge_min(i + 1))
+            val, lo, _ = chain[i]
+            return (val > lo) | ((val == lo) & ge_min(i + 1))
 
         def lt_max(i: int) -> Column:
-            if i == len(effective):
+            if i == len(chain):
                 return F.lit(False)  # tuple == max is excluded (half-open)
-            r = effective[i]
-            return (val(r) < hi(r)) | ((val(r) == hi(r)) & lt_max(i + 1))
+            val, _, hi = chain[i]
+            return (val < hi) | ((val == hi) & lt_max(i + 1))
 
         # coalesce: try_cast NULLs (non-numeric under num) must read as a
         # definite False, not three-valued NULL (the language has no NOT, so

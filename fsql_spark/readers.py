@@ -8,9 +8,10 @@ Mirrors the reference's pluggable ``DataReader`` polymorphism
   columns bound by one broadcast left join on ``input_file_name()`` against
   a file -> binding map. ``read_partitioned_table`` skips ``read`` for a
   Hive-layout read (no ``lazy_errors``, inference off): it loads the
-  directories its walk kept under ``basePath`` with the reader's format,
-  schema, options and ``columns`` instead (``api._load_prefixes``), so
-  Spark lists directories, not one path per file. This subsumes the reference's
+  directories its walk kept under ``basePath`` instead
+  (``api._load_prefixes``), so Spark lists directories, not one path per
+  file. Both reads go through :meth:`SparkReader.scan`, the one ``load()``
+  of a table read. This subsumes the reference's
   DaskReader (`deser_dask.py:18-56`): Spark is already lazy, one task per
   file split.
 - :class:`PandasReader` — fsql-parity driver-side reader (32-thread pool,
@@ -72,6 +73,9 @@ from .formats import InputFormat
 from .fs import FileSystem
 
 _POOL_SIZE = 32  # reference `deser.py:153`
+# Hadoop globs every path handed to load(): a backslash makes each of its
+# pattern characters stand for itself
+_GLOB_ESCAPE = str.maketrans({c: "\\" + c for c in "*?[]{}\\"})
 
 
 @dataclass
@@ -105,6 +109,14 @@ def project_columns(df: DataFrame, columns: Optional[list[str]], keys: Collectio
     have = df.columns
     keep = [c for c in columns if c in have]
     return df.select(*keep, *[c for c in have if c in keys and c not in keep])
+
+
+def unmatched(fs: FileSystem, file: str) -> RuntimeError:
+    """The error for a file Spark scanned that no listed partition names."""
+    return RuntimeError(
+        f"scanned file {file!r} matches no discovered partition; "
+        f"{type(fs).__name__}.spark_url must return the qualified URL Spark reports"
+    )
 
 
 def input_files(df: DataFrame) -> list[str]:
@@ -297,28 +309,6 @@ class SparkReader(DataReader):
         failures: list[ReadFailure] = []
         if self.lazy_errors:
             parts, failures = self._validate(parts, fs, fmt)
-        df = self._load(spark, parts, fs, fmt)
-        df = project_columns(df, self.columns, {k for p in parts for k in p.columns})
-        return (df, failures) if self.lazy_errors else df
-
-    def load_schema(
-        self, spark: SparkSession, fs: FileSystem, fmt: InputFormat, probe_file: str, keys: Collection[str]
-    ) -> Optional[StructType]:
-        """The schema ``load()`` gets: ``schema`` when given, else for a
-        parquet read that does not merge schemas ``probe_file``'s footer
-        schema; None lets Spark infer."""
-        if self.schema is not None or fmt is not InputFormat.PARQUET or merges_schema(spark, fmt, self.options):
-            return self.schema
-        return footer_schema(spark, fs, probe_file, keys)
-
-    # -- internals ---------------------------------------------------------
-
-    def _load(
-        self, spark: SparkSession, parts: list[Partition], fs: FileSystem, fmt: InputFormat
-    ) -> DataFrame:
-        if not parts:
-            return spark.createDataFrame([], self.schema or StructType([]))
-        fmt = self.input_format if self.input_format is not InputFormat.AUTO else fmt
         # mixed suffixes read with their own source each; files at different
         # tree depths (the bare-AutoParser quirk, reference
         # `column_parser.py:106-110`) share one scan and get NULL for the keys
@@ -326,19 +316,46 @@ class SparkReader(DataReader):
         by_format: dict[InputFormat, list[Partition]] = {}
         for p in parts:
             by_format.setdefault(_detect(p.url, fmt), []).append(p)
-
         frames = [self._load_format(spark, group, fs, f) for f, group in by_format.items()]
-        out = frames[0]
+        df = frames[0] if frames else spark.createDataFrame([], self.schema or StructType([]))
         for frame in frames[1:]:
-            out = out.unionByName(frame, allowMissingColumns=True)
-        return out
+            df = df.unionByName(frame, allowMissingColumns=True)
+        df = project_columns(df, self.columns, {k for p in parts for k in p.columns})
+        return (df, failures) if self.lazy_errors else df
+
+    def scan(
+        self, spark: SparkSession, fs: FileSystem, fmt: InputFormat, paths: list[str], probe_file: str,
+        keys: Collection[str], base: Optional[str] = None,
+    ) -> DataFrame:
+        """The one ``load()`` of a table read: ``paths`` in ``fmt``, with
+        the format's options under ``options``, and ``base`` as
+        ``basePath`` when given. The schema is ``schema`` when given, else
+        for a parquet read that does not merge schemas ``probe_file``'s
+        footer schema (:func:`footer_schema`); otherwise Spark infers.
+
+        Every ``*?[]{}\\`` in a loaded path is backslash-escaped, so that
+        Hadoop's glob reads each name as itself; ``basePath`` is not
+        globbed and stays raw. For one escaped path Spark's
+        ``FileStreamSink.hasMetadata`` probe logs a WARN and the read goes
+        on."""
+        reader = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **self.options})
+        schema = self.schema
+        if schema is None and fmt is InputFormat.PARQUET and not merges_schema(spark, fmt, self.options):
+            schema = footer_schema(spark, fs, probe_file, keys)
+        if schema is not None:
+            reader = reader.schema(schema)
+        if base is not None:
+            reader = reader.option("basePath", fs.spark_url(base))
+        return reader.load([fs.spark_url(p).translate(_GLOB_ESCAPE) for p in paths])
+
+    # -- internals ---------------------------------------------------------
 
     def _load_format(
         self, spark: SparkSession, group: list[Partition], fs: FileSystem, fmt: InputFormat
     ) -> DataFrame:
         """ONE scan over the group's files, then partition columns bound by a
         broadcast left join on ``input_file_name()``. The data columns of
-        a parquet read come from the group's first file (:meth:`load_schema`).
+        a parquet read come from the group's first file (:meth:`scan`).
 
         The map is keyed by Spark's own path strings (``df.inputFiles()``,
         the same form ``input_file_name()`` returns); each is unquoted only
@@ -351,11 +368,7 @@ class SparkReader(DataReader):
 
         by_url = {fs.spark_url(p.url): p.columns for p in group}
         keys = list(dict.fromkeys(k for p in group for k in p.columns))
-        reader = spark.read.format(fmt.spark_format()).options(**{**fmt.spark_options(), **self.options})
-        schema = self.load_schema(spark, fs, fmt, group[0].url, keys)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.load(list(by_url))
+        df = self.scan(spark, fs, fmt, [p.url for p in group], group[0].url, keys)
         if not keys:
             return df
 
@@ -363,10 +376,7 @@ class SparkReader(DataReader):
         try:
             bindings = [by_url[unquote(f)] for f in files]
         except KeyError as exc:
-            raise RuntimeError(
-                f"scanned file {exc.args[0]!r} matches no discovered partition; "
-                f"{type(fs).__name__}.spark_url must return the qualified URL Spark reports"
-            ) from exc
+            raise unmatched(fs, exc.args[0]) from exc
         mapping = spark.createDataFrame(
             pa.table(
                 {

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime
 import random
+from urllib.parse import unquote
 
 import pandas as pd
 import pytest
@@ -152,15 +153,21 @@ def test_files_above_kept_partitions_take_driver_discovery(spark, tmp_path, monk
     assert _rows(out.select("payload", "a")) == [("g", "2")]
 
 
-def test_glob_character_names_load_the_root(spark, tmp_path, fast_only):
+def test_glob_character_names_load_only_the_kept_directories(spark, tmp_path, fast_only):
+    """Hadoop globs every loaded path; escaped, "[x]" and "y{1,2}" name
+    themselves, and Spark lists only the kept directories."""
     root = tmp_path / "t"
     for rel, payload in [
-        ("k1=a/k2=[x]", "ax"), ("k1=a/k2=y{1,2}", "ay"), ("k1=a/k2=z", "az"), ("k1=b/k2=z", "bz"),
+        ("k1=a/k2=[x]", "ax"), ("k1=a/k2=x", "a-x"), ("k1=a/k2=y{1,2}", "ay"), ("k1=a/k2=y1", "ay1"),
+        ("k1=a/k2=z", "az"), ("k1=b/k2=z", "bz"),
     ]:
         _write_parquet(root, f"{rel}/f.parquet", payload)
     q = Q_AND(Q_EQ("k1", "a"), Q_IN("k2", ["[x]", "y{1,2}"]))
     out = read_partitioned_table(str(root), q, spark=spark)
     assert _rows(out) == [("ax", "a", "[x]"), ("ay", "a", "y{1,2}")]
+    assert sorted(unquote(f) for f in out.inputFiles()) == [
+        f"file://{root}/k1=a/k2=[x]/f.parquet", f"file://{root}/k1=a/k2=y{{1,2}}/f.parquet"
+    ]
 
 
 def test_all_pruned_result_keeps_the_table_schema(spark, tmp_path, fast_only):
