@@ -45,7 +45,7 @@ perfcheck:
 FSQL_TESTS = test_path_equivalence.py test_fs_contract.py test_readers_and_write.py \
 	test_read_partitioned_table.py test_query_directed_listing.py test_daterange.py \
 	test_lex_range_query.py test_driver_prefix_load.py test_hive_walk.py test_listing_loop.py \
-	test_footer_schema.py test_glob_names.py \
+	test_footer_schema.py test_glob_names.py test_spark_binding.py test_query_compile_equivalence.py \
 	test_scale_plans.py::test_generation_skips_listing_entirely \
 	test_scale_plans.py::test_driver_discovery_prunes_listings
 

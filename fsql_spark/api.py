@@ -11,20 +11,21 @@ PREFIX LOAD (Hive ``key=value`` trees read by a bare or declared
     ``AutoParser`` or a ``DateRangeGenerator`` with ``key=value`` names, a
     plain ``SparkReader``, partition type inference off in the session):
     one driver walk (:func:`~fsql_spark.discovery.query_prefixes`) judges
-    the tree's directories level by level, generating the levels the
-    parser generates, and keeps the prefixes the query cannot rule out.
-    Spark loads them under ``basePath=root`` plus a filter that keeps the
-    answer exact: ``query.to_column()`` for an expressible query, else one
-    literal ``array_contains`` over the partitions the walk judged with
-    ``eval_all``. Partition discovery, pruning, predicate/projection
-    pushdown and vectorized scans stay Catalyst/Tungsten built-ins;
-    partition columns bind as strings because ``get_spark``/``configure``
-    turn type inference off.
+    the tree's directories level by level, down to every key the query
+    references, generating the levels the parser generates, and keeps the
+    partitions ``eval_all`` accepts. Spark loads them under
+    ``basePath=root``, filtered by one literal ``array_contains`` over the
+    kept partitions' values (:func:`_kept_filter`). The walk binds each
+    name as Spark's partition discovery does, so the two agree on every
+    value. Partition discovery, pruning, predicate/projection pushdown and
+    vectorized scans stay Catalyst/Tungsten built-ins; partition columns
+    bind as strings because ``get_spark``/``configure`` turn type
+    inference off.
 
 DISCOVERY + PATH JOIN (everything else — SURVEY §4.3): value-only
     ``FixedColumnsParser`` layouts with filename columns, bare-name date
-    generators, names Spark binds otherwise than the driver, trees that
-    are not one Hive layout, mixed formats, ``lazy_errors``, partition
+    generators, names Spark cannot bind (an empty key or value), trees
+    that are not one Hive layout, mixed formats, ``lazy_errors``, partition
     type inference on in the session, and non-DataFrame outputs (pandas /
     dict / fancy-ls). The driver enumerates and prunes partition
     *metadata* exactly like the reference (O(#partitions), threaded
@@ -52,6 +53,7 @@ whichever file its index lists first, and it plans without a Spark job.
 from __future__ import annotations
 
 import io
+import json
 import warnings
 from typing import Any, Optional
 from urllib.parse import unquote
@@ -60,9 +62,10 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NullType
 
 from .column_parser import AUTO_PARSER, AutoParser, ColumnParser, DateRangeGenerator
-from .discovery import Partition, Walk, binds_alike, discover_partitions, list_level, query_prefixes
+from .discovery import Partition, Walk, discover_partitions, list_level, query_prefixes
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs
 from .queries import Query
@@ -75,9 +78,9 @@ _SERIAL_LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 # load() conditions meaning "not one Hive layout" (e.g. the mixed-depth quirk,
 # reference `column_parser.py:106-110`): driver discovery reads such trees
 _NOT_ONE_LAYOUT = {"CONFLICTING_PARTITION_COLUMN_NAMES", "CONFLICTING_DIRECTORY_STRUCTURES"}
-# the Java cause of load()'s INTERNAL_ERROR on a "k=" directory, which the
-# path join binds as ""
-_EMPTY_VALUE = "Empty partition column value"
+# the Java cause of load()'s INTERNAL_ERROR on a "k=" or "=v" directory,
+# which the path join binds as ""
+_EMPTY_NAME = "Empty partition column"
 
 
 def _active_spark(spark: Optional[SparkSession]) -> SparkSession:
@@ -195,10 +198,9 @@ def _read_prefixes(
     fmt = _spark_format(reader, probe_file, keys)
     if fmt is None or (len(keys) > len(walk.keys) and not isinstance(parser, AutoParser)):
         return None  # no Spark source, a repeated key, or directories below a generator's levels
-    where = _kept_filter(walk) if walk.exact else query.to_column(frozenset(keys))
     # a merged schema spans every file
     prefixes = [path] if merges_schema(spark, fmt, reader.options) else walk.prefixes
-    return _load_prefixes(spark, path, fs, reader, fmt, probe_file, keys, prefixes, where, walk.exact)
+    return _load_prefixes(spark, path, fs, reader, fmt, probe_file, keys, prefixes, _kept_filter(walk))
 
 
 def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkReader) -> DataFrame:
@@ -213,7 +215,7 @@ def _read_empty(spark: SparkSession, path: str, fs: FileSystem, reader: SparkRea
     result = None
     if fmt is not None:
         leaf = path if merges_schema(spark, fmt, reader.options) else probe_file.rsplit("/", 1)[0] + "/"
-        result = _load_prefixes(spark, path, fs, reader, fmt, probe_file, keys, [leaf], F.lit(False), False)
+        result = _load_prefixes(spark, path, fs, reader, fmt, probe_file, keys, [leaf], F.lit(False))
     return result if result is not None else reader.read(spark, [], fs, InputFormat.AUTO)
 
 
@@ -228,13 +230,16 @@ def _first_leaf(fs: FileSystem, walk: Walk) -> tuple[Optional[str], list[str]]:
 
 
 def _kept_filter(walk: Walk) -> Column:
-    """Exactly the kept partitions. One literal split on the JVM:
-    Column.isin makes a py4j call per value (~0.2 s for 90); "/" and NUL
-    occur in no kept value."""
+    """Exactly the kept partitions: one JSON literal of their values, which
+    holds any value Spark binds ("/", "\\" and None included), parsed on
+    the JVM. Spark folds it and prunes partitions with it; Column.isin
+    makes a py4j call per value (~0.2 s for 90). The keys come first, so
+    a plan string cut at ``spark.sql.maxMetadataStringLength`` still names
+    them."""
     if not walk.keys:
         return F.lit(True)
-    kept = "\0".join("/".join(p.columns[k] for k in walk.keys) for p in walk.kept)
-    return F.array_contains(F.split(F.lit(kept), "\0"), F.concat_ws("/", *walk.keys))
+    kept = json.dumps([[p.columns[k] for k in walk.keys] for p in walk.kept])
+    return F.arrays_overlap(F.array(F.array(*walk.keys)), F.from_json(F.lit(kept), "array<array<string>>"))
 
 
 def _format_of(url: str) -> Optional[InputFormat]:
@@ -265,16 +270,16 @@ def _load_prefixes(
     keys: list[str],
     prefixes: list[str],
     where: Column,
-    exact: bool,
 ) -> Optional[DataFrame]:
     """The Spark load (:meth:`SparkReader.scan`): ``prefixes`` under
     ``basePath=path``, filtered by ``where``, partition columns last in
     path order (a same-named data column gives way, as in the path join),
     then the ``columns=`` projection. The data columns of a parquet read
     come from ``probe_file``'s footer. Returns None when Spark finds more
-    than one layout or an empty value, when a loaded file of an
-    AUTO-format read has another suffix, or when an ``exact`` read loads a
-    directory Spark binds otherwise than the path join."""
+    than one layout or an empty name, when a loaded file of an
+    AUTO-format read has another suffix, or when a loaded directory below
+    the walk is not ``key=value`` (Spark would bind fewer keys than the
+    path join)."""
     try:
         df = reader.scan(spark, fs, fmt, prefixes, probe_file, keys, base=path)
     except PySparkException as exc:
@@ -282,7 +287,7 @@ def _load_prefixes(
             return None
         raise
     except Py4JJavaError as exc:
-        if _EMPTY_VALUE not in str(exc.java_exception.getCause()):
+        if _EMPTY_NAME not in str(exc.java_exception.getCause()):
             raise
         return None
 
@@ -291,21 +296,23 @@ def _load_prefixes(
     # format like the reference) would be parsed entirely as ``fmt``;
     # from_url resolves compression suffixes (.json.gz) as the probe did
     # (regression-tested in test_jsongz_scan_prunes_partitions)
-    auto = reader.input_format is InputFormat.AUTO
-    files = [unquote(f) for f in input_files(df)] if auto or exact else []
-    if auto and any(_format_of(f) is not fmt for f in files):
+    files = [unquote(f) for f in input_files(df)]
+    if reader.input_format is InputFormat.AUTO and any(_format_of(f) is not fmt for f in files):
         return None
-    if exact:  # answer as the path join would
-        base = fs.spark_url(path)
-        for f in files:
-            if not f.startswith(base):
-                raise unmatched(fs, f)
-            if not all(map(binds_alike, f[len(base):].strip("/").split("/")[:-1])):
-                return None
+    base = fs.spark_url(path)
+    for f in files:
+        if not f.startswith(base):
+            raise unmatched(fs, f)
+        if not all("=" in s for s in f[len(base):].strip("/").split("/")[:-1]):
+            return None
 
-    columns = df.columns
-    if columns[len(columns) - len(keys):] != keys:
-        df = df.select(*[c for c in columns if c not in keys], *keys)
+    schema = df.schema
+    # Spark types a key void when every loaded value of it is NULL; the
+    # path join binds it as a string
+    void = {k for k in keys if isinstance(schema[k].dataType, NullType)}
+    if schema.names[len(schema.names) - len(keys):] != keys or void:
+        keyed = [F.col(k).cast("string").alias(k) if k in void else k for k in keys]
+        df = df.select(*[c for c in schema.names if c not in keys], *keyed)
     return project_columns(df.where(where), reader.columns, keys)
 
 

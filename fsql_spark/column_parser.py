@@ -13,13 +13,37 @@ listed, and Spark's native partition discovery binds the directories below
 the kept prefixes. The driver-side crawl (``discovery.discover_partitions``)
 uses it for the rest: value-only layouts (:class:`FixedColumnsParser` dirs +
 filename column) and bare-name generators (SURVEY §4.3.2).
+
+Every ``key=value`` name binds by Spark's rule (:func:`hive_binding`), so
+the driver and Spark's partition discovery give the same values.
 """
 
 from __future__ import annotations
 
+import re
 from abc import ABC, abstractmethod
 from dataclasses import dataclass
 from typing import Optional
+
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+_HEX_ESCAPE = re.compile("%([0-9A-Fa-f]{2})")
+
+
+def _unescape(text: str) -> str:
+    return _HEX_ESCAPE.sub(lambda m: chr(int(m[1], 16)), text)
+
+
+def hive_binding(segment: str) -> Optional[tuple[str, Optional[str]]]:
+    """The ``(column, value)`` Spark's partition discovery binds for the
+    ``key=value`` name ``segment`` (split at the first ``=``); None for a
+    name without ``=``. Each ``%XX`` with two hex digits becomes the
+    character with that code, one character per escape (``%C3%BC`` is two),
+    and any other ``%`` stays as written; a value of
+    ``__HIVE_DEFAULT_PARTITION__`` is None, the NULL Spark writes it for."""
+    key, eq, value = segment.strip("/").partition("=")
+    if not eq:
+        return None
+    return _unescape(key), None if value == HIVE_NULL else _unescape(value)
 
 
 @dataclass(frozen=True)
@@ -50,8 +74,9 @@ class ColumnParser(ABC):
     """Parser+generator for one level of the partition tree."""
 
     @abstractmethod
-    def parse(self, segment: str) -> tuple[str, str]:
-        """Map a dir/file name to a (column, value) binding."""
+    def parse(self, segment: str) -> tuple[str, Optional[str]]:
+        """Map a dir/file name to a (column, value) binding; a value of
+        None is a NULL."""
 
     @abstractmethod
     def tail(self, bound: dict[str, str]) -> "ColumnParser":
@@ -88,11 +113,11 @@ class AutoParser(ColumnParser):
     def __init__(self, partition_grammars: Optional[list[PartitionGrammar]] = None):
         self.grammars = list(partition_grammars) if partition_grammars else None
 
-    def parse(self, segment: str) -> tuple[str, str]:
-        key, eq, value = segment.strip("/").partition("=")
-        if not eq:
+    def parse(self, segment: str) -> tuple[str, Optional[str]]:
+        binding = hive_binding(segment)
+        if binding is None:
             raise ValueError(f"not a key=value partition segment: {segment!r}")
-        return key, value
+        return binding
 
     def tail(self, bound: dict[str, str]) -> "ColumnParser":
         return self if not self.grammars else AutoParser(self.grammars[1:])
@@ -187,12 +212,10 @@ class DateRangeGenerator(ColumnParser):
             _parse_date(start), _parse_date(end) - _dt.timedelta(days=1), "year", names, include_column_in_path
         )
 
-    def parse(self, segment: str) -> tuple[str, str]:
-        segment = segment.strip("/")
+    def parse(self, segment: str) -> tuple[str, Optional[str]]:
         if self.include_column_in_path:
-            key, _, value = segment.partition("=")
-            return key, value
-        return self.names[self.level], segment
+            return hive_binding(segment)  # generated names all hold "="
+        return self.names[self.level], segment.strip("/")
 
     def tail(self, bound: dict[str, str]) -> "ColumnParser":
         import calendar as _cal

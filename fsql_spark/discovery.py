@@ -17,17 +17,21 @@ the tree at a time:
 One listing loop serves every driver walk: :func:`list_level` does steps 1
 and 2 for a whole level, its ``ls`` calls on one pool of at most 32 threads
 per level, the reference's fetch pool and its noted "parallelisation
-opportunity" (`partition_discovery.py:71`). :func:`discover_partitions`
-goes down to the files; it serves value-only layouts with filename
-columns, bare-name date generators, trees that are not one Hive layout,
-names Spark binds otherwise than the driver, non-Spark readers (which
-then get the file list) and the maintenance calls. :func:`query_prefixes`
-is the walk of every other Hive read: it judges directories, not files,
-and stops as soon as every generated level and every key the query
-references is bound. Spark gets the kept prefixes under ``basePath`` (or
-their ancestors within its serial-listing threshold,
-:func:`covering_prefixes`), its ``InMemoryFileIndex`` lists below them, and
-a filter on the partition columns keeps the answer exact.
+opportunity" (`partition_discovery.py:71`). Both walks bind a
+``key=value`` name as Spark's partition discovery does
+(:func:`~fsql_spark.column_parser.hive_binding`: ``%XX`` escapes decoded,
+``__HIVE_DEFAULT_PARTITION__`` as None), so every read path sees the same
+values. :func:`discover_partitions` goes down to the files; it serves
+value-only layouts with filename columns, bare-name date generators,
+trees that are not one Hive layout, names Spark cannot bind (an empty
+key or value), non-Spark readers (which then get the file list) and the
+maintenance calls. :func:`query_prefixes` is the walk of every other Hive
+read: it judges directories, not files, and stops as soon as every
+generated level and every key the query references is bound. Spark gets
+the kept prefixes under ``basePath`` (or their ancestors within its
+serial-listing threshold, :func:`covering_prefixes`), its
+``InMemoryFileIndex`` lists below them, and one literal list of the kept
+partitions keeps the answer exact.
 """
 
 from __future__ import annotations
@@ -37,16 +41,11 @@ from dataclasses import dataclass, field
 from functools import partial
 from typing import Iterator, Optional
 
-from .column_parser import AutoParser, ColumnParser, DateRangeGenerator
+from .column_parser import AutoParser, ColumnParser, DateRangeGenerator, hive_binding
 from .fs import FileSystem, is_hidden
 from .queries import Query
 
 _LIST_POOL_SIZE = 32  # reference uses a 32-thread fetch pool (`deser.py:153`)
-# names Spark's own partition discovery would bind differently from the
-# driver: it unescapes "%", and NUL separates the kept list of the exact
-# filter
-_UNSAFE_CHARS = frozenset("%\0")
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -148,23 +147,13 @@ def _generated_levels(parser: ColumnParser) -> list[bool]:
 @dataclass
 class Walk:
     """What a prefix load reads: the ``keys`` the walk bound, in path order;
-    the directories it ``kept`` at the deepest level it judged; the
-    ``prefixes`` Spark loads (those or their ancestors); and whether the
-    read is ``exact``, i.e. answers as the path join: ``kept`` passed
-    ``eval_all`` and every name below must :func:`binds_alike`."""
+    the directories it ``kept`` at the deepest level it judged, each
+    passing ``eval_all``; and the ``prefixes`` Spark loads (those or their
+    ancestors)."""
 
     keys: list[str]
     kept: list[Partition]
     prefixes: list[str]
-    exact: bool
-
-
-def binds_alike(segment: str) -> bool:
-    """Whether Spark's partition discovery binds the directory ``segment``
-    as the path join does: ``key=value`` with a value neither empty nor
-    the Hive null, and no ``%`` (Spark unescapes it) or NUL."""
-    _, sep, value = segment.partition("=")
-    return bool(sep and value) and value != _HIVE_NULL and _UNSAFE_CHARS.isdisjoint(segment)
 
 
 def query_prefixes(
@@ -177,79 +166,51 @@ def query_prefixes(
     Goes down one level at a time while a generated level or a key the
     query references is still unbound. A level ``parser`` generates is
     named, not listed; any other is listed, each of its directories
-    concurrently. Each ``key=value`` child that ``eval_available`` cannot
-    rule out is kept.
+    concurrently. Each name binds as Spark's partition discovery binds it
+    (:func:`~fsql_spark.column_parser.hive_binding`), and each child that
+    ``eval_available`` cannot rule out is kept. The directories of the
+    last level that pass ``eval_all`` are loaded, or their ancestors within
+    ``serial_limit`` (Spark's serial-listing threshold, above which it
+    lists with a Spark job; :func:`covering_prefixes`); a loaded prefix
+    ending in a generated level is checked to exist (:func:`_existing`).
 
-    A bare ``AutoParser`` read with an expressible query answers as Spark's
-    own partition discovery, narrowed by ``query.to_column``; so the walk
-    also stops at a level that pruned nothing (its parents load the same
-    files in fewer paths) or whose survivors exceed ``serial_limit``
-    (Spark's serial-listing threshold: more paths than that start a
-    listing job). A name it cannot judge (not ``key=value`` under the
-    level's key) loads the whole ``root``; a ``%`` value is kept unpruned
-    and unbound, since Spark unescapes it.
-
-    Every other read is ``exact``, answering as the path join: the
-    survivors are judged with ``eval_all`` and loaded, or their ancestors
-    within ``serial_limit`` (:func:`covering_prefixes`) are; a loaded
-    prefix ending in a generated level is checked to exist
-    (:func:`_existing`). A name that is not ``key=value`` or that Spark
-    would bind otherwise than the driver (:func:`binds_alike`) returns
-    None.
-
-    Either way a listed level that holds data files returns None, beside
-    or instead of the next key's directories, unless it is the root of an
-    unpartitioned table: loading the kept prefixes could hide a key from
-    Spark's layout check.
+    Returns None, for driver discovery and the path join, at a name that
+    is not ``key=value`` under the level's key, and at a listed level that
+    holds data files beside or instead of the next key's directories,
+    unless it is the root of an unpartitioned table: loading the kept
+    prefixes could hide a key from Spark's layout check.
     """
     generated = _generated_levels(parser)
-    # a bare AutoParser with an expressible query answers as Spark's own
-    # partition discovery; every other read answers as the path join
-    exact = not (query.expressible and isinstance(parser, AutoParser) and parser.grammars is None)
     referenced = query.referenced_columns()
     keys: list[str] = []
     level = [(Partition(root, {}), parser)]
-    depth = None  # set when an expressible walk stops above its survivors
     while level and (len(keys) < len(generated) or not referenced.issubset(keys)):
         listings = list_level(fs, level)
         if any(files for files, _ in listings):
             if keys or any(dirs for _, dirs in listings):
                 return None
             break  # an unpartitioned table
-        key, judged, children = None, 0, []
+        key, children = None, []
         for (part, p), (_, segments) in zip(level, listings):
             for segment in segments:
-                name, sep, value = segment.partition("=")
-                key = name if key is None else key
-                if not sep or name != key:
-                    return None if exact else Walk([], [Partition(root, {})], [root], False)
-                if exact and not binds_alike(segment):
+                binding = hive_binding(segment)
+                if binding is None or key not in (None, binding[0]):
                     return None
-                judged += 1
-                if "%" in value:
-                    child = Partition(part.url + segment + "/", part.columns)
-                else:
-                    child = part.expand_by(segment + "/", (key, value))
-                    if not query.eval_available(child.columns):
-                        continue
-                children.append((child, p.tail(child.columns)))
+                key = binding[0]
+                child = part.expand_by(segment + "/", binding)
+                if query.eval_available(child.columns):
+                    children.append((child, p.tail(child.columns)))
         level = children
         if key is None:
             break  # nothing below the kept directories
         keys.append(key)
-        if not exact and (len(children) == judged or len(children) > serial_limit):
-            depth = len(keys) - 1  # the parents: the same files in fewer paths, or few enough
-            break
-    kept = [part for part, _ in level]
-    if exact:
-        kept = [part for part in kept if query.eval_all(part.columns)]
-    depth = len(keys) if depth is None else depth
-    depth, prefixes = covering_prefixes(root, [p.url for p in kept], depth, serial_limit)
+    kept = [part for part, _ in level if query.eval_all(part.columns)]
+    depth, prefixes = covering_prefixes(root, [p.url for p in kept], len(keys), serial_limit)
     if 0 < depth <= len(generated) and generated[depth - 1]:
         found = _existing(fs, prefixes)
         prefixes = [url for url in prefixes if url in found]
         kept = [part for part in kept if _ancestor(root, part.url, depth) in found]
-    return Walk(keys, kept, prefixes, exact)
+    return Walk(keys, kept, prefixes)
 
 
 def _existing(fs: FileSystem, urls: list[str]) -> set[str]:

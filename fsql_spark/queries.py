@@ -1,27 +1,27 @@
 """Partition-predicate query language, compiled to Catalyst where possible.
 
 Reproduces the semantics of the reference's ``Query`` protocol
-(``/root/reference/src/fsql/query.py``) with one addition that makes it
-Spark-native: every query that is *expressible* as a Column expression
-compiles via :meth:`Query.to_column`, so the fast path is a plain
-``spark.read.load(prefixes).where(expr)`` and Catalyst's partition pruning
-does the rest. The Python-side ``eval_all``/``eval_available`` pair is
-retained for:
+(``/root/reference/src/fsql/query.py``). The Python-side
+``eval_all``/``eval_available`` pair decides every read:
 
-- the listing walk of every Hive read (``discovery.query_prefixes``), which
-  asks ``eval_available`` which ``key=value`` prefixes to hand to Spark;
-
-- black-box predicates (:class:`AtomicQuery` — reference `query.py:46-63`),
-  which Catalyst cannot push into partition pruning; the walk judges them
-  driver-side over the bound directories with ``eval_all``, and one literal
-  list of the kept partitions filters the one distributed scan;
+- the listing walk of every Hive read (``discovery.query_prefixes``) asks
+  ``eval_available`` which ``key=value`` prefixes to go down into and
+  ``eval_all`` which to keep; one literal list of the kept partitions then
+  filters the one distributed scan;
+- black-box predicates (:class:`AtomicQuery` — reference `query.py:46-63`)
+  are judged the same way;
 - non-Hive layouts handled by driver-side discovery (see ``discovery.py``).
 
+Every built-in query also compiles to a Catalyst Column
+(:meth:`Query.to_column`) that agrees with ``eval_all`` row by row.
+
 Semantics contract (all from the reference):
-- predicates see only *partition-path* columns, always strings;
+- predicates see only *partition-path* columns, always strings, or None
+  for a Hive NULL (``__HIVE_DEFAULT_PARTITION__``);
 - ``eval_all``: missing referenced column => False (`query.py:55-58`);
 - ``eval_available``: missing referenced column => True — "can't rule out
-  yet", the pruning oracle (`query.py:60-63`).
+  yet", the pruning oracle (`query.py:60-63`);
+- a built-in atom over a None value is False, as its Column is over NULL.
 """
 
 from __future__ import annotations
@@ -67,14 +67,6 @@ class Query(ABC):
         still evaluates its satisfiable branch.
         """
         raise NotExpressibleError(type(self).__name__)
-
-    @property
-    def expressible(self) -> bool:
-        """Whether :meth:`to_column` compiles, known without compiling:
-        building the Column makes py4j calls, ~0.15 CPU-s for a
-        three-range LexRangeQuery. A class compiles when it defines
-        ``to_column``; a composition when its parts do."""
-        return type(self).to_column is not Query.to_column
 
     def _gate(self, available: frozenset[str] | None, col: Column) -> Column:
         if available is not None and not self.referenced_columns().issubset(available):
@@ -132,10 +124,6 @@ class BooleanOperatorQuery(Query):
 
     def eval_available(self, columns: dict[str, str]) -> bool:
         return self._combine(self.left.eval_available(columns), self.right.eval_available(columns))
-
-    @property
-    def expressible(self) -> bool:
-        return self.left.expressible and self.right.expressible
 
     def to_column(self, available: frozenset[str] | None = None) -> Column:
         lc, rc = self.left.to_column(available), self.right.to_column(available)
@@ -198,10 +186,10 @@ class EqualsQuery(Query):
         return frozenset({self.column})
 
     def eval_all(self, columns: dict[str, str]) -> bool:
-        return columns.get(self.column) == self.value
+        return self.value is not None and columns.get(self.column) == self.value
 
     def eval_available(self, columns: dict[str, str]) -> bool:
-        return self.column not in columns or columns[self.column] == self.value
+        return self.column not in columns or (self.value is not None and columns[self.column] == self.value)
 
     def to_column(self, available: frozenset[str] | None = None) -> Column:
         return self._gate(available, F.col(self.column) == F.lit(self.value))
@@ -218,10 +206,14 @@ class InQuery(Query):
         return frozenset({self.column})
 
     def eval_all(self, columns: dict[str, str]) -> bool:
-        return self.column in columns and columns[self.column] in self.values
+        value = columns.get(self.column)
+        return value is not None and value in self.values
 
     def eval_available(self, columns: dict[str, str]) -> bool:
-        return self.column not in columns or columns[self.column] in self.values
+        if self.column not in columns:
+            return True
+        value = columns[self.column]
+        return value is not None and value in self.values
 
     def to_column(self, available: frozenset[str] | None = None) -> Column:
         return self._gate(available, F.col(self.column).isin(list(self.values)))
@@ -299,6 +291,8 @@ class LexRangeQuery(Query):
             if r.comparator is ColumnComparator.wld:
                 continue
             value = columns[r.name]
+            if value is None:
+                return False  # the Column compares NULL, which filters the row
             try:
                 vs_min = r.comparator.compare(value, r.min_value)
                 vs_max = r.comparator.compare(value, r.max_value)
@@ -424,8 +418,8 @@ class DateRangeQuery(Query):
             d = datetime.date(
                 int(columns[self.year_name]), int(columns[self.month_name]), int(columns[self.day_name])
             )
-        except ValueError:
-            return False  # malformed y/m/d binding matches nothing (lenient, like to_column)
+        except (ValueError, TypeError):
+            return False  # a malformed or None y/m/d binding matches nothing (lenient, like to_column)
         return self.start <= d < self.end
 
     def eval_available(self, columns: dict[str, str]) -> bool:
@@ -439,8 +433,8 @@ class DateRangeQuery(Query):
             day_hi = int(columns.get(self.day_name, str(calendar.monthrange(year, month_hi)[1])))
             leftmost = datetime.date(year, month_lo, day_lo)
             rightmost = datetime.date(year, month_hi, day_hi)
-        except ValueError:
-            # malformed binding (month=2/day=30, non-numeric, month=13):
+        except (ValueError, TypeError):
+            # malformed or None binding (month=2/day=30, non-numeric, month=13):
             # every completion is invalid, so the subtree can never match —
             # same lenient non-match semantics as eval_all and to_column
             # (keeps the crawl and the Catalyst path consistent)

@@ -550,16 +550,19 @@ class IdentityReader(DataReader):
 
 
 class ListingReader(DataReader):
-    """Spark-native fancy-ls: a small DataFrame of (path, partition cols) —
-    feed selected paths back into ``spark.read`` to consume."""
+    """Spark-native fancy-ls: a small DataFrame of (path, partition cols),
+    all strings. The ``path`` values are raw ``FileSystem.spark_url``
+    strings, and ``spark.read`` globs every path it loads: to feed selected
+    paths back into it, backslash-escape ``*?[]{}\\`` first, as
+    :meth:`SparkReader.scan` does, or a name such as ``k=[x]`` loads
+    ``k=x``."""
 
     def read(self, spark, partitions: list[Partition], fs: FileSystem, fmt: InputFormat):
         parts = list(partitions)
         keys = sorted({k for p in parts for k in p.columns})
         rows = [(fs.spark_url(p.url), *[p.columns.get(k) for k in keys]) for p in parts]
-        return spark.createDataFrame(rows, ["path", *keys]) if rows else spark.createDataFrame(
-            [], StructType()
-        )
+        schema = StructType([StructField(c, StringType()) for c in ["path", *keys]]) if rows else StructType()
+        return spark.createDataFrame(rows, schema)
 
 
 SPARK_READER = SparkReader()

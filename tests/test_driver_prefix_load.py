@@ -340,4 +340,4 @@ def test_join_fallbacks(spark, tmp_path, join_calls, case, build, query, parser,
         spark.conf.set(key, old)
     df = out[0] if isinstance(out, tuple) else out
     assert sorted(str(r.x) for r in df.collect()) == ["1", "2"], case
-    assert bool(join_calls) == (case not in ("hive", "glob value")), case
+    assert bool(join_calls) == (case not in ("hive", "percent value", "glob value")), case

@@ -13,14 +13,11 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from fsql_spark import queries as queries_module
 from fsql_spark.queries import (
-    AtomicQuery,
     ColumnComparator,
     ColumnRange,
     DateRangeQuery,
     LexRangeQuery,
-    NotExpressibleError,
     Q_AND,
     Q_EQ,
     Q_FALSE,
@@ -136,42 +133,34 @@ def test_available_gating_matches_python(spark):
         assert got == expected, f"query {i}: {queries[i]} gating disagrees"
 
 
-def test_atomic_query_not_expressible():
-    q = AtomicQuery(lambda c1: True)
-    assert not q.expressible
-    assert Q_AND(q, Q_EQ("c1", "1")).expressible is False
-    assert Q_EQ("c1", "1").expressible is True
+def test_null_binding_is_a_false_atom(spark):
+    """A Hive NULL binds as None on the driver: an atom over it is False,
+    as its Column is over NULL, so eval_all agrees with to_column and
+    eval_available rules the row out. No evaluator raises on None."""
+    rng = random.Random(SEED + 2)
+    columns = ["c1", "c2", "c3"]
+    pool = [str(v) for v in range(10)] + list("abcdef") + ["zz"]
+    bindings = [{c: rng.choice(pool) for c in columns} for _ in range(120)]
+    for i, b in enumerate(bindings):
+        b[columns[i % 3]] = None
+    queries = random_queries(rng, columns)
+    dates = [{"c1": str(rng.choice([2021, 2022])), "c2": str(rng.randint(1, 12)), "c3": str(rng.randint(1, 28))}
+             for _ in range(60)]
+    for i, b in enumerate(dates):
+        b[columns[i % 3]] = None
+    date_queries = [DateRangeQuery("2021/03/01", "2022/10/01", "c1", "c2", "c3"),
+                    DateRangeQuery("2022/01/01", "2022/01/15", "c1", "c2", "c3")]
 
-
-def test_expressible_answers_without_compiling(spark, monkeypatch):
-    """``expressible`` agrees with whether ``to_column`` compiles, and
-    builds no Column to find out."""
-    atomic = AtomicQuery(lambda c1: True)
-    dates = DateRangeQuery("2022/04/30", "2022/05/02")
-    queries = [
-        *random_queries(random.Random(SEED), ["c1", "c2"])[:20],
-        dates, atomic, Q_TRUE,
-        Q_AND(atomic, Q_EQ("c1", "1")),
-        Q_OR(Q_EQ("c1", "1"), Q_AND(dates, Q_IN("c2", ["a"]))),
-        Q_OR(Q_EQ("c1", "1"), Q_AND(dates, atomic)),
-    ]
-
-    def compiles(q):
-        try:
-            q.to_column()
-        except NotExpressibleError:
-            return False
-        return True
-
-    want = [compiles(q) for q in queries]
-    assert True in want and False in want
-
-    class NoColumns:
-        def __getattr__(self, name):
-            raise AssertionError(f"expressible called F.{name}")
-
-    monkeypatch.setattr(queries_module, "F", NoColumns())
-    assert [q.expressible for q in queries] == want
+    schema = "c1 string, c2 string, c3 string"
+    for rows, zoo in [(bindings, queries), (dates, date_queries)]:
+        df = spark.createDataFrame([tuple(b[c] for c in columns) for b in rows], schema)
+        got = df.select(*[q.to_column().alias(f"q{i}") for i, q in enumerate(zoo)]).collect()
+        for i, q in enumerate(zoo):
+            for b, r in zip(rows, got):
+                want = bool(r[f"q{i}"])
+                assert q.eval_all(b) == want, (i, b)
+                assert want or not q.eval_available(b), (i, b)
+                q.eval_available(dict(list(b.items())[:2]))  # a partial binding holding None
 
 
 def test_daterange_compile_matches_eval(spark):
