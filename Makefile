@@ -14,9 +14,11 @@
 #   make fsqlcheck            - the core fsql tests (read paths, discovery,
 #                               readers, fs contract; ~1.5 min) with the
 #                               tier-1 environment
-#   make dedupcheck           - the MinHash kernel tests (oracle property test,
-#                               signature tests in test_operators.py; ~2 min)
-#                               with the tier-1 environment
+#   make dedupcheck           - the near-duplicate pair tests (MinHash kernel
+#                               oracle, the Jaccard/prefix-filter/MinHash
+#                               operators against brute force and each other,
+#                               their plan shapes; ~2 min) with the tier-1
+#                               environment
 #   make gate                 - strict driver-twin gate -> /tmp/fsql_gate.json
 #                               (every catalog entry hash-compared against
 #                               its DuckDB oracle at the driver's sf0.01)
@@ -56,7 +58,8 @@ fsqlcheck:
 dedupcheck:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 		timeout -k 10 2670 $(PY) -m pytest tests/test_minhash_kernel.py tests/test_operators.py \
-		-k "minhash or signature" -q -p no:cacheprovider
+		tests/test_property_ops.py tests/test_scale_plans.py \
+		-k "minhash or signature or jaccard or prefix_filter" -q -p no:cacheprovider
 
 gate:
 	$(PY) tools/run_gate.py /tmp/fsql_gate.json

@@ -14,8 +14,9 @@ PREFIX LOAD (Hive ``key=value`` trees read by a bare or declared
     the tree's directories level by level, down to every key the query
     references, generating the levels the parser generates, and keeps the
     partitions ``eval_all`` accepts. Spark loads them under
-    ``basePath=root``, filtered by one literal ``array_contains`` over the
-    kept partitions' values (:func:`_kept_filter`). The walk binds each
+    ``basePath=root``, filtered by one ``arrays_overlap`` of the keys with
+    a ``from_json`` literal of the kept partitions' values
+    (:func:`_kept_filter`). The walk binds each
     name as Spark's partition discovery does, so the two agree on every
     value. Partition discovery, pruning, predicate/projection pushdown and
     vectorized scans stay Catalyst/Tungsten built-ins; partition columns

@@ -134,9 +134,6 @@ class AutoParser(ColumnParser):
     def is_terminal_level(self) -> bool:
         return not self.grammars  # bare: every level; with grammars: exhausted
 
-    def declared_depth(self) -> Optional[int]:
-        return len(self.grammars) if self.grammars is not None else None
-
 
 class FixedColumnsParser(ColumnParser):
     """Value-only segments (``2022/10/...``) with positionally-declared column

@@ -3,7 +3,7 @@
 Every entry here answers an aggregate THROUGH :func:`fsql_spark.api.
 read_partitioned_table` over a partitioned tree materialized from the flat
 testdata — so the driver's DuckDB oracle exercises the engine's own scan
-machinery (partition discovery, pruning-query compilation, driver discovery,
+machinery (partition discovery, the query-directed walk, driver discovery,
 value-only layouts), not just ``spark.read.parquet`` (reference surface:
 `api.py:70-107`, `query.py`, `daterange_utils.py`, `column_parser.py`).
 
@@ -15,8 +15,8 @@ partition keys first so each Hive partition gets ONE file instead of
 
 Paths exercised per entry:
 
-- ``q_fsql_daterange_revenue`` — FAST PATH (Catalyst): DateRangeQuery compiled
-  to a partition-pruning Column over a year/month/day tree.
+- ``q_fsql_daterange_revenue`` — FAST PATH: DateRangeQuery judged by the walk
+  over a year/month/day tree, the kept days loaded as one partition filter.
 - ``q_fsql_lexrange_revenue`` — FAST PATH: LexRangeQuery (num comparators)
   tuple-range expansion over year/month.
 - ``q_fsql_eq_in_pushdown`` — FAST PATH: Q_AND/Q_EQ/Q_IN + ``columns=``
@@ -386,9 +386,9 @@ def _nation_by_region_tree(spark: SparkSession, sf_dir: str) -> str:
 # --------------------------------------------------------------------------
 
 def q_fsql_daterange_revenue(spark: SparkSession, sf: str) -> DataFrame:
-    """FAST PATH: DateRangeQuery [1995-03-15, 1995-06-01) compiled to a
-    Catalyst partition filter over the y/m/d tree (asserted to reach the scan
-    as PartitionFilters in tests/test_scale_plans.py)."""
+    """FAST PATH: DateRangeQuery [1995-03-15, 1995-06-01) judged by the
+    walk over the y/m/d tree; the kept days reach the scan as
+    PartitionFilters (asserted in tests/test_scale_plans.py)."""
     url = _orders_ymd_tree(spark, sf)
     df = read_partitioned_table(url, DateRangeQuery("1995/03/15", "1995/06/01"), spark=spark)
     return df.groupBy("month").agg(

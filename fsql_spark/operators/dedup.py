@@ -155,6 +155,30 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def _verify_jaccard(
+    cand_keys: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    threshold: float,
+    names: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """The exact-Jaccard verify every pair operator ends with: re-attach the
+    shingle sets ``sh`` of ``left`` (keyed ``k``) and ``right`` (keyed
+    ``k2``) to the candidate ``(k, k2)`` keys, keep pairs whose Jaccard
+    reaches ``threshold`` and round it to 4 places. Shingle sets ride only
+    with surviving candidates, so the output has no false positives."""
+    s1 = left.select("k", "sh")
+    s2 = right.select(F.col("k").alias("k2"), F.col("sh").alias("sh2"))
+    cands = cand_keys.join(s1, "k").join(s2, "k2")
+    inter = F.size(F.array_intersect("sh", "sh2"))
+    jac = inter / (F.size("sh") + F.size("sh2") - inter)
+    return cands.where(jac >= threshold).select(
+        F.col("k").alias(names[0]),
+        F.col("k2").alias(names[1]),
+        F.round(jac, 4).alias("jaccard"),
+    )
+
+
 class CandidateExplosionError(ValueError):
     """The inverted-index self-join would materialize too many pairs."""
 
@@ -195,7 +219,7 @@ def jaccard_pairs(
     the no-cut path counts join rows per (k, k2) — with duplicate keys the
     shared shingles of every row-pair combination sum into one count
     (jaccard can exceed 1), while the ``max_shingle_df`` branch's
-    array_intersect verify computes per-row-pair values, so the two
+    shingle-set verify computes per-row-pair values, so the two
     branches would disagree on the same degenerate input (advice find).
     Deduplicate keys (or aggregate shingle sets per key) upstream; every
     catalog caller feeds uniquely-keyed document tables.
@@ -228,46 +252,25 @@ def jaccard_pairs(
                 "max_candidate_pairs explicitly."
             )
     t2 = cand_tok.select(F.col("k").alias("k2"), F.col("w").alias("w2"))
-    if max_shingle_df is None:
-        # no frequency cut => the candidate join already touches every
-        # shared DISTINCT shingle of every pair exactly once, so
-        # |intersection| is a COUNT on the join output (the formulation the
-        # DuckDB oracle uses) — map-side partial aggregation spreads the
-        # work that the old distinct-pairs + array_intersect verify
-        # concentrated into one AQE-coalesced task (small pair bytes, heavy
-        # per-row array CPU)
-        common = (
-            cand_tok.join(t2, (cand_tok.w == t2.w2) & (cand_tok.k < t2.k2))
-            .groupBy("k", "k2")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        sizes = base.select("k", F.size("sh").alias("n"))
-        s2n = sizes.select(F.col("k").alias("k2"), F.col("n").alias("n2"))
-        jac = F.col("c") / (F.col("n") + F.col("n2") - F.col("c"))
-        return (
-            common.join(sizes, "k")
-            .join(s2n, "k2")
-            .where(jac >= threshold)
-            .select(
-                F.col("k").alias("doc_a"),
-                F.col("k2").alias("doc_b"),
-                F.round(jac, 4).alias("jaccard"),
-            )
-        )
-    cand_keys = (
-        cand_tok.join(t2, (cand_tok.w == t2.w2) & (cand_tok.k < t2.k2))
-        .select("k", "k2")
-        .distinct()
-    )
-    # under max_shingle_df the cut index undercounts shared shingles, so
-    # verify on the FULL shingle sets (exact even under the cut)
-    s1 = base.select("k", "sh")
-    s2 = base.select(F.col("k").alias("k2"), F.col("sh").alias("sh2"))
-    cands = cand_keys.join(s1, "k").join(s2, "k2")
-    inter = F.size(F.array_intersect("sh", "sh2"))
-    jac = inter / (F.size("sh") + F.size("sh2") - inter)
+    shared = cand_tok.join(t2, (cand_tok.w == t2.w2) & (cand_tok.k < t2.k2))
+    if max_shingle_df is not None:
+        # under max_shingle_df the cut index undercounts shared shingles, so
+        # verify on the FULL shingle sets (exact even under the cut)
+        return _verify_jaccard(shared.select("k", "k2").distinct(), base, base, threshold)
+    # no frequency cut => the candidate join already touches every shared
+    # DISTINCT shingle of every pair exactly once, so |intersection| is a
+    # COUNT on the join output (the formulation the DuckDB oracle uses) —
+    # map-side partial aggregation spreads the work that a distinct-pairs
+    # + shingle-set verify concentrates into one AQE-coalesced task (small
+    # pair bytes, heavy per-row array CPU)
+    common = shared.groupBy("k", "k2").agg(F.count(F.lit(1)).alias("c"))
+    sizes = base.select("k", F.size("sh").alias("n"))
+    s2n = sizes.select(F.col("k").alias("k2"), F.col("n").alias("n2"))
+    jac = F.col("c") / (F.col("n") + F.col("n2") - F.col("c"))
     return (
-        cands.where(jac >= threshold)
+        common.join(sizes, "k")
+        .join(s2n, "k2")
+        .where(jac >= threshold)
         .select(
             F.col("k").alias("doc_a"),
             F.col("k2").alias("doc_b"),
@@ -351,16 +354,7 @@ def prefix_filter_pairs(
         .select("k", "k2")
         .distinct()
     )
-    s1 = base.select("k", "sh")
-    s2 = base.select(F.col("k").alias("k2"), F.col("sh").alias("sh2"))
-    cands = cand_keys.join(s1, "k").join(s2, "k2")
-    inter = F.size(F.array_intersect("sh", "sh2"))
-    jac = inter / (F.size("sh") + F.size("sh2") - inter)
-    return cands.where(jac >= threshold).select(
-        F.col("k").alias("doc_a"),
-        F.col("k2").alias("doc_b"),
-        F.round(jac, 4).alias("jaccard"),
-    )
+    return _verify_jaccard(cand_keys, base, base, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -447,6 +441,58 @@ def _banded_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFram
     ).select("k", "bb.band", "bb.bucket")
 
 
+def _signatures(
+    df: DataFrame | None,
+    key_col: str,
+    text_col: str,
+    num_hashes: int,
+    ngram: int,
+    sigs: DataFrame | None,
+) -> DataFrame:
+    """The (k, sig, sh) table one side of an LSH join reads: ``sigs`` when
+    the caller supplies it, else computed from ``df`` and cached."""
+    if sigs is not None:
+        _check_sig_width(sigs, num_hashes)
+        # defensive twin of the v3 build-time exclusion: a caller-supplied
+        # signature frame (bypassing read_corpus_signatures' format gate)
+        # may still carry empty-shingle rows — constant signatures that
+        # collide in every band and 0/0 in the verify join
+        return sigs.where(F.size("sh") > 0)
+    # persist signatures: both sides of the bucket join (and the verify
+    # step) reuse them instead of recomputing k*|shingles| hashes per
+    # reference. At scale this is a slim table: key + k longs + shingles.
+    sigs = minhash_signatures(df, key_col, text_col, num_hashes, ngram).persist()
+    # materialize before planning the bucket join: AQE submits both band
+    # sides' map stages concurrently and two racing cache-miss scans each
+    # run the full signature kernel (same fix as the phash entry)
+    sigs.count()
+    return sigs
+
+
+def _lsh_pairs(
+    sigs: DataFrame,
+    other: DataFrame | None,
+    threshold: float,
+    num_hashes: int,
+    bands: int,
+    names: tuple[str, str],
+) -> DataFrame:
+    """Banded-bucket candidates, then the exact-Jaccard verify: pairs
+    within ``sigs`` (``k < k2``, each pair once) when ``other`` is None,
+    else every pair between ``sigs`` and ``other``."""
+    rows_per_band = num_hashes // bands
+    banded = _banded_buckets(sigs, bands, rows_per_band)
+    right = banded if other is None else _banded_buckets(other, bands, rows_per_band)
+    right = right.select(
+        F.col("k").alias("k2"), F.col("band").alias("band2"), F.col("bucket").alias("bucket2")
+    )
+    on = (banded.band == right.band2) & (banded.bucket == right.bucket2)
+    if other is None:
+        on = on & (banded.k < right.k2)
+    cand_keys = banded.join(right, on).select("k", "k2").distinct()
+    return _verify_jaccard(cand_keys, sigs, sigs if other is None else other, threshold, names)
+
+
 def minhash_lsh_pairs(
     df: DataFrame | None,
     key_col: str,
@@ -480,7 +526,12 @@ def minhash_lsh_pairs(
     banding candidate count track DISTINCT contents. Returned pairs then
     relate representatives only — recover full classes with
     :func:`dedup_exact_keys` (one cheap hash-aggregate), which is how a real
-    pipeline separates the exact-dup layer from the near-dup layer anyway."""
+    pipeline separates the exact-dup layer from the near-dup layer anyway.
+
+    Cache: without ``sigs`` the call computes the signature table and
+    persists it, and it stays cached in the session after the call returns.
+    The lazy result reads that cache, and the caller gets no handle to
+    unpersist it, so every such call adds one cached table."""
     if sigs is None and df is None:
         raise ValueError("pass either df or sigs")
     if collapse_exact and sigs is not None:
@@ -494,46 +545,8 @@ def minhash_lsh_pairs(
         )
     if collapse_exact:
         df = dedup_exact(df, [text_col], key_col)
-    rows_per_band = num_hashes // bands
-    if sigs is not None:
-        _check_sig_width(sigs, num_hashes)
-        # defensive twin of the v3 build-time exclusion: a caller-supplied
-        # signature frame (bypassing read_corpus_signatures' format gate)
-        # may still carry empty-shingle rows — constant signatures that
-        # collide in every band and 0/0 in the verify join
-        sigs = sigs.where(F.size("sh") > 0)
-    if sigs is None:
-        # persist signatures: both sides of the self-join (and the verify
-        # step) reuse them instead of recomputing k*|shingles| hashes per
-        # reference. At scale this is a slim table: key + k longs + shingles.
-        sigs = minhash_signatures(df, key_col, text_col, num_hashes, ngram).persist()
-        # materialize before planning the self-join: AQE submits both band
-        # sides' map stages concurrently and two racing cache-miss scans
-        # each run the full signature kernel (same fix as the phash entry)
-        sigs.count()
-    banded = _banded_buckets(sigs, bands, rows_per_band)
-    other = banded.select(
-        F.col("k").alias("k2"), F.col("band").alias("band2"), F.col("bucket").alias("bucket2")
-    )
-    cand_keys = (
-        banded.join(
-            other,
-            (banded.band == other.band2) & (banded.bucket == other.bucket2) & (banded.k < other.k2),
-        )
-        .select("k", "k2")
-        .distinct()
-    )
-    # fetch shingle sets only for surviving candidate pairs
-    s1 = sigs.select("k", "sh")
-    s2 = sigs.select(F.col("k").alias("k2"), F.col("sh").alias("sh2"))
-    cands = cand_keys.join(s1, "k").join(s2, "k2")
-    inter = F.size(F.array_intersect("sh", "sh2"))
-    union = F.size("sh") + F.size("sh2") - inter
-    jac = inter / union
-    return (
-        cands.where(jac >= threshold)
-        .select(F.col("k").alias("doc_a"), F.col("k2").alias("doc_b"), F.round(jac, 4).alias("jaccard"))
-    )
+    sigs = _signatures(df, key_col, text_col, num_hashes, ngram, sigs)
+    return _lsh_pairs(sigs, None, threshold, num_hashes, bands, ("doc_a", "doc_b"))
 
 
 # --------------------------------------------------------------------------
@@ -948,42 +961,17 @@ def minhash_lsh_pairs_against(
     in-plan. The bucket join shuffles narrow (band, bucket, key) triples;
     shingle sets are re-attached only to surviving candidates.
 
-    Output: (new_key, corpus_key, jaccard)."""
-    rows_per_band = num_hashes // bands
-    new_sigs = minhash_signatures(df_new, key_col, text_col, num_hashes, ngram).persist()
-    new_sigs.count()  # see minhash_lsh_pairs: un-built caches race under AQE
-    if corpus_sigs is None:
-        if corpus is None:
-            raise ValueError("pass either corpus or corpus_sigs")
-        corpus_sigs = minhash_signatures(corpus, key_col, text_col, num_hashes, ngram).persist()
-        corpus_sigs.count()
-    else:
-        _check_sig_width(corpus_sigs, num_hashes)
-        corpus_sigs = corpus_sigs.where(F.size("sh") > 0)  # see minhash_lsh_pairs
-    new_banded = _banded_buckets(new_sigs, bands, rows_per_band)
-    corpus_banded = _banded_buckets(corpus_sigs, bands, rows_per_band).select(
-        F.col("k").alias("k2"), F.col("band").alias("band2"), F.col("bucket").alias("bucket2")
-    )
-    cand_keys = (
-        new_banded.join(
-            corpus_banded,
-            (new_banded.band == corpus_banded.band2)
-            & (new_banded.bucket == corpus_banded.bucket2),
-        )
-        .select("k", "k2")
-        .distinct()
-    )
-    s1 = new_sigs.select("k", "sh")
-    s2 = corpus_sigs.select(F.col("k").alias("k2"), F.col("sh").alias("sh2"))
-    cands = cand_keys.join(s1, "k").join(s2, "k2")
-    inter = F.size(F.array_intersect("sh", "sh2"))
-    union = F.size("sh") + F.size("sh2") - inter
-    jac = inter / union
-    return cands.where(jac >= threshold).select(
-        F.col("k").alias("new_key"),
-        F.col("k2").alias("corpus_key"),
-        F.round(jac, 4).alias("jaccard"),
-    )
+    Output: (new_key, corpus_key, jaccard).
+
+    Cache: the call persists the signature table it computes for
+    ``df_new``, and for ``corpus`` without ``corpus_sigs``; each stays
+    cached in the session after the call returns. The lazy result reads
+    those caches, and the caller gets no handle to unpersist them."""
+    if corpus_sigs is None and corpus is None:
+        raise ValueError("pass either corpus or corpus_sigs")
+    new_sigs = _signatures(df_new, key_col, text_col, num_hashes, ngram, None)
+    corpus_sigs = _signatures(corpus, key_col, text_col, num_hashes, ngram, corpus_sigs)
+    return _lsh_pairs(new_sigs, corpus_sigs, threshold, num_hashes, bands, ("new_key", "corpus_key"))
 
 
 # --------------------------------------------------------------------------

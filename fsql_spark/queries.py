@@ -176,7 +176,8 @@ class EqualsQuery(Query):
     """Q_EQ — equality on one partition column (reference `query.py:80-84`).
 
     Unlike the reference (which wraps a lambda in AtomicQuery), this is a
-    first-class node so it compiles to ``col == lit`` and prunes via Catalyst.
+    first-class node: the walk judges it on the bound value, and
+    ``to_column`` gives its ``col == lit`` twin.
     """
 
     column: str

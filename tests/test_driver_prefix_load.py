@@ -33,8 +33,8 @@ from fsql_spark.readers import SparkReader
 SEED = 23
 KEYS = ["year", "month", "day"]
 SERIAL_LIMIT = 32  # Spark's default parallelPartitionDiscovery.threshold
-# Spark writes " " and "ü" as they are and escapes "=" as %3D, which keeps
-# that partition on the path join
+# Spark writes " " and "ü" as they are and escapes "=" as %3D, which every
+# read decodes back to "a=b"
 AWKWARD = {"year": ["x y"], "month": ["ü"], "day": ["a=b", "s p"]}
 
 
@@ -60,7 +60,7 @@ def _spark_tree(spark, rng, root):
     rows = [(f"r{i}-{j}", i, *leaf) for i, leaf in enumerate(leaves) for j in range(2)]
     df = spark.createDataFrame(rows, "payload string, x long, year string, month string, day string")
     write_table(df.coalesce(1), str(root), partition_by=KEYS)
-    # the bindings as the paths spell them ("a%3Db")
+    # the bindings as Spark decodes them ("a%3Db" binds "a=b")
     parts = discover_partitions(Q_TRUE, AUTO_PARSER, Partition(f"{root}/", {}), LocalFileSystem())
     return sorted({tuple(p.columns.values()) for p in parts})
 

@@ -1070,6 +1070,42 @@ def test_minhash_against_cross_corpus(spark):
             assert r["jaccard"] == exact[pair]
 
 
+@pytest.mark.parametrize(
+    "num_hashes,bands,ngram,threshold", [(32, 8, 3, 0.7), (64, 16, 2, 0.5)]
+)
+def test_minhash_against_equals_self_join_cross_pairs(spark, num_hashes, bands, ngram, threshold):
+    """Both LSH modes share one core and bucket collisions are symmetric, so
+    ``minhash_lsh_pairs_against(B, A)`` returns exactly the A×B pairs of
+    ``minhash_lsh_pairs(A ∪ B)``, with equal jaccard values."""
+    from fsql_spark.operators import minhash_lsh_pairs_against
+
+    a = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    src = a.where(F.col("doc_id") < 25)
+    # B's keys are disjoint from A's and above them; its two variant
+    # families are near-dups of A and of each other
+    b = src.select(
+        (F.col("doc_id") + 100000).alias("doc_id"), F.concat("text", F.lit(" zzqx")).alias("text")
+    ).unionByName(
+        src.select(
+            (F.col("doc_id") + 200000).alias("doc_id"), F.concat("text", F.lit(" zzqx yyqw")).alias("text")
+        )
+    )
+    cfg = dict(threshold=threshold, num_hashes=num_hashes, bands=bands, ngram=ngram)
+    both = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in minhash_lsh_pairs(a.unionByName(b), "doc_id", "text", **cfg).collect()
+    }
+    cross = {
+        (r["corpus_key"], r["new_key"]): r["jaccard"]
+        for r in minhash_lsh_pairs_against(b, a, "doc_id", "text", **cfg).collect()
+    }
+    expected = {p: j for p, j in both.items() if p[0] < 100000 <= p[1]}
+    assert cross == expected
+    assert len(cross) >= 20
+    # the self-join also found within-B pairs, which the cross mode must not return
+    assert any(p[0] >= 100000 for p in both)
+
+
 def test_persisted_corpus_signatures_reused_by_batch(spark, tmp_path):
     """The 100 TB incremental flow: corpus signatures materialized ONCE via
     write_corpus_signatures, read back, and joined by a later batch —
