@@ -19,6 +19,10 @@
 #                               operators against brute force and each other,
 #                               their plan shapes; ~2 min) with the tier-1
 #                               environment
+#   make graphcheck           - the iterative graph operator tests (PageRank,
+#                               HITS, k-core, connected components, and that
+#                               no graph loop writes a session conf; ~3 min)
+#                               with the tier-1 environment
 #   make gate                 - strict driver-twin gate -> /tmp/fsql_gate.json
 #                               (every catalog entry hash-compared against
 #                               its DuckDB oracle at the driver's sf0.01)
@@ -32,7 +36,7 @@
 PY ?= python
 SF_DIR ?= /root/testdata/sf0.1
 
-.PHONY: test perfbench perfcheck fsqlcheck dedupcheck gate bench verify
+.PHONY: test perfbench perfcheck fsqlcheck dedupcheck graphcheck gate bench verify
 
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
@@ -60,6 +64,11 @@ dedupcheck:
 		timeout -k 10 2670 $(PY) -m pytest tests/test_minhash_kernel.py tests/test_operators.py \
 		tests/test_property_ops.py tests/test_scale_plans.py \
 		-k "minhash or signature or jaccard or prefix_filter" -q -p no:cacheprovider
+
+graphcheck:
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 $(PY) -m pytest tests/test_graph.py tests/test_clustering.py \
+		tests/test_graph_session_conf.py -q -p no:cacheprovider
 
 gate:
 	$(PY) tools/run_gate.py /tmp/fsql_gate.json

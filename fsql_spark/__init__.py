@@ -62,7 +62,7 @@ from .maintenance import (  # noqa: F401
     file_stats,
     overwrite_partitions,
 )
-from .session import get_spark, temp_conf  # noqa: F401
+from .session import get_spark  # noqa: F401
 from .sql import register_path_tables, sql  # noqa: F401
 
 __version__ = "0.1.0"

@@ -17,9 +17,11 @@ rewrite working set and the visibility window.
 
 from __future__ import annotations
 
+import math
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .api import read_partitioned_table
 from .column_parser import AUTO_PARSER
@@ -60,36 +62,46 @@ def compact(
 ) -> None:
     """Rewrite the tree with ~target-sized files.
 
-    Reads the whole table with :func:`read_partitioned_table` (parquet only),
-    sizes its files on the listing pool as :func:`file_stats` finds them,
-    repartitions to ceil(total_bytes / target) tasks (per partition-key when
-    ``partition_by`` is given, so each Hive partition compacts
-    independently), and swaps directories. The swap is atomic only
-    where ``FileSystem.move`` is (local/HDFS) — see the module docstring for
-    the object-store caveat. At cluster scale run per-partition-subset to
-    bound the rewrite working set."""
-    import math
+    Reads the whole table with :func:`read_partitioned_table` (parquet only)
+    and sizes its files on the listing pool as :func:`file_stats` finds
+    them. Each value of ``partition_by`` becomes ceil(its bytes / target)
+    files of its own, and small values share a task; ``partition_by``
+    defaults to the Hive keys the read binds, so the tree keeps its layout
+    (``[]`` flattens it). Then the directories are swapped. The swap is
+    atomic only where ``FileSystem.move`` is (local/HDFS) — see the module
+    docstring for the object-store caveat. At cluster scale run
+    per-partition-subset to bound the rewrite working set."""
+    import uuid
 
     path, fs = get_url_and_fs(url, fs)
-    files = [part.url for part in discover_partitions(Q_TRUE, AUTO_PARSER, Partition(path), fs)]
-    total_bytes = sum(_each(fs.size, files))
-    n_out = max(1, math.ceil(total_bytes / target_file_bytes))
+    parts = list(discover_partitions(Q_TRUE, AUTO_PARSER, Partition(path), fs))
+    keys = list(dict.fromkeys(key for part in parts for key in part.columns))
+    if partition_by is None:
+        partition_by = keys
+    elif not set(partition_by) <= set(keys):
+        raise ValueError(
+            f"compact: partition_by {partition_by} must name partition keys of the tree {keys}"
+        )
+    bytes_of: dict[tuple, int] = {}
+    for part, size in zip(parts, _each(fs.size, [part.url for part in parts])):
+        value = tuple(part.columns.get(key) for key in partition_by)
+        bytes_of[value] = bytes_of.get(value, 0) + size
 
     df = read_partitioned_table(
         path, Q_TRUE, data_reader=SparkReader(input_format=InputFormat.PARQUET), fs=fs, spark=spark
     )
     # unique staging/backup names: concurrent (or retried) compact calls on
     # the same table must not delete each other's in-flight output
-    import uuid
-
     tag = uuid.uuid4().hex[:8]
     staging = path.rstrip("/") + f".compact_staging_{tag}"
     try:
-        writer = df.repartition(n_out, *partition_by) if partition_by else df.repartition(n_out)
-        out = writer.write.mode("overwrite")
         if partition_by:
-            out = out.partitionBy(*partition_by)
-        out.parquet(fs.spark_url(staging))
+            out = _by_value(df, partition_by, bytes_of, target_file_bytes)
+            out = out.write.partitionBy(*partition_by)
+        else:
+            n_out = max(1, math.ceil(sum(bytes_of.values()) / target_file_bytes))
+            out = df.repartition(n_out).write
+        out.mode("overwrite").parquet(fs.spark_url(staging))
 
         backup = path.rstrip("/") + f".compact_backup_{tag}"
         fs.move(path.rstrip("/"), backup)
@@ -97,6 +109,74 @@ def compact(
         fs.rmtree(backup)
     finally:
         fs.rmtree(staging)
+
+
+def _by_value(
+    df: DataFrame, keys: list[str], bytes_of: dict[tuple, int], target: int
+) -> DataFrame:
+    """``df`` repartitioned so that each value of ``keys`` is written as
+    ceil(its bytes / target) files. A value's rows are dealt round-robin over
+    that many slots, and the slots are packed in order into tasks of up to
+    ``target`` bytes: small values share a task (one file each), and two
+    slots of one value never do, since each holds more than half a target.
+    Each row carries the int that Spark's hash partitioning sends to its
+    task (:func:`_route_keys`), looked up by value in a literal map; a row
+    whose value the map lacks still lands in some task. When one task holds
+    every value, the rows are hash-partitioned by ``keys`` into it with no
+    routing column: the lookup cost a small table's compaction about a
+    sixth of its CPU time."""
+    tasks_of: dict[tuple, list[int]] = {}
+    n, room = 0, 0.0
+    for value, size in bytes_of.items():
+        count = max(1, math.ceil(size / target))
+        for _ in range(count):
+            if n == 0 or size / count > room:
+                n, room = n + 1, float(target)
+            room -= size / count
+            tasks_of.setdefault(value, []).append(n - 1)
+    if n <= 1:
+        return df.repartition(1, *keys)
+    route = _route_keys(n)
+    entries = []
+    for value, tasks in tasks_of.items():
+        fields = [F.lit(v).cast(df.schema[k].dataType).alias(k) for k, v in zip(keys, value)]
+        entries += [F.struct(*fields), F.array(*[F.lit(route[t]) for t in tasks])]
+    routes = F.element_at(F.create_map(*entries), F.struct(*[df[k].alias(k) for k in keys]))
+    slot = (F.pmod(F.monotonically_increasing_id(), F.size(routes)) + 1).cast("int")
+    routed = df.withColumn("_route", F.element_at(routes, slot))
+    return routed.repartition(n, "_route").drop("_route")
+
+
+def _route_keys(n: int) -> list[int]:
+    """For each task ``i < n``, an int that Spark's hash partitioning over
+    ``n`` tasks sends to ``i``: ``pmod(hash(g), n) == i``, where ``hash`` is
+    Murmur3 x86_32 with seed 42 (Spark's ``hash`` function). About n ln n
+    candidates are tried."""
+    keys: list[Optional[int]] = [None] * n
+    missing, g = n, 0
+    while missing:
+        i = _spark_hash_int(g) % n  # Python's % of a negative hash is pmod
+        if keys[i] is None:
+            keys[i] = g
+            missing -= 1
+        g += 1
+    return keys
+
+
+def _spark_hash_int(value: int) -> int:
+    """Spark's ``hash()`` of an INT: Murmur3 x86_32, seed 42, as a signed int."""
+    mask = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & mask
+
+    k = rotl((value * 0xCC9E2D51) & mask, 15) * 0x1B873593 & mask
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & mask
+    h ^= 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & mask
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & mask
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
 
 
 def overwrite_partitions(

@@ -33,12 +33,20 @@ class ComponentsNotConverged(RuntimeError):
     """Label propagation hit max_iterations before reaching a fixpoint."""
 
 
+#: width of the iterative graph loops here and in :mod:`.graph` that re-read
+#: an edge cache: the pair/node graph is orders of magnitude smaller than the
+#: corpus, so a corpus-sized session width would launch a task per
+#: mostly-empty partition per round. Each loop carries it in its own plan
+#: (the cache is repartitioned to it before it is persisted), never in a
+#: session conf, which every other client of the session would see.
+LOOP_WIDTH = 8
+
+
 def connected_components(
     pairs: DataFrame,
     key_a: str = "doc_a",
     key_b: str = "doc_b",
     max_iterations: int = 25,
-    loop_partitions: int | None = None,
     driver_edge_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(node, cluster_id) for every node appearing in ``pairs``; cluster_id is
@@ -65,37 +73,28 @@ def connected_components(
     - larger graphs: the distributed pointer-jumping loop below, whose
       per-round cost is what the threshold is protecting against.
 
-    ``loop_partitions`` pins the shuffle width for the loop's joins/aggs:
-    the pair graph is usually orders of magnitude smaller than the corpus,
-    so session-wide widths (sized for the corpus) waste a task-launch per
-    empty partition PER ROUND. None keeps the session setting."""
-    from ..session import temp_conf
+    The edge table is hash-partitioned at :data:`LOOP_WIDTH` by ``dst``,
+    the key every round joins the labels on, before it is deduplicated and
+    cached: the distinct, the probe collect and each round's scan of the
+    edges then run at that width, whatever the session's corpus-sized
+    ``spark.sql.shuffle.partitions``. The rounds' aggregates shuffle at
+    the session width, which adaptive execution coalesces."""
+    edges = pairs.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
+    # symmetric closure: propagation must flow both directions
+    edges = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = edges.repartition(LOOP_WIDTH, "dst").distinct().persist()
 
-    conf = (
-        {"spark.sql.shuffle.partitions": str(loop_partitions)}
-        if loop_partitions
-        else {}
-    )
-    # temp_conf covers the edge-building distinct too — its shuffle (and the
-    # probe collect's task count) should match the slim graph, not the
-    # corpus-sized session default
-    with temp_conf(pairs.sparkSession, **conf):
-        edges = pairs.select(F.col(key_a).alias("src"), F.col(key_b).alias("dst"))
-        # symmetric closure: propagation must flow both directions
-        edges = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        edges = edges.distinct().persist()
+    # ONE action decides the path AND fetches the small graph: limit(t+1)
+    # either returns the complete edge list (<= t rows) or proves it's big.
+    # (A separate count + toLocalIterator costs a job per partition.)
+    head = edges.limit(driver_edge_threshold + 1).collect()
+    if len(head) <= driver_edge_threshold:
+        try:
+            return _cc_driver(pairs.sparkSession, edges.schema, head)
+        finally:
+            edges.unpersist()
 
-        # ONE action decides the path AND fetches the small graph: limit(t+1)
-        # either returns the complete edge list (<= t rows) or proves it's big.
-        # (A separate count + toLocalIterator costs a job per partition.)
-        head = edges.limit(driver_edge_threshold + 1).collect()
-        if len(head) <= driver_edge_threshold:
-            try:
-                return _cc_driver(pairs.sparkSession, edges.schema, head)
-            finally:
-                edges.unpersist()
-
-        return _cc_loop(edges, max_iterations)
+    return _cc_loop(edges, max_iterations)
 
 
 def _cc_driver(spark: SparkSession, edge_schema, rows: list) -> DataFrame:
@@ -229,8 +228,7 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         None, "doc_id", "text", threshold=0.95, num_hashes=64, bands=16, ngram=3, sigs=sigs
     )
-    # the pair graph is tiny relative to the corpus: narrow loop shuffles
-    comps = connected_components(pairs, loop_partitions=8)
+    comps = connected_components(pairs)
     return comps.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
@@ -283,7 +281,7 @@ def q_dedup_representatives(spark: SparkSession, sf: str) -> DataFrame:
     pairs = minhash_lsh_pairs(
         None, "doc_id", "text", threshold=0.95, num_hashes=64, bands=16, ngram=3, sigs=sigs
     )
-    comps = connected_components(pairs, loop_partitions=8)
+    comps = connected_components(pairs)
     reps = cluster_representatives(docs, "doc_id", comps)
     return (
         reps.groupBy("lang")
@@ -362,9 +360,7 @@ def q_link_graph_components(spark: SparkSession, sf: str) -> DataFrame:
         )
         .where(F.col("doc_a") != F.col("doc_b"))
     )
-    comps = connected_components(
-        pairs, loop_partitions=8, driver_edge_threshold=0
-    )
+    comps = connected_components(pairs, driver_edge_threshold=0)
     return comps.select(F.col("node").alias("doc_id"), "cluster_id").orderBy("doc_id")
 
 

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .clustering import LOOP_WIDTH
+
 
 class DanglingNodesError(ValueError):
     """The edge list has sinks (out-degree 0) — PageRank mass would leak."""
@@ -130,22 +132,25 @@ def pagerank(
     QUERY asked of the same graph — and the node count.
 
     ``copartitioned=True`` is the caller's statement that ``tables`` are
-    persisted hash-partitioned by ``src`` at the loop width with the
-    cached plan FINALIZED (materialize with ``ew.count()`` before building
-    the loop — a lazy cache plans as adaptive-not-final, reports unknown
+    persisted hash-partitioned by ``src`` (at
+    :data:`~fsql_spark.operators.clustering.LOOP_WIDTH`) with the cached
+    plan FINALIZED (materialize with ``ew.count()`` before building the
+    loop — a lazy cache plans as adaptive-not-final, reports unknown
     partitioning, and EnsureRequirements re-exchanges the edge table every
-    round). The loop then pins a shuffled-hash join (ranks build side):
-    each round's ranks come out of the previous ``groupBy("node")``
-    already hash-partitioned on the join key, so the join runs with ZERO
-    exchange — the edge table never moves after the one repartition —
-    where the default plan re-broadcasts the node-sized ranks table every
-    round (collect + ship per iteration; at corpus node counts that is not
-    a broadcastable side at all, and the SMJ fallback would re-exchange
-    ew per round). Build-side memory is nodes/width per task — the loop
-    width is the knob. Leave False for ad-hoc ``edges``: without the
-    co-partitioned cache the hint would shuffle the recomputed edge
-    subtree by src every round, which is strictly worse than broadcasting
-    node-sized ranks.
+    round). The loop then pins a shuffled-hash join (ranks build side), and
+    each round's contributions are ``repartition(LOOP_WIDTH, "node")``ed
+    before they are summed, so the ranks come out partitioned like the edge
+    cache and the join runs with ZERO exchange — the edge table never moves
+    after the one repartition. (Summed at the session width instead, the
+    ranks would be wider than the cache, and the planner would re-exchange
+    the edge table to the wider side every round.) The default plan
+    re-broadcasts the node-sized ranks table every round (collect + ship
+    per iteration; at corpus node counts that is not a broadcastable side
+    at all, and the SMJ fallback would re-exchange ew per round).
+    Build-side memory is nodes/width per task. Leave False for ad-hoc
+    ``edges``: without the co-partitioned cache the hint would shuffle the
+    recomputed edge subtree by src every round, which is strictly worse
+    than broadcasting node-sized ranks.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -204,15 +209,18 @@ def pagerank(
             "node",
             F.when(is_seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("rank"),
         )
+    if copartitioned:  # the first round's ranks too, whatever nodes' layout
+        ranks = ranks.repartition(LOOP_WIDTH, "node")
     for _ in range(iterations):
         rhs = ranks.hint("shuffle_hash") if copartitioned else ranks
         contrib = ew.join(rhs, ew.src == rhs.node).select(
             F.col("dst").alias("node"),
             (F.lit(damping) * F.col("rank") * F.col("share")).alias("part"),
         )
-        ranks = (
-            baseline.union(contrib).groupBy("node").agg(F.sum("part").alias("rank"))
-        )
+        parts = baseline.union(contrib)
+        if copartitioned:
+            parts = parts.repartition(LOOP_WIDTH, "node")
+        ranks = parts.groupBy("node").agg(F.sum("part").alias("rank"))
     return ranks, n
 
 
@@ -221,10 +229,6 @@ def pagerank(
 # --------------------------------------------------------------------------
 
 _PR_ITERATIONS = 5
-#: shuffle width of the node-sized iteration tables (the narrow-loop
-#: regime — see q_graph_pagerank docstring); also the partition count of
-#: the co-partitioned edge cache, so the loop join is exchange-free
-_PR_LOOP_WIDTH = 8
 _PR_DAMPING = 0.85
 
 
@@ -358,15 +362,14 @@ def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     q_source_js_divergence pattern; ``lint_target`` exposes the real
     distributed plan to the catalog-wide lint.
 
-    Two shuffle-width regimes (the clustering loop_partitions lesson): the
-    edge BUILD is corpus-scale, so the share-annotated edge table and the
-    node universe materialize into their caches at the session width FIRST;
-    every loop table after that is node-sized, so the iterations run under
-    a narrow temp_conf width — at a corpus-sized width the ~3 stages x K
-    rounds each launch a task per mostly-empty partition and task-launch
-    overhead dominates."""
-    from ..session import temp_conf
-
+    Two shuffle-width regimes: the edge BUILD is corpus-scale, so the
+    share-annotated edge table and the node universe materialize into their
+    caches at the session width FIRST; every loop table after that is
+    node-sized, so the edge cache is partitioned at the narrow
+    :data:`~fsql_spark.operators.clustering.LOOP_WIDTH` and each round
+    sums at that width too (:func:`pagerank`, ``copartitioned``) — at a
+    corpus-sized width the ~3 stages x K rounds each launch a task per
+    mostly-empty partition and task-launch overhead dominates."""
     ew0, nodes0, n = order_graph_tables_cached(spark, sf)
     # co-partitioned loop (r14): ew persisted hash-partitioned by src at the
     # loop width and MATERIALIZED before the loop is planned (a lazy cache
@@ -374,17 +377,14 @@ def q_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # re-exchange of the edge table every round); each round's shuffled-hash
     # join then runs with zero exchange against the groupBy-partitioned
     # ranks, and the build-time-validated n skips the per-call witness scan
-    ew = ew0.repartition(_PR_LOOP_WIDTH, "src").persist()
+    ew = ew0.repartition(LOOP_WIDTH, "src").persist()
     nodes = nodes0.persist()
     try:
         ew.count()  # finalize the cached plan: the loop sees hashpartitioning(src)
-        with temp_conf(
-            spark, **{"spark.sql.shuffle.partitions": str(_PR_LOOP_WIDTH)}
-        ):
-            out = _q_graph_pagerank_frame(
-                spark, sf, tables=(ew, nodes), prevalidated_n=n, copartitioned=True
-            )
-            pdf = out.toPandas()  # one row per supplier: 3 scalars
+        out = _q_graph_pagerank_frame(
+            spark, sf, tables=(ew, nodes), prevalidated_n=n, copartitioned=True
+        )
+        pdf = out.toPandas()  # one row per supplier: 3 scalars
     finally:
         ew.unpersist()
         nodes.unpersist()
@@ -483,21 +483,16 @@ def q_graph_ppr_segment(spark: SparkSession, sf: str) -> DataFrame:
     centrality). Same persist/materialize/release pattern and unrolled
     5-round plan as q_graph_pagerank; seeds outside the graph are ignored
     by construction."""
-    from ..session import temp_conf
-
     ew0, nodes0, n = order_graph_tables_cached(spark, sf)
     # same co-partitioned loop + build-time-validated n as q_graph_pagerank
-    ew = ew0.repartition(_PR_LOOP_WIDTH, "src").persist()
+    ew = ew0.repartition(LOOP_WIDTH, "src").persist()
     nodes = nodes0.persist()
     try:
         ew.count()  # finalize the cached plan: the loop sees hashpartitioning(src)
-        with temp_conf(
-            spark, **{"spark.sql.shuffle.partitions": str(_PR_LOOP_WIDTH)}
-        ):
-            out = _q_graph_ppr_frame(
-                spark, sf, tables=(ew, nodes), prevalidated_n=n, copartitioned=True
-            )
-            pdf = out.toPandas()  # one row per supplier: 3 scalars
+        out = _q_graph_ppr_frame(
+            spark, sf, tables=(ew, nodes), prevalidated_n=n, copartitioned=True
+        )
+        pdf = out.toPandas()  # one row per supplier: 3 scalars
     finally:
         ew.unpersist()
         nodes.unpersist()
@@ -581,8 +576,6 @@ def q_link_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
 
     Same persist/materialize/release + narrow-loop-width pattern as the
     other graph entries (the page graph is corpus-sized: ~3 links/page)."""
-    from ..session import temp_conf
-
     from .html import documents_as_html, extract_links
 
     pages = documents_as_html(spark, sf, cross_links=True)
@@ -602,23 +595,20 @@ def q_link_graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # the symmetrized build is dangling-free by construction, so the node
     # count doubles as prevalidated_n (no witness scan); co-partitioned
     # loop as in q_graph_pagerank (ew materialized pre-planning)
-    ew = ew0.repartition(_PR_LOOP_WIDTH, "src").persist()
+    ew = ew0.repartition(LOOP_WIDTH, "src").persist()
     nodes = nodes0.persist()
     try:
         ew.count()  # the one corpus job: extract links + build + partition
         n = nodes.count()
-        with temp_conf(
-            spark, **{"spark.sql.shuffle.partitions": str(_PR_LOOP_WIDTH)}
-        ):
-            ranks, n = pagerank(
-                None, iterations=_PR_ITERATIONS, damping=_PR_DAMPING,
-                tables=(ew, nodes), prevalidated_n=n, copartitioned=True,
-            )
-            out = ranks.select(
-                F.col("node").alias("doc_id"),
-                F.round(F.col("rank") * F.lit(float(n)), 4).alias("pr_scaled"),
-            ).orderBy("doc_id")
-            pdf = out.toPandas()  # one row per page: 2 scalars
+        ranks, n = pagerank(
+            None, iterations=_PR_ITERATIONS, damping=_PR_DAMPING,
+            tables=(ew, nodes), prevalidated_n=n, copartitioned=True,
+        )
+        out = ranks.select(
+            F.col("node").alias("doc_id"),
+            F.round(F.col("rank") * F.lit(float(n)), 4).alias("pr_scaled"),
+        ).orderBy("doc_id")
+        pdf = out.toPandas()  # one row per page: 2 scalars
     finally:
         ew.unpersist()
         nodes.unpersist()
@@ -744,12 +734,14 @@ def hits(
 
     ``edges_dst`` (r15, the pagerank co-partitioning lesson applied
     asymmetrically): a copy of ``edges`` persisted hash-partitioned by
-    ``dst`` at the loop's shuffle width and MATERIALIZED before the loop
-    is planned. Each round's hub step then joins it against the
-    dst-partitioned ``auth`` aggregate with a pinned shuffled-hash join —
-    zero exchange and no per-round sort of the edge table, where the
-    default plan sort-merge-joins (the auth side's post-aggregation size
-    is unknown to the planner, so it never broadcasts). The src-side join
+    ``dst`` at :data:`~fsql_spark.operators.clustering.LOOP_WIDTH` and
+    MATERIALIZED before the loop is planned. Each round's auth sum then
+    runs over contributions repartitioned by ``dst`` at that width (the
+    pagerank rule), and the hub step joins the auth aggregate against it
+    with a pinned shuffled-hash join — no exchange and no per-round sort
+    of the edge table, where the default plan sort-merge-joins (the auth
+    side's post-aggregation size is unknown to the planner, so it never
+    broadcasts). The src-side join
     stays a broadcast of the node-sized hub — the SYMMETRIC double-cache
     was A/B'd and rejected in r14 (building the second keyed copy cost
     more than the sorts it saved)."""
@@ -761,9 +753,11 @@ def hits(
     ed = edges_dst if edges_dst is not None else edges
     auth = None
     for _ in range(iterations):
+        contrib = edges.join(hub, edges.src == hub.node)
+        if edges_dst is not None:
+            contrib = contrib.repartition(LOOP_WIDTH, "dst")
         auth = (
-            edges.join(hub, edges.src == hub.node)
-            .groupBy("dst")
+            contrib.groupBy("dst")
             .agg(F.sum(F.col("w") * F.col("hub")).alias("auth"))
             .select(F.col("dst").alias("node"), "auth")
         )
@@ -799,9 +793,9 @@ def q_graph_hits_suppliers(spark: SparkSession, sf: str) -> DataFrame:
     engine's own) and reported per supplier.
 
     Edge build is one fact join + count; the 2K unrolled rounds run over
-    the persisted directed edge table under the narrow loop width."""
-    from ..session import temp_conf
-
+    the directed edge table persisted twice at the narrow loop width, once
+    partitioned by ``src`` and once by ``dst`` (see :func:`hits`), so the
+    rounds' joins and aggregates adopt that width from the caches."""
     orders = spark.read.parquet(f"{sf}/orders.parquet").select("o_orderkey", "o_custkey")
     lineitem = spark.read.parquet(f"{sf}/lineitem.parquet").select("l_orderkey", "l_suppkey")
     edges = (
@@ -813,44 +807,42 @@ def q_graph_hits_suppliers(spark: SparkSession, sf: str) -> DataFrame:
             F.col("l_suppkey").alias("dst"),
             "w",
         )
+        .repartition(LOOP_WIDTH, "src")
         .persist()
     )
+    # dst-keyed copy for the hub-step joins (see hits() docstring):
+    # materialized eagerly so the loop plans against its final
+    # hashpartitioning(dst) — paired with the dst-partitioned auth
+    # aggregate, each round's hub join runs exchange- and sort-free where
+    # the default plan sort-merge-joined
+    edges_dst = edges.repartition(LOOP_WIDTH, "dst").persist()
     try:
-        edges.count()  # materialize at session width (the one corpus job)
-        with temp_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
-            # dst-keyed copy for the hub-step joins (see hits() docstring):
-            # materialized eagerly so the loop plans against its final
-            # hashpartitioning(dst, 8) — paired with the dst-partitioned
-            # auth aggregate, each round's hub join runs exchange- and
-            # sort-free where the default plan sort-merge-joined
-            edges_dst = edges.repartition(8, "dst").persist()
-            edges_dst.count()
-            auth, _hub = hits(
-                edges, iterations=_HITS_ITERATIONS, edges_dst=edges_dst
+        edges.count()  # the one corpus job
+        edges_dst.count()
+        auth, _hub = hits(edges, iterations=_HITS_ITERATIONS, edges_dst=edges_dst)
+        # three actions follow (sum, count, collect): persist the
+        # node-sized result so the 2K-join chain runs once
+        auth = auth.persist()
+        total = auth.agg(F.sum("auth")).collect()[0][0]
+        n = auth.count()
+        supplier = spark.read.parquet(f"{sf}/supplier.parquet").select(
+            "s_suppkey", "s_name"
+        )
+        out = (
+            auth.join(supplier, auth.node == supplier.s_suppkey)
+            .select(
+                "s_suppkey",
+                "s_name",
+                F.round(
+                    F.col("auth") / F.lit(float(total)) * F.lit(float(n)), 4
+                ).alias("authority"),
             )
-            # three actions follow (sum, count, collect): persist the
-            # node-sized result so the 2K-join chain runs once
-            auth = auth.persist()
-            total = auth.agg(F.sum("auth")).collect()[0][0]
-            n = auth.count()
-            supplier = spark.read.parquet(f"{sf}/supplier.parquet").select(
-                "s_suppkey", "s_name"
-            )
-            out = (
-                auth.join(supplier, auth.node == supplier.s_suppkey)
-                .select(
-                    "s_suppkey",
-                    "s_name",
-                    F.round(
-                        F.col("auth") / F.lit(float(total)) * F.lit(float(n)), 4
-                    ).alias("authority"),
-                )
-                .orderBy("s_suppkey")
-            )
-            pdf = out.toPandas()  # one row per supplier: 3 scalars
-            auth.unpersist()
-            edges_dst.unpersist()
+            .orderBy("s_suppkey")
+        )
+        pdf = out.toPandas()  # one row per supplier: 3 scalars
+        auth.unpersist()
     finally:
+        edges_dst.unpersist()
         edges.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)
 
@@ -1169,7 +1161,6 @@ def kcore_nodes(
     b_col: str,
     k: int,
     rounds: int,
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Nodes surviving ``rounds`` synchronous peels toward the k-core ->
     (node, deg) with deg the node's degree in the surviving subgraph —
@@ -1188,16 +1179,9 @@ def kcore_nodes(
     loop posture: one edges-sized materialization per round, peeling
     shrinks it monotonically.
 
-    ``loop_partitions`` (r15): the two-shuffle-width regimes every other
-    iterative graph operator here already uses (pagerank/HITS/
-    connected_components). The BASE adjacency build — symmetrize +
-    distinct over the corpus-scale pair stream — materializes at the
-    session width first; each peel round after that works on the
-    surviving subgraph, which the peel shrinks monotonically, so its
-    3 shuffles/round run under this narrow width instead of launching a
-    task per mostly-empty session-width partition (3 rounds x 3 stages x
-    32 partitions of scheduler overhead at sf0.1). None keeps the single-
-    width behavior for callers that tune the session width themselves."""
+    The peel rounds run at the session's shuffle width: each round's
+    aggregate and semi-joins work on the surviving subgraph, and adaptive
+    execution coalesces their mostly-empty partitions."""
     if k < 1 or rounds < 1:
         raise ValueError(f"k and rounds must be >= 1, got k={k} rounds={rounds}")
     a, b = F.col(a_col), F.col(b_col)
@@ -1210,25 +1194,12 @@ def kcore_nodes(
         und.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     ).localCheckpoint()
 
-    def peel(current: DataFrame) -> DataFrame:
-        for _ in range(rounds):
-            deg = current.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-            keep = deg.where(F.col("deg") >= k).select("node")
-            current = current.join(keep, "node", "left_semi").join(
-                keep.select(F.col("node").alias("nbr")), "nbr", "left_semi"
-            ).localCheckpoint()
-        return current
-
-    if loop_partitions is None:
-        adj = peel(adj)
-    else:
-        from ..session import temp_conf
-
-        with temp_conf(
-            pairs.sparkSession,
-            **{"spark.sql.shuffle.partitions": str(loop_partitions)},
-        ):
-            adj = peel(adj)
+    for _ in range(rounds):
+        deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+        keep = deg.where(F.col("deg") >= k).select("node")
+        adj = adj.join(keep, "node", "left_semi").join(
+            keep.select(F.col("node").alias("nbr")), "nbr", "left_semi"
+        ).localCheckpoint()
     return adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
 
 
@@ -1255,10 +1226,7 @@ def q_graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
         .where(F.col("_target") != "")
         .select("doc_id", F.col("_target").cast("long").alias("target"))
     )
-    out = kcore_nodes(
-        pairs, "doc_id", "target", k=_KCORE_K, rounds=_KCORE_ROUNDS,
-        loop_partitions=8,
-    )
+    out = kcore_nodes(pairs, "doc_id", "target", k=_KCORE_K, rounds=_KCORE_ROUNDS)
     return out.select(F.col("node").alias("doc_id"), "deg").orderBy("doc_id")
 
 

@@ -90,8 +90,7 @@ def _fix_nanos(spark: SparkSession, sf_dir: str, pin_tz: bool = True) -> DataFra
     """Load the events table with ``ts`` normalized to TIMESTAMP (LTZ) —
     see ``normalize_events_ts`` for the per-encoding rules.
 
-    These two confs are deliberately NOT save/restored (``session.temp_conf``
-    is only for execution widths around an operator's own actions): both are
+    These two confs are deliberately NOT save/restored: both are
     captured at ACTION time — nanosAsLong by the parquet schema converter on
     executors, timeZone by timestamp_micros/NTZ-cast/window alignment — so
     restoring them before the caller materializes the returned (lazy)

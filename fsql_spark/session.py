@@ -92,41 +92,6 @@ def shuffle_width(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def temp_conf(spark: SparkSession, **confs: str):
-    """Set session confs for the duration of the block, then restore.
-
-    For execution-width confs (e.g. ``spark.sql.shuffle.partitions``) around
-    an operator's own loop of actions, which consume them inside the block.
-    Never use it to shape a result: the confs are SESSION-WIDE, so it is not
-    safe when several threads share a session — another thread's work sees
-    the override, and overlapping blocks can restore each other's values.
-    The fsql read/write/compact paths set no conf at all. Dotted conf keys
-    are passed via ``temp_conf(spark, **{"spark.sql....": "8"})``.
-    """
-    saved: dict[str, str | None] = {}
-    for key, val in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, val)
-    try:
-        yield
-    finally:
-        for key, old in saved.items():
-            if old is None:
-                try:
-                    spark.conf.unset(key)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(key, old)
-
-
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an existing session."""
     for key, val in SPARK_DEFAULTS.items():

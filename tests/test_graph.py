@@ -258,6 +258,33 @@ def test_hits_matches_python_model(spark):
         assert got_h[k] == pytest.approx(hub[k], rel=1e-12)
 
 
+def test_hits_edges_dst_loop_matches_default_plan(wide_session):
+    """With a dst-keyed copy of the edges at the loop width, HITS returns
+    the default plan's scores, and no hub-step join moves that copy."""
+    spark = wide_session
+    raw = [(1, 10, 3.0), (1, 11, 1.0), (2, 10, 2.0), (2, 12, 5.0), (3, 11, 1.0), (10, 1, 2.0)]
+    edges = spark.createDataFrame(raw, "src long, dst long, w double")
+    want_auth, want_hub = (_scores(df) for df in hits(edges, iterations=3))
+    cached = edges.repartition(LOOP_WIDTH, "src").persist()
+    edges_dst = cached.repartition(LOOP_WIDTH, "dst").persist()
+    try:
+        cached.count()
+        edges_dst.count()
+        auth, hub = hits(cached, iterations=3, edges_dst=edges_dst)
+        joins, moved = _edge_side_exchanges(hub)
+        assert joins >= 3 and moved == []
+        got_auth, got_hub = _scores(auth), _scores(hub)
+    finally:
+        edges_dst.unpersist()
+        cached.unpersist()
+    assert got_auth == pytest.approx(want_auth, rel=1e-12)
+    assert got_hub == pytest.approx(want_hub, rel=1e-12)
+
+
+def _scores(df):
+    return {r[0]: r[1] for r in df.collect()}
+
+
 def test_hits_validates_iterations(spark):
     edges = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, w double")
     with pytest.raises(ValueError, match="iterations"):
@@ -351,28 +378,41 @@ def test_kcore_peels_pendant_chain(spark):
     with _pytest.raises(ValueError, match="k and rounds"):
         kcore_nodes(df, "a", "b", k=0, rounds=1)
 
-    # the narrow loop width is an execution-only knob: identical output,
-    # and the session width is restored after the loop
-    prev = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    narrow = {
-        r["node"]: r["deg"]
-        for r in kcore_nodes(df, "a", "b", k=2, rounds=3, loop_partitions=2).collect()
-    }
-    assert narrow == got
-    assert df.sparkSession.conf.get("spark.sql.shuffle.partitions") == prev
-
 
 # --------------------------------------------------------------------------
 # r14: prepared-tables fast path (prevalidated_n + copartitioned loop)
 # --------------------------------------------------------------------------
 
+from fsql_spark.operators.clustering import LOOP_WIDTH  # noqa: E402
 from fsql_spark.operators.graph import pagerank_graph_tables  # noqa: E402
 
 
-def test_copartitioned_loop_matches_default_plan(spark):
+def _edge_side_exchanges(df) -> tuple[int, list[str]]:
+    """(shuffled-hash joins, the exchanges placed right on their edge side)."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    joins = [i for i, line in enumerate(lines) if "ShuffledHashJoin" in line]
+    return len(joins), [lines[i + 1] for i in joins if "Exchange" in lines[i + 1]]
+
+
+@pytest.fixture()
+def wide_session(spark):
+    """A session width above the loop width: a loop that took its width
+    from the session would re-exchange the edge cache to the wider side."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        yield spark
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_copartitioned_loop_matches_default_plan(wide_session):
     """The co-partitioned shuffled-hash loop (prepared, finalized cache +
     prevalidated_n) must produce byte-identical ranks to the default
-    broadcast loop — the r14 graph-entry rewrite's value contract."""
+    broadcast loop — the r14 graph-entry rewrite's value contract — and
+    never move the edge cache, whatever the session width."""
+    spark = wide_session
     raw = [(1, 2, 3), (2, 3, 1), (3, 1, 2), (2, 4, 5), (4, 2, 1), (1, 4, 2)]
     edges = spark.createDataFrame(raw, "src long, dst long, w long")
     sym = undirected_edges(edges, "src", "dst", "w")
@@ -380,7 +420,7 @@ def test_copartitioned_loop_matches_default_plan(spark):
     want = _ranks(default)
 
     ew0, nodes0 = pagerank_graph_tables(sym)
-    ew = ew0.repartition(4, "src").persist()
+    ew = ew0.repartition(LOOP_WIDTH, "src").persist()
     nodes = nodes0.persist()
     try:
         ew.count()  # finalize the cached plan before the loop is planned
@@ -389,11 +429,11 @@ def test_copartitioned_loop_matches_default_plan(spark):
             None, iterations=4, tables=(ew, nodes),
             prevalidated_n=n, copartitioned=True,
         )
-        plan = fast._jdf.queryExecution().executedPlan().toString()
         # every round's rank join is the hinted shuffled-hash join (the
         # BHJs visible inside the printed InMemoryRelation subtrees are the
-        # one-time cache build, not the loop)
-        assert plan.count("ShuffledHashJoin [src") >= 4
+        # one-time cache build, not the loop), reading the edge cache as is
+        joins, moved = _edge_side_exchanges(fast)
+        assert joins >= 4 and moved == []
         got = _ranks(fast)
     finally:
         ew.unpersist()

@@ -290,6 +290,78 @@ def test_compaction_reduces_files_preserves_data(spark, tmp_path):
     assert sub.count() == li.where(F.col("l_returnflag") == "R").count()
 
 
+def test_compaction_sizes_each_partition_value(spark, tmp_path):
+    """Each partition value is rewritten as ceil(its bytes / target) files,
+    not as one file per value however large: here 3 units of data under
+    p=a and 1 under p=b, fragmented into 6 files per value."""
+    from fsql_spark.maintenance import compact, file_stats
+
+    root = str(tmp_path / "t")
+    df = spark.range(40_000).select(
+        F.when(F.col("id") % 4 == 0, "b").otherwise("a").alias("p"),
+        F.sha2(F.col("id").cast("string"), 256).alias("s"),
+    )
+    df.repartition(6).write.partitionBy("p").parquet(root)
+    before = {r.partition: r.total_bytes for r in file_stats(spark, root).collect()}
+    target = (before["p=a"] + before["p=b"]) // 5
+    want = {k: -(-size // target) for k, size in before.items()}
+    assert want["p=a"] >= 3 and want["p=b"] >= 1 and want["p=a"] > want["p=b"]
+
+    compact(spark, root, target_file_bytes=target, partition_by=["p"])
+    after = {r.partition: r for r in file_stats(spark, root).collect()}
+    assert {k: r.n_files for k, r in after.items()} == want
+    # rows are dealt round-robin: the files of a value are near-equal in size
+    for r in after.values():
+        assert r.max_bytes <= 1.2 * target
+    got = read_partitioned_table(root, Q_TRUE, spark=spark)
+    assert sorted(got.select("p", "s").collect()) == sorted(df.collect())
+
+
+def test_route_keys_hash_to_their_task(spark):
+    """Spark's own ``hash()`` sends the i-th route key to task i."""
+    from fsql_spark.maintenance import _route_keys
+
+    for n in (1, 2, 7, 64):
+        keys = spark.createDataFrame([(g,) for g in _route_keys(n)], "g int")
+        got = keys.select(F.pmod(F.hash("g"), F.lit(n)).alias("i")).collect()
+        assert [r.i for r in got] == list(range(n))
+
+
+def test_compaction_keeps_the_hive_layout_by_default(spark, tmp_path):
+    """Without ``partition_by`` the rewrite keeps every key the read binds,
+    the NULL and escaped values included; ``partition_by`` must name keys
+    of the tree."""
+    import os
+
+    from fsql_spark import write_table
+    from fsql_spark.maintenance import compact
+
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, str(i % 2), [None, "a/b", "c"][i % 3]) for i in range(30)],
+        "id long, p string, q string",
+    )
+    write_table(df.repartition(5), root, partition_by=["p", "q"])
+
+    def layout():  # leaf directory -> parquet files in it
+        return {
+            os.path.relpath(d, root): sum(f.endswith(".parquet") for f in files)
+            for d, _, files in os.walk(root)
+            if any(f.endswith(".parquet") for f in files)
+        }
+
+    leaves = sorted(layout())
+    assert len(leaves) == 6 and "p=0/q=a%2Fb" in leaves
+    assert "p=1/q=__HIVE_DEFAULT_PARTITION__" in leaves
+    want = sorted(read_partitioned_table(root, Q_TRUE, spark=spark).collect())
+
+    compact(spark, root)
+    assert layout() == dict.fromkeys(leaves, 1)
+    assert sorted(read_partitioned_table(root, Q_TRUE, spark=spark).collect()) == want
+    with pytest.raises(ValueError, match="partition keys"):
+        compact(spark, root, partition_by=["id"])
+
+
 def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
     """Dynamic partition overwrite: re-landing one month replaces that month
     and leaves the others byte-identical — the idempotent-backfill contract."""
