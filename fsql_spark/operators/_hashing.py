@@ -9,7 +9,7 @@ all signatures at once.
 
 MinHash runs as one ``mapInArrow`` kernel (:func:`minhash_shingles`) that
 splits, shingles, dedups and hashes straight over the Arrow buffers and
-returns both the signature and the shingle set, so each document is
+returns both the signature and the hashed shingle set, so each document is
 tokenized once and no Python ``str`` is built per token. SimHash keeps the
 pandas-UDF path over :func:`_flat_tokens`.
 
@@ -130,16 +130,21 @@ def simhash_batch(texts: pd.Series, ngram: int = 1) -> pd.Series:
 
 def minhash_shingles(batch, num_hashes: int, ngram: int):
     """One ``mapInArrow`` batch of (key, text) -> (k, sig, sh): each doc's
-    word n-gram set and its k-minhash signature, from one tokenization.
+    word n-gram set, hashed, and its k-minhash signature, from one
+    tokenization.
 
-    ``sh`` is exactly ``array_distinct(dedup._word_shingles(text, ngram))``
-    (``split(" ")``, windows joined by ``chr(1)``, first-occurrence order);
-    a change to one must change the other. Rows with an empty set (null
-    text, docs shorter than ``ngram`` words) are dropped. ``sig[j]`` is the
-    signed min over the set of splitmix64(FNV-1a64(gram) ^ seed_j) — the min
-    over the set equals the min over the bag, so deduping first changes no
-    value. Every step runs on Arrow/numpy buffers: the dictionary hashes
-    each distinct gram of the batch once."""
+    The grams are exactly ``array_distinct(dedup._word_shingles(text,
+    ngram))`` (``split(" ")``, windows joined by ``chr(1)``,
+    first-occurrence order); a change to one must change the other. ``sh``
+    holds each gram's FNV-1a 64 as a signed int64, in that order: 8 bytes
+    per gram where the strings cost their length plus offsets, through the
+    Arrow transfer, the signature cache and the verify's broadcasts. Rows
+    with an empty set (null text, docs shorter than ``ngram`` words) are
+    dropped. ``sig[j]`` is the signed min over the set of
+    splitmix64(FNV-1a64(gram) ^ seed_j) — the min over the set equals the
+    min over the bag, so deduping first changes no value. Every step runs
+    on Arrow/numpy buffers: the dictionary hashes each distinct gram of the
+    batch once."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -187,7 +192,7 @@ def minhash_shingles(batch, num_hashes: int, ngram: int):
         [
             keys.filter(pa.array(keep)),
             pa.ListArray.from_arrays(pa.array(sig_offs), pa.array(sig.ravel())),
-            pa.ListArray.from_arrays(pa.array(sh_offs), enc.dictionary.take(pa.array(set_code))),
+            pa.ListArray.from_arrays(pa.array(sh_offs), pa.array(base.view(np.int64))),
         ],
         names=["k", "sig", "sh"],
     )

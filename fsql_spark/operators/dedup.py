@@ -12,9 +12,10 @@ Scale design (the point of each variant):
   candidate sets.
 - **MinHash+LSH**: the scale path for near-dup. shingle -> k independent
   min-hashes (FNV-1a + splitmix64 seed mixes, one Arrow kernel that also
-  returns the shingle set) -> band signatures (xxhash64) -> bucket join =>
-  candidate pairs ~ O(true pairs), then exact-Jaccard refine. Banding makes
-  the shuffle carry only (band-hash, doc) pairs.
+  returns the shingle set as int64 gram hashes) -> band signatures
+  (xxhash64) -> bucket join => candidate pairs ~ O(true pairs), then a
+  Jaccard refine on the gram hashes. Banding makes the shuffle carry only
+  (band-hash, doc) pairs.
 - **SimHash**: 64-bit signature per doc (one map pass), near-dups = signatures
   within Hamming distance d; bucketed by rotated prefixes for a join-friendly
   formulation.
@@ -92,9 +93,12 @@ def _word_shingles(text: Column, n: int, distinct: bool = True, sep: str = "\x01
 
     The MinHash kernel (``_hashing.minhash_shingles``) computes the
     distinct default-separator form itself, over Arrow buffers, and mirrors
-    this function exactly (split on ' ', window join, first-occurrence
-    order): a change to one must change the other, or MinHash-verified
-    Jaccard stops matching the exact paths that call this."""
+    this function exactly: it hashes the same grams (split on ' ', window
+    join, first-occurrence order) and emits their FNV-1a 64 values in that
+    order. A change to one must change the other, or MinHash-verified
+    Jaccard stops matching the exact paths that call this. The two agree
+    barring a 64-bit collision between two distinct grams of one pair
+    (see :func:`_verify_jaccard`)."""
     if n == 1:
         words = F.split(text, " ")
         return F.array_distinct(words) if distinct else words
@@ -166,7 +170,15 @@ def _verify_jaccard(
     shingle sets ``sh`` of ``left`` (keyed ``k``) and ``right`` (keyed
     ``k2``) to the candidate ``(k, k2)`` keys, keep pairs whose Jaccard
     reaches ``threshold`` and round it to 4 places. Shingle sets ride only
-    with surviving candidates, so the output has no false positives."""
+    with surviving candidates, so the output has no false positives.
+
+    ``array_intersect`` works on any element type. ``jaccard_pairs`` and
+    ``prefix_filter_pairs`` verify on gram strings, which is exact. The
+    MinHash operators verify on the kernel's int64 gram hashes, which is
+    exact barring 64-bit collisions: two distinct grams of one pair with
+    one hash count as one gram, which can move that pair's Jaccard either
+    way. At about 2×10^5 distinct grams in one pass, the chance of any
+    collision is about 10^-9."""
     s1 = left.select("k", "sh")
     s2 = right.select(F.col("k").alias("k2"), F.col("sh").alias("sh2"))
     cands = cand_keys.join(s1, "k").join(s2, "k2")
@@ -364,13 +376,17 @@ def prefix_filter_pairs(
 def minhash_signatures(
     df: DataFrame, key_col: str, text_col: str, num_hashes: int = 32, ngram: int = 3
 ) -> DataFrame:
-    """k min-hashes per doc plus its shingle set, as (k, sig array<long>,
-    sh array<string>). One ``mapInArrow`` kernel (``_hashing.minhash_shingles``)
-    tokenizes each document once and returns both the signature and the
-    shingle set that rides along for exact verification; ``sh`` equals
-    ``array_distinct(_word_shingles(text, ngram))``, order included. One map
-    pass, no shuffle (see ``_hashing`` for why not a Column expression)."""
-    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+    """k min-hashes per doc plus its hashed shingle set, as (k, sig
+    array<long>, sh array<long>). One ``mapInArrow`` kernel
+    (``_hashing.minhash_shingles``) tokenizes each document once and
+    returns both the signature and the shingle set that rides along for
+    the Jaccard verify. ``sh`` holds the FNV-1a 64 hash (signed) of each
+    gram of ``array_distinct(_word_shingles(text, ngram))``, order
+    included: 8 bytes per gram to ship, cache and broadcast instead of the
+    string. The verify is then exact barring 64-bit collisions (see
+    :func:`_verify_jaccard`). One map pass, no shuffle (see ``_hashing``
+    for why not a Column expression)."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
     from ._hashing import minhash_shingles
 
@@ -390,9 +406,7 @@ def minhash_signatures(
         [
             src.schema["k"],
             StructField("sig", ArrayType(LongType())),
-            # element nullability as _word_shingles types it: split() is
-            # non-null, the n-gram branch's when/otherwise is nullable
-            StructField("sh", ArrayType(StringType(), containsNull=ngram > 1)),
+            StructField("sh", ArrayType(LongType(), containsNull=False)),
         ]
     )
     return src.mapInArrow(
@@ -420,25 +434,36 @@ def _check_sig_width(sigs: DataFrame, num_hashes: int) -> None:
         )
 
 
+def _check_sig_format(sigs: DataFrame) -> None:
+    """A caller-supplied signature table MUST carry format-4 ``sh``
+    (array<bigint> gram hashes): a string ``sh`` (format 3 or older, read
+    without :func:`read_corpus_signatures`' format gate) would meet the
+    other side's hashes in ``array_intersect``, which then coerces or fails
+    with no word of the cause. A schema check; it starts no job."""
+    from pyspark.sql.types import ArrayType, LongType
+
+    sh = sigs.schema["sh"].dataType if "sh" in sigs.columns else None
+    if not (isinstance(sh, ArrayType) and isinstance(sh.elementType, LongType)):
+        raise ValueError(
+            f"signature table's sh is {sh.simpleString() if sh else 'missing'}, "
+            f"signature format {_SIG_FORMAT} needs array<bigint> gram hashes — "
+            "rebuild it with write_corpus_signatures or minhash_signatures"
+        )
+
+
 def _banded_buckets(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     """(k, band, bucket) from a signature table — ONLY the narrow key triple
-    rides the bucket-join shuffle, never signatures or shingle arrays."""
-    return sigs.select(
-        "k",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("k", "bb.band", "bb.bucket")
+    rides the bucket-join shuffle, never signatures or shingle arrays.
+    Built as one SQL expression: one py4j call, not one per band and row."""
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64("
+        + ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ") AS bucket)"
+        for b in range(bands)
+    )
+    return sigs.select("k", F.expr(f"explode(array({structs})) AS bb")).select(
+        "k", "bb.band", "bb.bucket"
+    )
 
 
 def _signatures(
@@ -452,6 +477,7 @@ def _signatures(
     """The (k, sig, sh) table one side of an LSH join reads: ``sigs`` when
     the caller supplies it, else computed from ``df`` and cached."""
     if sigs is not None:
+        _check_sig_format(sigs)
         _check_sig_width(sigs, num_hashes)
         # defensive twin of the v3 build-time exclusion: a caller-supplied
         # signature frame (bypassing read_corpus_signatures' format gate)
@@ -509,8 +535,9 @@ def minhash_lsh_pairs(
     bands×rows banding: docs agreeing on any band become candidates
     (P[candidate] = 1-(1-j^r)^b). The bucket join shuffles only
     (band_hash, doc) pairs — linear in corpus size for realistic dup rates.
-    Candidates are then verified with exact Jaccard on their shingle sets, so
-    the output has no false positives (recall is the LSH knob).
+    Candidates are then verified with Jaccard on their hashed shingle sets,
+    so the output has no false positives barring 64-bit gram-hash
+    collisions (see :func:`_verify_jaccard`); recall is the LSH knob.
 
     ``sigs``: a precomputed (k, sig, sh) signature table (e.g. from
     :func:`read_corpus_signatures` / :func:`corpus_signatures_cached`) —
@@ -820,7 +847,10 @@ _SIG_META_COLS = ("__num_hashes", "__ngram", "__sig_fmt")
 #: the signature entry point; a v2 table may contain constant-signature
 #: empty rows that collide in every band — quadratic candidates + 0/0 in
 #: the verify join — so v2 tables must be rebuilt, not silently accepted).
-_SIG_FORMAT = 3
+#: v4 = v3 with ``sh`` as array<bigint>: each gram's FNV-1a 64 hash (signed)
+#: in place of the gram string, same order; a v3 string table cannot meet
+#: v4 batch hashes in ``array_intersect``.
+_SIG_FORMAT = 4
 
 
 def write_corpus_signatures(
@@ -834,7 +864,7 @@ def write_corpus_signatures(
     """Materialize the corpus MinHash signature table (key, sig, shingles)
     to storage — the 100 TB incremental-dedup shape: the corpus text is
     hashed exactly ONCE, and every future ingest batch joins against this
-    slim table (key + k longs + shingle set) instead of re-reading and
+    slim table (key + k longs + hashed shingle set) instead of re-reading and
     re-hashing the corpus. The (num_hashes, ngram) config AND the signature
     format version are stored as constant columns and validated on read."""
     from ..api import write_table
@@ -969,8 +999,9 @@ def minhash_lsh_pairs_against(
     those caches, and the caller gets no handle to unpersist them."""
     if corpus_sigs is None and corpus is None:
         raise ValueError("pass either corpus or corpus_sigs")
-    new_sigs = _signatures(df_new, key_col, text_col, num_hashes, ngram, None)
+    # the corpus side first: a caller's table is checked before any job
     corpus_sigs = _signatures(corpus, key_col, text_col, num_hashes, ngram, corpus_sigs)
+    new_sigs = _signatures(df_new, key_col, text_col, num_hashes, ngram, None)
     return _lsh_pairs(new_sigs, corpus_sigs, threshold, num_hashes, bands, ("new_key", "corpus_key"))
 
 

@@ -138,10 +138,12 @@ def pagerank(
     loop — a lazy cache plans as adaptive-not-final, reports unknown
     partitioning, and EnsureRequirements re-exchanges the edge table every
     round). The loop then pins a shuffled-hash join (ranks build side), and
-    each round's contributions are ``repartition(LOOP_WIDTH, "node")``ed
-    before they are summed, so the ranks come out partitioned like the edge
-    cache and the join runs with ZERO exchange — the edge table never moves
-    after the one repartition. (Summed at the session width instead, the
+    each round's contributions but the last's are
+    ``repartition(LOOP_WIDTH, "node")``ed before they are summed, so the
+    ranks come out partitioned like the edge cache and the join runs with
+    ZERO exchange — the edge table never moves after the one repartition.
+    The last round's sum feeds no join and takes the planner's own
+    exchange, which AQE coalesces. (Summed at the session width instead, the
     ranks would be wider than the cache, and the planner would re-exchange
     the edge table to the wider side every round.) The default plan
     re-broadcasts the node-sized ranks table every round (collect + ship
@@ -211,14 +213,16 @@ def pagerank(
         )
     if copartitioned:  # the first round's ranks too, whatever nodes' layout
         ranks = ranks.repartition(LOOP_WIDTH, "node")
-    for _ in range(iterations):
+    for i in range(iterations):
         rhs = ranks.hint("shuffle_hash") if copartitioned else ranks
         contrib = ew.join(rhs, ew.src == rhs.node).select(
             F.col("dst").alias("node"),
             (F.lit(damping) * F.col("rank") * F.col("share")).alias("part"),
         )
         parts = baseline.union(contrib)
-        if copartitioned:
+        # the last round's sum feeds no join: let it plan its own exchange,
+        # which AQE can coalesce for what runs after the loop
+        if copartitioned and i < iterations - 1:
             parts = parts.repartition(LOOP_WIDTH, "node")
         ranks = parts.groupBy("node").agg(F.sum("part").alias("rank"))
     return ranks, n

@@ -6,6 +6,7 @@ power iteration, mass conservation, the dangling refusal)."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 
@@ -394,6 +395,12 @@ def _edge_side_exchanges(df) -> tuple[int, list[str]]:
     return len(joins), [lines[i + 1] for i in joins if "Exchange" in lines[i + 1]]
 
 
+def _node_exchanges(df) -> list[tuple[str, str]]:
+    """(width, origin) of every exchange on ``node``, top of the plan first."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"Exchange hashpartitioning\(node#\d+L?, (\d+)\), (\w+)", plan)
+
+
 @pytest.fixture()
 def wide_session(spark):
     """A session width above the loop width: a loop that took its width
@@ -434,6 +441,11 @@ def test_copartitioned_loop_matches_default_plan(wide_session):
         # one-time cache build, not the loop), reading the edge cache as is
         joins, moved = _edge_side_exchanges(fast)
         assert joins >= 4 and moved == []
+        # the first ranks and rounds 1..3 sum at the loop width; the last
+        # round's sum feeds no join and takes the planner's own exchange
+        sums = _node_exchanges(fast)
+        assert sums[0] == ("16", "ENSURE_REQUIREMENTS")
+        assert sums[1:] == [(str(LOOP_WIDTH), "REPARTITION_BY_NUM")] * 4
         got = _ranks(fast)
     finally:
         ew.unpersist()

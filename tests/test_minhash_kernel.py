@@ -4,10 +4,11 @@
 The oracle splits on " ", joins word windows with "\\x01", keeps each doc's
 first-occurrence distinct shingles, hashes their UTF-8 bytes with FNV-1a 64
 in Python ints, mixes each seed with splitmix64 and takes the signed min.
-``sh`` must also equal Spark's ``_word_shingles`` (the set the exact Jaccard
-paths use), order included. Inputs: an edge zoo plus the seed-1 perfbench
-corpus, across n-gram sizes, signature widths, key types, Arrow batch sizes
-and ``useLargeVarTypes``."""
+``sh`` must equal the signed FNV-1a 64 of each oracle shingle, in order, and
+the oracle's shingles must equal Spark's ``_word_shingles`` (the set the
+exact Jaccard paths use), order included. Inputs: an edge zoo plus the
+seed-1 perfbench corpus, across n-gram sizes, signature widths, key types,
+Arrow batch sizes and ``useLargeVarTypes``."""
 
 from __future__ import annotations
 
@@ -62,6 +63,10 @@ def oracle_shingles(text: str | None, n: int) -> list[str]:
         return []
     w = text.split(" ")
     return list(dict.fromkeys("\x01".join(w[i : i + n]) for i in range(len(w) - n + 1)))
+
+
+def oracle_hashes(sh: list[str]) -> list[int]:
+    return [_signed(_fnv(g)) for g in sh]
 
 
 def oracle_sig(sh: list[str], k: int) -> list[int]:
@@ -126,7 +131,8 @@ def _check(spark, corpus, oracle, ngram, num_hashes, key_type="long"):
     checked_wide = 0
     for d, (sig, sh) in got.items():
         osh, osig = want[d]
-        assert sh == jvm[d] == osh, d
+        assert jvm[d] == osh, d
+        assert sh == oracle_hashes(osh), d
         assert len(sig) == num_hashes
         if len(osig) >= num_hashes:
             assert sig == osig[:num_hashes], d
@@ -173,7 +179,7 @@ def test_kernel_reads_sliced_arrays(text_type):
     assert part.column(1).offset == 3
     got = minhash_shingles(part, 8, 2).to_pylist()
     want = [
-        {"k": i, "sig": oracle_sig(sh, 8), "sh": sh}
+        {"k": i, "sig": oracle_sig(sh, 8), "sh": oracle_hashes(sh)}
         for i, t in enumerate(texts)
         if 3 <= i < len(texts) - 2 and (sh := oracle_shingles(t, 2))
     ]
@@ -181,6 +187,38 @@ def test_kernel_reads_sliced_arrays(text_type):
     strs = pa.array(["", "ab", None, "é日", "x" * 300], text_type).slice(1)
     plain = [s or "" for s in strs.to_pylist()]
     assert list(_fnv1a64_fold(*_string_bytes(strs))) == list(fnv1a64(plain)) == [_fnv(s) for s in plain]
+
+
+@pytest.mark.parametrize("ngram", [1, 2, 3, 5])
+def test_no_gram_hash_collides_on_the_corpus(spark, corpus, ngram):
+    """The MinHash verify compares gram hashes, not grams: over the seed-1
+    corpus every n-gram size has as many distinct hashes as distinct grams."""
+    df = spark.createDataFrame(corpus, "doc_id long, text string")
+    hashes = minhash_signatures(df, "doc_id", "text", 2, ngram).select(F.explode("sh"))
+    grams = df.select(F.explode(_word_shingles(F.col("text"), ngram)))
+    n_hashes, n_grams = hashes.distinct().count(), grams.distinct().count()
+    assert n_hashes == n_grams > 1000
+
+
+def test_string_shingle_signature_table_refused(spark, tmp_path):
+    """A persisted table whose ``sh`` holds gram strings (format 3) cannot
+    meet format-4 batch hashes: ``read_corpus_signatures`` refuses it."""
+    docs = spark.createDataFrame(
+        [(i, f"w{i} w{i + 1} w{i + 2}") for i in range(20)], "doc_id long, text string"
+    )
+    url, v3 = str(tmp_path / "sigs"), str(tmp_path / "sigs_v3")
+    write_corpus_signatures(docs, "doc_id", "text", url, num_hashes=8, ngram=2)
+    grams = docs.select(F.col("doc_id").alias("k"), _word_shingles(F.col("text"), 2).alias("sh"))
+    table = spark.read.parquet(url)
+    (
+        table.drop("sh").join(grams, "k")
+        .withColumn("__sig_fmt", F.lit(3))
+        .select(*table.columns)
+        .write.parquet(v3)
+    )
+    assert read_corpus_signatures(spark, url, num_hashes=8, ngram=2).count() == 20
+    with pytest.raises(ValueError, match=r"sig_fmt\)=\[\(8, 2, 3\)\], caller expects \(8, 2, 4\)"):
+        read_corpus_signatures(spark, v3, num_hashes=8, ngram=2)
 
 
 def test_persisted_signatures_equal_in_memory(spark, tmp_path):

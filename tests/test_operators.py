@@ -515,6 +515,72 @@ def test_precomputed_sigs_width_mismatch_fails_loudly(spark, docs_with_dups):
         )
 
 
+def test_string_shingle_signature_table_refused_before_any_job(spark, docs_with_dups):
+    """A caller-supplied signature table whose ``sh`` holds gram strings
+    (format 3, passed straight in past read_corpus_signatures' format gate)
+    would meet format-4 hashes in ``array_intersect``: both MinHash
+    operators refuse it from its schema, naming format 4, before any job."""
+    from fsql_spark.operators.dedup import minhash_lsh_pairs_against, minhash_signatures
+
+    from .test_driver_prefix_load import _jobs_during
+
+    sigs = minhash_signatures(docs_with_dups, "doc_id", "text", 32, 3)
+    v3 = sigs.withColumn("sh", F.col("sh").cast("array<string>"))
+
+    def refused():
+        with pytest.raises(ValueError, match="signature format 4 needs array<bigint>"):
+            minhash_lsh_pairs(None, "doc_id", "text", 0.8, sigs=v3)
+        with pytest.raises(ValueError, match="signature format 4 needs array<bigint>"):
+            minhash_lsh_pairs_against(docs_with_dups, None, "doc_id", "text", 0.8, corpus_sigs=v3)
+
+    _, jobs = _jobs_during(spark, refused)
+    assert jobs == 0
+    assert minhash_lsh_pairs(None, "doc_id", "text", 0.8, sigs=sigs).count() >= 10
+
+
+def _column_banding(sigs, bands, rows_per_band):
+    """The per-band Column form of ``_banded_buckets``, as it was built
+    before the one-expression form: the plan reference."""
+    return sigs.select(
+        "k",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
+                        ).alias("bucket"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("k", "bb.band", "bb.bucket")
+
+
+@pytest.mark.parametrize("bands,rows_per_band", [(8, 4), (16, 4)])
+def test_minhash_banding_plan_matches_column_form(spark, docs_with_dups, bands, rows_per_band):
+    """``_banded_buckets`` plans the same ``Generate`` as the Column form
+    (expression ids masked) and returns the same buckets."""
+    import re
+
+    from fsql_spark.operators.dedup import _banded_buckets, minhash_signatures
+
+    sigs = minhash_signatures(docs_with_dups, "doc_id", "text", bands * rows_per_band, 3)
+
+    def generate(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        [node] = [line for line in plan.splitlines() if "Generate " in line]
+        return re.sub(r"#\d+", "#", node)
+
+    got = _banded_buckets(sigs, bands, rows_per_band)
+    want = _column_banding(sigs, bands, rows_per_band)
+    assert generate(got) == generate(want)
+    assert f"struct(band, {bands - 1}, bucket, xxhash64(" in generate(got)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_corpus_properties_backing_sql_oracles(spark):
     """The FNV-replica SQL oracles (text-embed-knn, simhash) fold over CODE
     POINTS, which equals the kernel's UTF-8-byte fold only for ASCII; and
