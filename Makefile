@@ -12,8 +12,8 @@
 #   make perfcheck            - perfbench's own tests (~6 s), among them that
 #                               every library name the tracer patches exists
 #   make fsqlcheck            - the core fsql tests (read paths, discovery,
-#                               readers, fs contract; ~1.5 min) with the
-#                               tier-1 environment
+#                               readers, fs contract, compaction; ~1.5 min)
+#                               with the tier-1 environment
 #   make dedupcheck           - the near-duplicate pair tests (MinHash kernel
 #                               oracle, the Jaccard/prefix-filter/MinHash
 #                               operators against brute force and each other,
@@ -53,7 +53,14 @@ FSQL_TESTS = test_path_equivalence.py test_fs_contract.py test_readers_and_write
 	test_lex_range_query.py test_driver_prefix_load.py test_hive_walk.py test_listing_loop.py \
 	test_footer_schema.py test_glob_names.py test_spark_binding.py test_query_compile_equivalence.py \
 	test_scale_plans.py::test_generation_skips_listing_entirely \
-	test_scale_plans.py::test_driver_discovery_prunes_listings
+	test_scale_plans.py::test_driver_discovery_prunes_listings \
+	test_scale_plans.py::test_compaction_reduces_files_preserves_data \
+	test_scale_plans.py::test_compaction_sizes_each_partition_value \
+	test_scale_plans.py::test_packed_tasks_send_each_slot_to_its_task \
+	test_scale_plans.py::test_compaction_flattens_an_unpartitioned_table \
+	test_scale_plans.py::test_compaction_with_no_keys_flattens_a_hive_table \
+	test_scale_plans.py::test_compaction_on_one_task_plans_a_single_partition \
+	test_scale_plans.py::test_compaction_keeps_the_hive_layout_by_default
 
 fsqlcheck:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \

@@ -76,6 +76,8 @@ from .session import get_spark
 _TYPE_INFERENCE = "spark.sql.sources.partitionColumnTypeInference.enabled"
 # above this many paths Spark lists with a distributed job, not on the driver
 _SERIAL_LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# the first-leaf probe descends no deeper than this many directory levels
+_PROBE_DEPTH = 64
 # load() conditions meaning "not one Hive layout" (e.g. the mixed-depth quirk,
 # reference `column_parser.py:106-110`): driver discovery reads such trees
 _NOT_ONE_LAYOUT = {"CONFLICTING_PARTITION_COLUMN_NAMES", "CONFLICTING_DIRECTORY_STRUCTURES"}
@@ -88,7 +90,7 @@ def _active_spark(spark: Optional[SparkSession]) -> SparkSession:
     return spark or SparkSession.getActiveSession() or get_spark()
 
 
-def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[Optional[str], list[str]]:
+def _probe_first_leaf(fs: FileSystem, root: str) -> tuple[Optional[str], list[str]]:
     """The first data file below ``root``, depth first in listing order, and
     the Hive keys of the directories down to it; (None, []) when there is
     none. A directory holding nothing visible, or missing, is passed over
@@ -113,7 +115,7 @@ def _probe_first_leaf(fs: FileSystem, root: str, max_depth: int = 64) -> tuple[O
             raise ValueError(f"mixed files and directories under {url}")
         if files:
             return url + files[0], [AutoParser().parse(s)[0] for s in segments]
-        if len(segments) < max_depth:
+        if len(segments) < _PROBE_DEPTH:
             stack += [(url + d + "/", [*segments, d]) for d in reversed(dirs)]
     return None, []
 

@@ -317,14 +317,104 @@ def test_compaction_sizes_each_partition_value(spark, tmp_path):
     assert sorted(got.select("p", "s").collect()) == sorted(df.collect())
 
 
-def test_route_keys_hash_to_their_task(spark):
-    """Spark's own ``hash()`` sends the i-th route key to task i."""
-    from fsql_spark.maintenance import _route_keys
+def test_packed_tasks_send_each_slot_to_its_task(spark):
+    """The packing takes slots in order into tasks of up to one target: a
+    value of 2.5 targets fills three tasks of its own, two small values
+    share the next and the Hive NULL value, too big to join them, takes the
+    last. ``repartitionById`` lands every row in the task packed for it."""
+    from fsql_spark.maintenance import _packed_tasks
 
-    for n in (1, 2, 7, 64):
-        keys = spark.createDataFrame([(g,) for g in _route_keys(n)], "g int")
-        got = keys.select(F.pmod(F.hash("g"), F.lit(n)).alias("i")).collect()
-        assert [r.i for r in got] == list(range(n))
+    df = spark.createDataFrame(
+        [(v, i) for v, k in [("big", 60), ("s1", 5), ("s2", 5), (None, 10)] for i in range(k)],
+        "v string, i int",
+    )
+    bytes_of = {("big",): 250, ("s1",): 20, ("s2",): 20, (None,): 90}
+    n, task = _packed_tasks(df, ["v"], bytes_of, 100)
+    assert n == 5
+    out = df.repartitionById(n, task)
+    got = out.groupBy(F.spark_partition_id().alias("t"), "v").count().collect()
+    tasks_of: dict = {}
+    for r in got:
+        tasks_of.setdefault(r.v, set()).add(r.t)
+    # each value fills exactly the tasks the packing chose
+    assert tasks_of == {"big": {0, 1, 2}, "s1": {3}, "s2": {3}, None: {4}}
+    # two slots of one value never share a task, and no other value joins them
+    assert sorted(r.t for r in got if r.t < 3) == [0, 1, 2]
+    assert sum(r["count"] for r in got if r.v == "big") == 60
+
+
+def test_compaction_flattens_an_unpartitioned_table(spark, tmp_path):
+    """A table without Hive keys counts as one value: its 6 small files
+    become ceil(total / target) files, rows unchanged."""
+    import os
+
+    from fsql_spark.maintenance import compact, file_stats
+
+    root = str(tmp_path / "t")
+    df = spark.range(20_000).select("id", F.sha2(F.col("id").cast("string"), 256).alias("s"))
+    df.repartition(6).write.parquet(root)
+    [stats] = file_stats(spark, root).collect()
+    assert stats.n_files == 6
+    target = stats.total_bytes // 3 + 1
+    compact(spark, root, target_file_bytes=target)
+    [after] = file_stats(spark, root).collect()
+    assert after.partition == "" and after.n_files == -(-stats.total_bytes // target) == 3
+    assert not [d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))]
+    got = read_partitioned_table(root, Q_TRUE, spark=spark)
+    assert sorted(got.collect()) == sorted(df.collect())
+
+
+def test_compaction_with_no_keys_flattens_a_hive_table(spark, tmp_path):
+    """``partition_by=[]`` writes a keyed table flat: its keys become data
+    columns, the table ceil(total / target) files, rows unchanged."""
+    import os
+
+    from fsql_spark import write_table
+    from fsql_spark.maintenance import compact, file_stats
+
+    root = str(tmp_path / "t")
+    df = spark.range(20_000).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("s"), (F.col("id") % 3).cast("string").alias("p")
+    )
+    write_table(df.repartition(4), root, partition_by=["p"])
+    want = sorted(read_partitioned_table(root, Q_TRUE, spark=spark).collect())
+    total = sum(r.total_bytes for r in file_stats(spark, root).collect())
+    target = total // 2 + 1
+    compact(spark, root, target_file_bytes=target, partition_by=[])
+    assert not [d for d in os.listdir(root) if os.path.isdir(os.path.join(root, d))]
+    [after] = file_stats(spark, root).collect()
+    assert after.n_files == -(-total // target) == 2
+    assert sorted(read_partitioned_table(root, Q_TRUE, spark=spark).collect()) == want
+
+
+def test_compaction_on_one_task_plans_a_single_partition(spark, tmp_path, monkeypatch):
+    """A table far below the target (the benchmark's shape: several ``lang``
+    values) is written from one task with no per-row task lookup."""
+    from fsql_spark import write_table
+    from fsql_spark.maintenance import compact
+
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, ["en", "de", "fr", "ja"][i % 4]) for i in range(200)], "id long, lang string"
+    )
+    write_table(df.repartition(3), root, partition_by=["lang"])
+    plans = []
+    frame = type(df)
+    repartition_by_id = frame.repartitionById
+
+    def recording(self, *args):
+        out = repartition_by_id(self, *args)
+        plans.append(plan_of(out))
+        return out
+
+    monkeypatch.setattr(frame, "repartitionById", recording)
+    compact(spark, root)
+    [plan] = plans
+    assert "SinglePartition" in plan
+    assert "element_at" not in plan and "monotonically_increasing_id" not in plan
+    assert sorted(read_partitioned_table(root, Q_TRUE, spark=spark).collect()) == sorted(
+        df.select("id", "lang").collect()
+    )
 
 
 def test_compaction_keeps_the_hive_layout_by_default(spark, tmp_path):
