@@ -179,14 +179,23 @@ def _verify_jaccard(
     one hash count as one gram, which can move that pair's Jaccard either
     way. At about 2×10^5 distinct grams in one pass, the chance of any
     collision is about 10^-9."""
-    s1 = left.select("k", "sh")
-    s2 = right.select(F.col("k").alias("k2"), F.col("sh").alias("sh2"))
-    cands = cand_keys.join(s1, "k").join(s2, "k2")
-    inter = F.size(F.array_intersect("sh", "sh2"))
-    jac = inter / (F.size("sh") + F.size("sh2") - inter)
+    # both sides keep their column names and are told apart by aliases: in
+    # a within-corpus verify (right is left) the two joins then read one
+    # plan, so AQE builds one broadcast of the shingle sets and the second
+    # join reuses it (ReusedExchange). Renaming one side's columns can
+    # plan a second, distinct broadcast of the same rows.
+    a, b = left.select("k", "sh").alias("_va"), right.select("k", "sh").alias("_vb")
+    cands = (
+        cand_keys.alias("_vc")
+        .join(a, F.col("_vc.k") == F.col("_va.k"))
+        .join(b, F.col("_vc.k2") == F.col("_vb.k"))
+    )
+    sh1, sh2 = F.col("_va.sh"), F.col("_vb.sh")
+    inter = F.size(F.array_intersect(sh1, sh2))
+    jac = inter / (F.size(sh1) + F.size(sh2) - inter)
     return cands.where(jac >= threshold).select(
-        F.col("k").alias(names[0]),
-        F.col("k2").alias(names[1]),
+        F.col("_vc.k").alias(names[0]),
+        F.col("_vc.k2").alias(names[1]),
         F.round(jac, 4).alias("jaccard"),
     )
 
@@ -475,7 +484,7 @@ def _signatures(
     sigs: DataFrame | None,
 ) -> DataFrame:
     """The (k, sig, sh) table one side of an LSH join reads: ``sigs`` when
-    the caller supplies it, else computed from ``df`` and cached."""
+    the caller supplies it, else computed from ``df`` and checkpointed."""
     if sigs is not None:
         _check_sig_format(sigs)
         _check_sig_width(sigs, num_hashes)
@@ -484,15 +493,21 @@ def _signatures(
         # may still carry empty-shingle rows — constant signatures that
         # collide in every band and 0/0 in the verify join
         return sigs.where(F.size("sh") > 0)
-    # persist signatures: both sides of the bucket join (and the verify
-    # step) reuse them instead of recomputing k*|shingles| hashes per
-    # reference. At scale this is a slim table: key + k longs + shingles.
-    sigs = minhash_signatures(df, key_col, text_col, num_hashes, ngram).persist()
-    # materialize before planning the bucket join: AQE submits both band
-    # sides' map stages concurrently and two racing cache-miss scans each
-    # run the full signature kernel (same fix as the phash entry)
-    sigs.count()
-    return sigs
+    # materialize the signatures: both sides of the bucket join and the
+    # verify read them, and recomputing them per reference would rerun the
+    # kernel. A local checkpoint, not a cache: a CacheManager entry would
+    # be matched by the next call over the same table, whose files may
+    # have changed since. The blocks live as long as the returned frame
+    # (the ContextCleaner drops them once the caller's result is
+    # garbage-collected), and they have no lineage, so a lost executor
+    # fails the job instead of recomputing them, as in the clustering and
+    # graph loops.
+    # eager=True builds them in one job before the bucket join is planned:
+    # AQE submits both band sides' map stages at once, and two racing reads
+    # of an unbuilt table would each run the full kernel.
+    return minhash_signatures(df, key_col, text_col, num_hashes, ngram).localCheckpoint(
+        eager=True
+    )
 
 
 def _lsh_pairs(
@@ -555,10 +570,15 @@ def minhash_lsh_pairs(
     :func:`dedup_exact_keys` (one cheap hash-aggregate), which is how a real
     pipeline separates the exact-dup layer from the near-dup layer anyway.
 
-    Cache: without ``sigs`` the call computes the signature table and
-    persists it, and it stays cached in the session after the call returns.
-    The lazy result reads that cache, and the caller gets no handle to
-    unpersist it, so every such call adds one cached table."""
+    Signatures: without ``sigs`` the call computes the signature table in
+    one job and keeps it as a local checkpoint, whose blocks the lazy
+    result reads. It leaves no session cache: a later call over the same
+    table reads its files afresh, so rows another writer added, or files
+    ``compact`` rewrote, are seen. The blocks live as long as the result
+    (and frames derived from it): once the caller drops them, the
+    ContextCleaner removes the blocks. A local checkpoint has no lineage,
+    so losing an executor that holds its blocks fails the job instead of
+    recomputing the signatures."""
     if sigs is None and df is None:
         raise ValueError("pass either df or sigs")
     if collapse_exact and sigs is not None:
@@ -993,10 +1013,11 @@ def minhash_lsh_pairs_against(
 
     Output: (new_key, corpus_key, jaccard).
 
-    Cache: the call persists the signature table it computes for
-    ``df_new``, and for ``corpus`` without ``corpus_sigs``; each stays
-    cached in the session after the call returns. The lazy result reads
-    those caches, and the caller gets no handle to unpersist them."""
+    Signatures: the call computes the signature table of ``df_new``, and
+    of ``corpus`` without ``corpus_sigs``, each in one job kept as a local
+    checkpoint, as :func:`minhash_lsh_pairs` does: no session cache is
+    left, the blocks live as long as the lazy result, and a lost executor
+    fails the job instead of recomputing them."""
     if corpus_sigs is None and corpus is None:
         raise ValueError("pass either corpus or corpus_sigs")
     # the corpus side first: a caller's table is checked before any job
@@ -1085,12 +1106,12 @@ def simhash_pairs(
         df = dedup_exact(df, [text_col], key_col)
     blocks = max_hamming + 1
     block_bits = bits // blocks
-    # persist: the signature expression is heavy (64 bit-majority passes) and
-    # would otherwise be recomputed on both sides of the self-join
+    # checkpoint: the signature expression is heavy (64 bit-majority passes)
+    # and would otherwise be recomputed on both sides of the self-join; a
+    # local checkpoint, not a cache, for the reasons in _signatures
     sigs = _spread(df).select(
         F.col(key_col).alias("k"), simhash(F.col(text_col)).alias("sig")
-    ).persist()
-    sigs.count()  # see minhash_lsh_pairs: un-built caches race under AQE
+    ).localCheckpoint(eager=True)
 
     def block(col: Column, i: int) -> Column:
         return F.shiftrightunsigned(col, i * block_bits).bitwiseAND(F.lit((1 << block_bits) - 1))

@@ -84,11 +84,6 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(col)
 
 
-def normalized_fingerprint(col: Column | str) -> Column:
-    """Fingerprint robust to case/outer whitespace."""
-    return F.md5(F.lower(F.trim(col)))
-
-
 def rolling_fingerprint(col: Column | str) -> Column:
     """64-bit rolling (polynomial/FNV-1a) content hash — the classic
     incremental document fingerprint, computed by the vectorized byte kernel
