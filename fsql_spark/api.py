@@ -15,13 +15,12 @@ PREFIX LOAD (Hive ``key=value`` trees read by a bare or declared
     references, generating the levels the parser generates, and keeps the
     partitions ``eval_all`` accepts. Spark loads them under
     ``basePath=root``, filtered by one ``arrays_overlap`` of the keys with
-    a ``from_json`` literal of the kept partitions' values
-    (:func:`_kept_filter`). The walk binds each
-    name as Spark's partition discovery does, so the two agree on every
-    value. Partition discovery, pruning, predicate/projection pushdown and
-    vectorized scans stay Catalyst/Tungsten built-ins; partition columns
-    bind as strings because ``get_spark``/``configure`` turn type
-    inference off.
+    a literal of the kept partitions' values (:func:`_kept_filter`). The
+    walk binds each name as Spark's partition discovery does, so the two
+    agree on every value. Partition discovery, pruning, predicate and
+    projection pushdown and vectorized scans stay Catalyst/Tungsten
+    built-ins; partition columns bind as strings because
+    ``get_spark``/``configure`` turn type inference off.
 
 DISCOVERY + PATH JOIN (everything else — SURVEY §4.3): value-only
     ``FixedColumnsParser`` layouts with filename columns, bare-name date
@@ -31,14 +30,14 @@ DISCOVERY + PATH JOIN (everything else — SURVEY §4.3): value-only
     dict / fancy-ls). The driver enumerates and prunes partition
     *metadata* exactly like the reference (O(#partitions), threaded
     listing); the data plane stays on executors: ONE distributed
-    ``spark.read`` of the file list per input format, its partition
-    columns bound, in path order, by one broadcast left join on
-    ``input_file_name()`` against a small file -> binding map keyed by
-    Spark's own path strings.
+    ``spark.read`` of the file list per input format, each partition
+    column the lookup of the row's ``_metadata.file_path`` in one map
+    literal keyed by Spark's own path strings. No join is planned.
 
 Either way the one ``load()`` is :meth:`~fsql_spark.readers.SparkReader.scan`,
 which escapes Hadoop's glob characters so that every name reads as itself,
-and a binding replaces a same-named data column.
+the binding is one JSON literal (:func:`~fsql_spark.readers.json_literal`),
+and it replaces a same-named data column.
 
 No transactional guarantees, like the reference (`api.py:33-36`): files deleted
 between discovery and read raise (soften with
@@ -54,7 +53,6 @@ whichever file its index lists first, and it plans without a Spark job.
 from __future__ import annotations
 
 import io
-import json
 import warnings
 from typing import Any, Optional
 from urllib.parse import unquote
@@ -70,7 +68,8 @@ from .discovery import Partition, Walk, discover_partitions, list_level, query_p
 from .formats import InputFormat
 from .fs import FileSystem, get_url_and_fs
 from .queries import Query
-from .readers import DataReader, SparkReader, SPARK_READER, input_files, merges_schema, project_columns, unmatched
+from .readers import DataReader, SparkReader, SPARK_READER, input_files, json_literal, merges_schema, project_columns
+from .readers import unmatched
 from .session import get_spark
 
 _TYPE_INFERENCE = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -81,8 +80,8 @@ _PROBE_DEPTH = 64
 # load() conditions meaning "not one Hive layout" (e.g. the mixed-depth quirk,
 # reference `column_parser.py:106-110`): driver discovery reads such trees
 _NOT_ONE_LAYOUT = {"CONFLICTING_PARTITION_COLUMN_NAMES", "CONFLICTING_DIRECTORY_STRUCTURES"}
-# the Java cause of load()'s INTERNAL_ERROR on a "k=" or "=v" directory,
-# which the path join binds as ""
+# the Java cause of load()'s INTERNAL_ERROR on a "k=" or "=v" directory;
+# the path join binds such a name as ""
 _EMPTY_NAME = "Empty partition column"
 
 
@@ -233,16 +232,14 @@ def _first_leaf(fs: FileSystem, walk: Walk) -> tuple[Optional[str], list[str]]:
 
 
 def _kept_filter(walk: Walk) -> Column:
-    """Exactly the kept partitions: one JSON literal of their values, which
-    holds any value Spark binds ("/", "\\" and None included), parsed on
-    the JVM. Spark folds it and prunes partitions with it; Column.isin
-    makes a py4j call per value (~0.2 s for 90). The keys come first, so
-    a plan string cut at ``spark.sql.maxMetadataStringLength`` still names
-    them."""
+    """Exactly the kept partitions: one literal of their values, "/", "\\"
+    and None included (:func:`~fsql_spark.readers.json_literal`), which
+    Spark prunes partitions with. The keys come first, so a plan string
+    cut at ``spark.sql.maxMetadataStringLength`` still names them."""
     if not walk.keys:
         return F.lit(True)
-    kept = json.dumps([[p.columns[k] for k in walk.keys] for p in walk.kept])
-    return F.arrays_overlap(F.array(F.array(*walk.keys)), F.from_json(F.lit(kept), "array<array<string>>"))
+    kept = [[p.columns[k] for k in walk.keys] for p in walk.kept]
+    return F.arrays_overlap(F.array(F.array(*walk.keys)), json_literal(kept, "array<array<string>>"))
 
 
 def _format_of(url: str) -> Optional[InputFormat]:
@@ -276,7 +273,7 @@ def _load_prefixes(
 ) -> Optional[DataFrame]:
     """The Spark load (:meth:`SparkReader.scan`): ``prefixes`` under
     ``basePath=path``, filtered by ``where``, partition columns last in
-    path order (a same-named data column gives way, as in the path join),
+    path order (a same-named data column gives way, as on the path join),
     then the ``columns=`` projection. The data columns of a parquet read
     come from ``probe_file``'s footer. Returns None when Spark finds more
     than one layout or an empty name, when a loaded file of an
@@ -295,7 +292,7 @@ def _load_prefixes(
         return None
 
     # inputFiles() is metadata-only. The format came from the probe file;
-    # a tree mixing data formats (csv+json, which the path join reads per
+    # a tree mixing data formats (csv+json, which the path join scans per
     # format like the reference) would be parsed entirely as ``fmt``;
     # from_url resolves compression suffixes (.json.gz) as the probe did
     # (regression-tested in test_jsongz_scan_prunes_partitions)
@@ -311,7 +308,7 @@ def _load_prefixes(
 
     schema = df.schema
     # Spark types a key void when every loaded value of it is NULL; the
-    # path join binds it as a string
+    # path join's map literal binds it as a string
     void = {k for k in keys if isinstance(schema[k].dataType, NullType)}
     if schema.names[len(schema.names) - len(keys):] != keys or void:
         keyed = [F.col(k).cast("string").alias(k) if k in void else k for k in keys]

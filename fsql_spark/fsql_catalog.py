@@ -65,7 +65,8 @@ _TREE_ROOT = "/tmp/fsql_spark_trees"
 def _tree_dir(sf_dir: str, layout: str, source_table: str) -> str:
     """Cache key includes a fingerprint of the SOURCE parquet (mtime+size):
     regenerated testdata gets a fresh tree instead of silently reusing a
-    stale one that would diverge from the oracle's flat view."""
+    stale one that would diverge from the oracle's flat view.
+    :func:`_build_once` adds the fingerprint of the writing code."""
     import hashlib
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
@@ -81,13 +82,29 @@ def _ready(dest: str) -> str:
     return os.path.join(dest, "_FSQL_READY")
 
 
+def _code_fingerprint(build) -> str:
+    """md5 of the source of ``build`` and of the library code that writes
+    the trees: a change to either rebuilds a tree instead of serving the
+    old code's output to the gate."""
+    import hashlib
+    import inspect
+
+    from . import api, maintenance
+
+    writers = [api.write_table, api.write_object, api.write_sorted_table, api.write_zorder_table, api.zorder_key]
+    source = "".join(inspect.getsource(w) for w in [*writers, maintenance, build])
+    return hashlib.md5(source.encode()).hexdigest()[:8]
+
+
 def _build_once(dest: str, build) -> str:
-    """Build into a unique staging dir, then atomically rename into place —
-    concurrent first builds (pytest + bench) each stage privately and the
-    rename loser simply adopts the winner's tree."""
+    """Build ``dest``, suffixed with :func:`_code_fingerprint`, into a
+    unique staging dir, then atomically rename into place — concurrent
+    first builds (pytest + bench) each stage privately and the rename
+    loser simply adopts the winner's tree."""
     import shutil
     import uuid
 
+    dest = f"{dest}_{_code_fingerprint(build)}"
     if os.path.exists(_ready(dest)):
         return dest
     staging = f"{dest}.staging_{uuid.uuid4().hex[:8]}"

@@ -5,8 +5,8 @@ Mirrors the reference's pluggable ``DataReader`` polymorphism
 
 - :class:`SparkReader` — THE scale path. Its ``read`` is one distributed
   ``spark.read`` over all surviving files per input format; partition
-  columns bound by one broadcast left join on ``input_file_name()`` against
-  a file -> binding map. ``read_partitioned_table`` skips ``read`` for a
+  columns looked up by each row's ``_metadata.file_path`` in one map
+  literal of file -> values. ``read_partitioned_table`` skips ``read`` for a
   Hive-layout read (no ``lazy_errors``, inference off): it loads the
   directories its walk kept under ``basePath`` instead
   (``api._load_prefixes``), so Spark lists directories, not one path per
@@ -40,13 +40,14 @@ from __future__ import annotations
 import functools
 import io
 import json
+import re
 from abc import ABC, abstractmethod
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Collection, Optional
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -125,6 +126,19 @@ def input_files(df: DataFrame) -> list[str]:
     jvm = df.sparkSession._jvm
     joined = jvm.scala.collection.mutable.ArraySeq.make(df._jdf.inputFiles()).mkString("\0")
     return joined.split("\0") if joined else []
+
+
+def metadata_path(url: str) -> str:
+    """An ``input_files`` URL as ``_metadata.file_path`` prints it: only an
+    empty authority differs (``file:///x`` is ``file:/x``)."""
+    return re.sub(r"^([A-Za-z][A-Za-z0-9+.-]*):///", r"\1:/", url, count=1)
+
+
+def json_literal(value: Any, ddl: str) -> Column:
+    """``value`` as one Spark constant of type ``ddl``, parsed from its JSON
+    by ``from_json``, which Spark folds: any string and None survive, in one
+    py4j call whatever the size (``F.lit``, ``Column.isin``: one per element)."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
 
 
 # parquet/orc readers union every file's schema when this (or the mergeSchema
@@ -353,44 +367,31 @@ class SparkReader(DataReader):
     def _load_format(
         self, spark: SparkSession, group: list[Partition], fs: FileSystem, fmt: InputFormat
     ) -> DataFrame:
-        """ONE scan over the group's files, then partition columns bound by a
-        broadcast left join on ``input_file_name()``. The data columns of
-        a parquet read come from the group's first file (:meth:`scan`).
-
-        The map is keyed by Spark's own path strings (``df.inputFiles()``,
-        the same form ``input_file_name()`` returns); each is unquoted only
-        to look up the file's bindings, so no encoding is re-implemented
-        here. Keys follow path order, the insertion order of
-        ``Partition.columns``, as on the fast path. A same-named data column
-        is dropped: the path binding wins.
-        """
-        import pyarrow as pa
-
+        """ONE scan over the group's files (a parquet read takes its data
+        columns from the first, :meth:`scan`); each partition column, last
+        in path order, is the row's ``_metadata.file_path`` looked up in one
+        map literal (:func:`json_literal`) of file -> values, None where the
+        path lacks the key. Its keys are Spark's own path strings
+        (:func:`input_files` in :func:`metadata_path`'s form), unquoted only
+        to find each file's bindings; a row whose file has none fails the
+        query. A same-named data column is dropped. Catalyst prunes files on
+        a key filter and pushes data filters to the scan, but every task
+        carries the literal and scans it per row: a used key costs about
+        rows x files (PERF.md, Round 19)."""
         by_url = {fs.spark_url(p.url): p.columns for p in group}
         keys = list(dict.fromkeys(k for p in group for k in p.columns))
         df = self.scan(spark, fs, fmt, [p.url for p in group], group[0].url, keys)
         if not keys:
             return df
 
-        files = input_files(df)
         try:
-            bindings = [by_url[unquote(f)] for f in files]
+            bindings = {metadata_path(f): [by_url[unquote(f)].get(k) for k in keys] for f in input_files(df)}
         except KeyError as exc:
             raise unmatched(fs, exc.args[0]) from exc
-        mapping = spark.createDataFrame(
-            pa.table(
-                {
-                    "__fsql_path": pa.array(files, pa.string()),
-                    **{k: pa.array([b.get(k) for b in bindings], pa.string()) for k in keys},
-                }
-            )
-        )
-        return (
-            df.drop(*keys)
-            .withColumn("__fsql_path", F.input_file_name())
-            .join(F.broadcast(mapping), "__fsql_path", "left")
-            .drop("__fsql_path")
-        )
+        path = df.metadataColumn("_metadata").getField("file_path")
+        miss = F.raise_error(F.concat(F.lit("no partition binding for scanned file "), path))
+        values = F.coalesce(F.element_at(json_literal(bindings, "map<string,array<string>>"), path), miss)
+        return df.drop(*keys).select("*", *[values[i].alias(k) for i, k in enumerate(keys)])
 
     def _validate(
         self, parts: list[Partition], fs: FileSystem, fmt: InputFormat

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 from fsql_spark import get_spark
+from fsql_spark.readers import SparkReader
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -17,6 +18,20 @@ def spark():
     s = get_spark(app_name="fsql-spark-tests", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture()
+def join_calls(monkeypatch):
+    """How often the read took the path join (``SparkReader._load_format``)."""
+    calls = []
+    load_format = SparkReader._load_format
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return load_format(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkReader, "_load_format", spy)
+    return calls
 
 
 # the reference's recurring example frames (`tests/test_example_usage.py:10-12`)

@@ -2,7 +2,7 @@
 Spark as directories under ``basePath`` plus an exact filter on the
 partition columns, not as one path per file.
 
-The property test pins the answer to the broadcast path join
+The property test pins the answer to the path join's map-literal lookup
 (``SparkReader.read`` over the same discovered partitions): same rows,
 same column order, same dtypes, with both the leaf-prefix and the
 ancestor-prefix branch taken. The other tests pin that planning starts no
@@ -103,20 +103,6 @@ def _declared(rng, leaves):
 
     spec = f"year=[{some(year, [l[0] for l in leaves])}]/month=[{some(month, [l[1] for l in leaves])}]/day"
     return Q_TRUE, AutoParser.from_str(spec)
-
-
-@pytest.fixture()
-def join_calls(monkeypatch):
-    """How often the read took the broadcast path join."""
-    calls = []
-    load_format = SparkReader._load_format
-
-    def spy(self, *args, **kwargs):
-        calls.append(1)
-        return load_format(self, *args, **kwargs)
-
-    monkeypatch.setattr(SparkReader, "_load_format", spy)
-    return calls
 
 
 def test_prefix_load_equals_path_join(spark, tmp_path, join_calls):

@@ -349,7 +349,8 @@ def test_threads_share_one_session(spark, tmp_path, monkeypatch, inference):
 
 
 def _read_atomic(spark, root):
-    # AtomicQuery forces the driver-discovery path: one scan + path join
+    # a Hive tree: the walk judges each k=... directory with the AtomicQuery
+    # and the prefix load binds k
     from fsql_spark.queries import AtomicQuery
 
     return read_partitioned_table(
@@ -358,17 +359,24 @@ def _read_atomic(spark, root):
 
 
 @pytest.mark.parametrize("n", [3, 11])
-def test_broadcast_path_join_handles_spaces(spark, tmp_path, n):
+def test_path_join_handles_spaces(spark, tmp_path, join_calls, n):
     """Partition values with a space, '+', '%', '#' and a non-ASCII letter
-    must bind, with no NULL partition columns, whatever the binding count."""
+    must bind, with no NULL partition columns, whatever the binding count:
+    a value-only tree takes the path join, which looks each file up in one
+    map literal, with no join in the plan."""
     import pandas as pd
+
+    from fsql_spark.column_parser import FixedColumnsParser
 
     root = tmp_path / "spacey"
     for i in range(n):
-        d = root / f"k=v {i} +q%#ü"
+        d = root / f"v {i} +q%#ü"
         d.mkdir(parents=True)
         pd.DataFrame({"x": [i]}).to_csv(d / "f.csv", index=False)
-    out = _read_atomic(spark, root)
+    df = read_partitioned_table(str(root), Q_TRUE, column_parser=FixedColumnsParser.from_str("k/fname"), spark=spark)
+    out = df.toPandas()
+    assert join_calls
+    assert "Join" not in df._jdf.queryExecution().executedPlan().toString()
     assert len(out) == n
     assert out["k"].notna().all()
     assert set(out["k"]) == {f"v {i} +q%#ü" for i in range(n)}

@@ -4,7 +4,7 @@ Hadoop globs every path handed to ``DataFrameReader.load()``: unescaped,
 ``k=[x]`` would load ``k=x`` and ``y{1,2}`` would load ``y1`` and ``y2``.
 ``SparkReader.scan`` escapes each loaded path, so the prefix load (expressible
 and exact walks, a generated level, the typed empty result) and the
-broadcast path join read glob-named directories, files and table roots,
+path join's file list read glob-named directories, files and table roots,
 and load only what the query keeps."""
 
 from __future__ import annotations

@@ -1,7 +1,8 @@
 """The one walk of a Hive read (``discovery.query_prefixes``) serves
 inexpressible queries and generated levels too: it lists only what it
 keeps, checks only the generated prefixes it loads, and answers as the
-broadcast path join does over the same discovered partitions. Empty
+path join (the map-literal lookup of each row's file) does over the same
+discovered partitions. Empty
 partition values and an empty leading directory no longer send reads to
 driver discovery."""
 

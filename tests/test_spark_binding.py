@@ -1,7 +1,7 @@
 """Every read binds a ``key=value`` name as Spark's partition discovery
 does (``column_parser.hive_binding``): each ``%XX`` with two hex digits is
 the character with that code, and ``__HIVE_DEFAULT_PARTITION__`` is None.
-The prefix load, the broadcast path join, ``PandasReader``,
+The prefix load, the path join's map-literal lookup, ``PandasReader``,
 ``ListingReader``, an ``AtomicQuery``'s function and ``drop_partitions``
 thus all see the values ``spark.read.load(root)`` returns."""
 
